@@ -306,13 +306,6 @@ object Bench {
     // first entry's wall time)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // SPARK_GRAFT_ONLY=d2,q1 runs a comma-separated subset (local
-    // iteration; SparkEntry.keyMatcher is the shared rule — exact key
-    // or prefix up to an underscore, so "t1" never selects t10..t18).
-    val selectedKey: String => Boolean =
-      sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.keyMatcher)
-        .getOrElse(_ => true)
-    val selected = SparkEntry.queries.filter(e => selectedKey(e._1))
     // Guard anchor: per-query MIN across the committed historical
     // baseline (BENCH_BASELINE.json) AND the prior record at this
     // run's own output path, read BEFORE this run overwrites it (the
@@ -409,7 +402,10 @@ object Bench {
       }
     val canaryStartMs = System.currentTimeMillis()
     val canaryStart = runCanary("start")
-    val measured = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // SPARK_GRAFT_ONLY=d2,q1 runs a comma-separated subset (local
+    // iteration; SparkEntry.selected holds the shared rule)
+    val measured = SparkEntry.selected.sortBy(_.name).map { q =>
+      val (name, fn) = (q.name, q.run _)
       val startedMs = System.currentTimeMillis()
       val runs = (1 to reps).map(_ => oneRun(name, fn))
       // outlier guard: a min-of-reps far above the historical baseline

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+/** Driver-run correctness dump: each selected query's result → parquet,
+  * plus oracle_sql.json for the driver's DuckDB compare and
+  * failures.json (key → error) for the queries that threw. Exits 1 when
+  * any query failed.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -21,40 +25,36 @@ object Verify {
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=t24,s7 dumps a comma-separated subset (local
-    // iteration; SparkEntry.keyMatcher is the shared rule). The oracle
-    // json is filtered to match so a subset compare doesn't report
-    // missing dirs.
-    val selectedKey: String => Boolean =
-      sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.keyMatcher)
-        .getOrElse(_ => true)
-    SparkEntry.queries.filter(e => selectedKey(e._1)).foreach {
-      case (name, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // SPARK_GRAFT_ONLY=t24,s7 dumps a subset (SparkEntry.selected); the
+    // oracle json holds the same subset so a subset compare doesn't
+    // report missing dirs.
+    val failures = SparkEntry.selected.flatMap { q =>
+      val failure =
+        try {
+          q.run(spark, sfDir).write.mode("overwrite")
+            .parquet(s"$outDir/${q.name}")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] ${q.name} failed: $e")
+          Some(q.name -> e.toString)
+        }
       // free this query's materialize-once pins (see Bench)
       graft.std.Materialize.releaseAll()
+      failure
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => selectedKey(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = new ObjectMapper()
+    def writeJson(file: String, entries: Map[String, String]): Unit =
+      json.writeValue(new java.io.File(s"$outDir/$file"),
+        new java.util.TreeMap[String, String](entries.asJava))
+    writeJson("oracle_sql.json", SparkEntry.sqlOf(SparkEntry.selected))
+    writeJson("failures.json", failures.toMap)
     // free the session memos (see graft.std.SessionMemo) before stop
     graft.std.SessionMemo.releaseSession(spark)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} queries failed: " +
+        s"see $outDir/failures.json")
+      sys.exit(1)
+    }
   }
 }

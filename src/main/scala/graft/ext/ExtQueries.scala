@@ -56,7 +56,6 @@ object ExtQueries {
   // ---- dedup ----
 
   def exactDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Dedup.exactGroups(exactDupCorpus(Tables.documents(spark, sfDir)))
   }
 
@@ -67,7 +66,6 @@ object ExtQueries {
     * (the d1 corpus trick, source-rotated). See [[Dedup.sourceOverlap]].
     */
   def sourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("source"))
     val mirrored = docs.filter(col("doc_id") % 5 === 0)
@@ -102,7 +100,6 @@ object ExtQueries {
     * [[graft.std.Materialize]]).
     */
   def minHashLshPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val corpus = nearDupCorpus(Tables.documents(spark, sfDir))
     val withSh = graft.std.Materialize.once(
       shingled(corpus, split(col("text"), " ")))
@@ -165,7 +162,6 @@ object ExtQueries {
     * (session, sfDir); release via [[releaseMemos]].
     */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     sharedClusters(spark, sfDir)
   }
 
@@ -180,7 +176,6 @@ object ExtQueries {
     * (session, sfDir); release via [[releaseMemos]].
     */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Dedup.leakageSafeSplit(sharedClusters(spark, sfDir))
   }
 
@@ -195,7 +190,6 @@ object ExtQueries {
     * (session, sfDir); release via [[releaseMemos]].
     */
   def dedupSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val keepers = sharedClusters(spark, sfDir)
       .filter(col("is_keeper")).select("doc_id")
     nearDupCorpus(Tables.documents(spark, sfDir))
@@ -211,7 +205,6 @@ object ExtQueries {
     * (session, sfDir); release via [[releaseMemos]].
     */
   def dedupDropped(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val keepers = sharedClusters(spark, sfDir)
       .filter(col("is_keeper")).select("doc_id")
     nearDupCorpus(Tables.documents(spark, sfDir))
@@ -235,7 +228,6 @@ object ExtQueries {
     * (session, sfDir); release via [[releaseMemos]].
     */
   def bestKeeperClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val corpus = nearDupCorpus(Tables.documents(spark, sfDir))
     val scored = TextOps.attrBarrier(corpus, Seq("doc_id", "text"),
         "_toks", TextOps.tokens(col("text")))
@@ -287,7 +279,6 @@ object ExtQueries {
     * the first call; see [[graft.std.SessionMemo]].
     */
   def decontamination(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     sharedContaminationProfile(spark, sfDir)
   }
 
@@ -300,7 +291,6 @@ object ExtQueries {
     * reproduced bit-for-bit by the DuckDB twin.
     */
   def bloomDecontamination(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val withSh = graft.std.Materialize.once(
       shingled(Tables.documents(spark, sfDir), TextOps.tokens(col("text"))))
     Dedup.bloomContaminationProfile(
@@ -317,7 +307,6 @@ object ExtQueries {
     */
   def ngramDecontamination(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val base = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val bench = base.filter(col("doc_id") % 31 === 0)
@@ -342,7 +331,6 @@ object ExtQueries {
     * Every batch doc gets a status: exact_dup / near_dup / new.
     */
   def incrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val base = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextOps.normText(col("text")).as("text"))
     val existing = base.filter(col("doc_id") % 3 === 0)
@@ -364,7 +352,6 @@ object ExtQueries {
     * with `|A∩B|/|A|` (and mirror) instead of Jaccard.
     */
   def containmentDups(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val base = nearDupCorpus(Tables.documents(spark, sfDir))
     val toks = split(col("text"), " ")
     val corpus = base.unionByName(
@@ -388,7 +375,6 @@ object ExtQueries {
     * injected chrome.
     */
   def boilerplateNgrams(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     val withBp = spread(docs.select(col("doc_id"), col("source"),
       when(col("doc_id") % 2 === 0,
@@ -402,7 +388,6 @@ object ExtQueries {
     * language to 20%, keep 60% of the rest.
     */
   def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.stratifiedContentSample(Tables.documents(spark, sfDir),
       Map("en" -> 20), defaultPct = 60)
   }
@@ -411,14 +396,12 @@ object ExtQueries {
     * twin-shared [[TextAnalysis.DomainQuotaN]].
     */
   def domainQuota(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.domainQuota(Tables.documents(spark, sfDir),
       TextAnalysis.DomainQuotaN)
   }
 
   /** Deterministic sharded training order (t22): 2 epochs × 8 shards. */
   def trainOrder(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.trainOrder(Tables.documents(spark, sfDir))
   }
 
@@ -433,7 +416,6 @@ object ExtQueries {
     * merge an id equi-join.
     */
   def contaminationSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     // d8's profile, memoized — t23 re-ran the full shingle+broadcast
     // pass d8 had just finished (9.1 s of r7's bench was this rebuild)
@@ -450,12 +432,10 @@ object ExtQueries {
 
   /** Deterministic domain mixing summary (t18). */
   def domainMixture(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.domainMixture(Tables.documents(spark, sfDir))
   }
 
   def simHashFingerprints(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Dedup.simHash32Agg(
       spread(nearDupCorpus(Tables.documents(spark, sfDir)))
         .select(col("doc_id"), split(col("text"), " ").as("toks")))
@@ -465,7 +445,6 @@ object ExtQueries {
     * Jaccard and SimHash Hamming distance — the kernel check.
     */
   def jaccardGroundTruth(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val corpus = nearDupCorpus(Tables.documents(spark, sfDir))
     val withSh = shingled(corpus, split(col("text"), " "))
     val fps = Dedup.simHash32Agg(
@@ -485,7 +464,6 @@ object ExtQueries {
   // ---- text analysis ----
 
   def tokenStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.tokenStats(spread(Tables.documents(spark, sfDir)))
       .select(col("doc_id"), col("n_tokens").cast("long"),
         col("n_uniq_tokens").cast("long"), col("avg_token_len"),
@@ -493,18 +471,15 @@ object ExtQueries {
   }
 
   def langStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.langStats(Tables.documents(spark, sfDir))
   }
 
   def qualityScores(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.qualityScore(Tables.documents(spark, sfDir))
       .withColumn("n_tokens", col("n_tokens").cast("long"))
   }
 
   def langId(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     val toks = TextOps.tokens(col("text"))
     docs.select(
@@ -515,7 +490,6 @@ object ExtQueries {
   }
 
   def fingerprints(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.fingerprints(spread(Tables.documents(spark, sfDir)))
   }
 
@@ -523,7 +497,6 @@ object ExtQueries {
     * the pre-tokenizer shape of byte-pair encoders, as pure regex counts.
     */
   def bpeTokenCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val t = col("text")
     Tables.documents(spark, sfDir).select(
       col("doc_id"),
@@ -539,7 +512,6 @@ object ExtQueries {
   // ---- similarity ----
 
   def cosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.bruteForceTopK(vecs.filter(col("vec_id") < 20), vecs, 5)
       .select(col("query_id"), col("neighbor_id"),
@@ -552,7 +524,6 @@ object ExtQueries {
     * before/after.
     */
   def anisotropyRemoval(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.anisotropyRemovalReport(Tables.embeddings(spark, sfDir),
       iters = 6)
   }
@@ -564,7 +535,6 @@ object ExtQueries {
     * knob; determinism holds at any depth).
     */
   def allButTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.allButTopK(Tables.embeddings(spark, sfDir),
       k = 3, varShareStop = 0.15, iters = 4)
   }
@@ -575,7 +545,6 @@ object ExtQueries {
     * health gate next to s21's anisotropy.
     */
   def hubness(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.hubness(vecs.filter(col("vec_id") < 100), vecs, 5)
   }
@@ -585,7 +554,6 @@ object ExtQueries {
     * greedy λ = 0.7 rounds trading relevance against redundancy.
     */
   def mmrRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.mmrRerank(vecs.filter(col("vec_id") < 20), vecs,
       k = 5, n = 20)
@@ -595,7 +563,6 @@ object ExtQueries {
     * product — magnitude-sensitive retrieval.
     */
   def mipsTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.mipsTopK(vecs.filter(col("vec_id") < 20), vecs, 5)
   }
@@ -605,13 +572,11 @@ object ExtQueries {
     * 8 bytes/vector, integer-exact ranking.
     */
   def hammingTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.hammingTopK(vecs.filter(col("vec_id") < 20), vecs, 5)
   }
 
   def embeddingNearDups(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.nearDupPairs(
       nearDupVectors(Tables.embeddings(spark, sfDir)), 0.97)
   }
@@ -642,7 +607,6 @@ object ExtQueries {
           dims = Some(64))))
 
   def lshEmbeddingNearDups(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     sharedLshPairs(spark, sfDir)
   }
 
@@ -658,7 +622,6 @@ object ExtQueries {
     * with the monotone-sum convergence check.
     */
   def semanticClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = nearDupVectors(Tables.embeddings(spark, sfDir))
     val pairs = sharedLshPairs(spark, sfDir).select(col("id_a"), col("id_b"))
     Dedup.connectedComponents(vecs.select(col("vec_id")), pairs,
@@ -669,7 +632,6 @@ object ExtQueries {
 
   /** Int8-quantized embeddings in long form (s5). */
   def quantizedVectors(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.quantizeInt8(Tables.embeddings(spark, sfDir))
   }
 
@@ -681,7 +643,6 @@ object ExtQueries {
     */
   def incrementalEmbeddingDedup(
       spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val all = nearDupVectors(Tables.embeddings(spark, sfDir))
     Similarity.incrementalEmbeddingDedup(
       all.filter(col("vec_id") % 3 =!= 0),
@@ -692,7 +653,6 @@ object ExtQueries {
     * both engines assign every doc identically.
     */
   def trainTestSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.trainTestSplit(Tables.documents(spark, sfDir))
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"))
@@ -706,7 +666,6 @@ object ExtQueries {
     * nfc_normalize.
     */
   def nfcFingerprints(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val n = org.apache.spark.sql.GraftColumns.nfc(col("text"))
     Tables.documents(spark, sfDir).select(
       col("doc_id"),
@@ -718,7 +677,6 @@ object ExtQueries {
     * hashes per document.
     */
   def winnowingSketch(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     // serialized as a comma-joined string: scalar columns keep the
     // cross-engine compare independent of array-normalization details
     TextAnalysis.winnowingSketchAgg(spread(Tables.documents(spark, sfDir)))
@@ -730,7 +688,6 @@ object ExtQueries {
     * 30-minute window, keyed on user.
     */
   def rangeJoinAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TemporalJoins.purchaseAttribution(Tables.events(spark, sfDir))
   }
 
@@ -738,7 +695,6 @@ object ExtQueries {
     * preceding signup.
     */
   def asOfJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TemporalJoins.asOfLast(Tables.events(spark, sfDir))
   }
 
@@ -755,7 +711,6 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def saltedRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     // project to the salt discriminators + key + value BEFORE salting:
     // hashing the whole enriched schema referenced all ~40 columns and
     // held the scan unpruned (5s vs q1's 1.7s on the same aggregate)
@@ -781,7 +736,6 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def rollupSales(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.queries.Merged.cleanedShared(spark, sfDir)
       .rollup(col("fin_month_label"), col("region_desc"), col("brand_desc"))
       .agg(round(sum("total_line_price"), 2).as("revenue"),
@@ -805,7 +759,6 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def movingAvgRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import org.apache.spark.sql.expressions.Window
     // pinned: daily feeds the real rows, the carry rows, and the guard
     val daily = graft.std.Materialize.once(
@@ -866,19 +819,16 @@ object ExtQueries {
 
   /** Corpus vocabulary head (t13): top-50 tokens. */
   def topTokens(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.topTokens(Tables.documents(spark, sfDir))
   }
 
   /** TF-IDF-style top terms per doc (t14). */
   def tfIdfTerms(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.tfIdfTopTerms(Tables.documents(spark, sfDir))
   }
 
   /** PII scrubbing over the injected corpus (t15). */
   def piiScrub(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.piiScrub(piiCorpus(Tables.documents(spark, sfDir)))
   }
 
@@ -917,25 +867,21 @@ object ExtQueries {
 
   /** Credit-card audit over the injected corpus (t64). */
   def ccAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.ccAudit(ccCorpus(Tables.documents(spark, sfDir)))
   }
 
   /** Extended PII redaction over the injected corpus (t34). */
   def piiRedact(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.piiRedact(piiCorpusExt(Tables.documents(spark, sfDir)))
   }
 
   /** Gopher-rule quality gate (t35). */
   def gopherRules(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.gopherRules(Tables.documents(spark, sfDir))
   }
 
   /** Per-source corpus report card over the injected corpus (t39). */
   def sourceReport(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.sourceReport(piiCorpusExt(Tables.documents(spark, sfDir)))
   }
 
@@ -955,13 +901,11 @@ object ExtQueries {
 
   /** Per-domain analytics over the injected URL corpus (t40). */
   def domainStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Web.domainStats(urlCorpus(Tables.documents(spark, sfDir)))
   }
 
   /** Domain-blocklist filtering over the injected URL corpus (t41). */
   def blocklistFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import spark.implicits._
     Web.blocklistFilter(urlCorpus(Tables.documents(spark, sfDir)),
       BlockedDomains.toDF("domain"))
@@ -969,7 +913,6 @@ object ExtQueries {
 
   /** Per-source fractional quality budget (t43). */
   def qualityBudget(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.qualityBudget(Tables.documents(spark, sfDir))
   }
 
@@ -978,7 +921,6 @@ object ExtQueries {
     * × blocklist, one verdict row per doc.
     */
   def curationPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Curation.curate(
       exactDupCorpus(urlCorpus(Tables.documents(spark, sfDir))),
       BlockedDomains)
@@ -1003,14 +945,12 @@ object ExtQueries {
 
   /** Snapshot diff between the corpus and its next crawl (t37). */
   def corpusDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     Dedup.snapshotDiff(docs, corpusV2(docs))
   }
 
   /** Severity of the t37 changes (t38): revised vs rewritten. */
   def diffSeverity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     Dedup.diffSeverity(docs, corpusV2(docs))
   }
@@ -1024,7 +964,6 @@ object ExtQueries {
     * mirrors the shared fold semantics.
     */
   def bpeEncode(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Bpe.encodeDocsPartitioned(spread(Tables.documents(spark, sfDir)),
       Bpe.DemoMerges)
   }
@@ -1040,7 +979,6 @@ object ExtQueries {
     * would catch it regardless).
     */
   def bpeTrainedEncode(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import spark.implicits._
     val learned = Bpe.trainMergesLocal(
       Bpe.TrainWords.toDF("text"), Bpe.TrainedMerges.size)
@@ -1057,20 +995,17 @@ object ExtQueries {
     * [[Bpe.fertilityByLang]]).
     */
   def bpeFertility(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Bpe.fertilityByLang(spread(Tables.documents(spark, sfDir)),
       Bpe.DemoMerges)
   }
 
   /** Per-language quality-gate pass rates (t17). */
   def qualityGate(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.qualityGate(Tables.documents(spark, sfDir))
   }
 
   /** Repetition/boilerplate profile (t16). */
   def repetitionStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.repetitionStats(spread(Tables.documents(spark, sfDir)))
   }
 
@@ -1082,7 +1017,6 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def pivotRegions(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.queries.BiQueries.revenuePivotByRegion(
       graft.queries.Merged.cleanedShared(spark, sfDir))
   }
@@ -1095,32 +1029,27 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def unpivotRegions(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.queries.BiQueries.revenueUnpivotByRegion(
       graft.queries.Merged.cleanedShared(spark, sfDir))
   }
 
   /** Exact length percentiles per language (t10). */
   def charPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.charPercentiles(Tables.documents(spark, sfDir))
   }
 
   /** Fixed-width overlapping character chunks (t11). */
   def docChunks(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.chunkDocs(Tables.documents(spark, sfDir))
   }
 
   /** Token-budget sequence packing summary (t12). */
   def sequencePacking(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.sequencePacking(Tables.documents(spark, sfDir))
   }
 
   /** Per-language embedding centroids in long form (s3). */
   def langCentroids(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.langCentroids(Tables.documents(spark, sfDir),
       Tables.embeddings(spark, sfDir))
   }
@@ -1129,7 +1058,6 @@ object ExtQueries {
     * warehouse runs before trusting a load.
     */
   def columnProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val o = Tables.orders(spark, sfDir)
     Validation.columnProfile(o, o.columns.toSeq)
   }
@@ -1138,7 +1066,6 @@ object ExtQueries {
     * document/embedding pairing (v2).
     */
   def refIntegrity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import Validation.FkCheck
     val li = Tables.lineitem(spark, sfDir)
     Validation.refIntegrity(Seq(
@@ -1158,7 +1085,6 @@ object ExtQueries {
     * keys plus the composite lineitem key.
     */
   def keyUniqueness(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import Validation.KeyCheck
     Validation.keyUniqueness(Seq(
       KeyCheck("orders_pk", Tables.orders(spark, sfDir), Seq("o_orderkey")),
@@ -1176,7 +1102,6 @@ object ExtQueries {
     * violates its range check, a NULL ship date violates presence.
     */
   def constraintAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     def viol(pred: Column): Column = coalesce(!pred, lit(true))
     Validation.constraintAudit(Tables.lineitem(spark, sfDir), Seq(
       "qty_positive" -> viol(col("l_quantity") > 0),
@@ -1194,7 +1119,6 @@ object ExtQueries {
     * the x1 salting device.
     */
   def keySkew(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.keySkew(Tables.events(spark, sfDir), "user_id", topN = 20)
   }
 
@@ -1203,7 +1127,6 @@ object ExtQueries {
     * re-identifiable slices a release gate must empty.
     */
   def kAnonymity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.kAnonymity(Tables.customer(spark, sfDir),
       Seq("c_nationkey", "c_mktsegment"), k = 10)
   }
@@ -1215,7 +1138,6 @@ object ExtQueries {
     * the driver records the rows-only check.
     */
   def compressionStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.compressionStats(spread(Tables.documents(spark, sfDir)))
   }
 
@@ -1227,7 +1149,6 @@ object ExtQueries {
     * hash-mismatch — the completeness proof rides in the gate itself.
     */
   def fuzzyLinkage(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val part = Tables.part(spark, sfDir)
     val probes = part.filter(col("p_partkey") % 5 === 0)
       .select(col("p_partkey").as("probe_id"),
@@ -1247,7 +1168,6 @@ object ExtQueries {
     * and first-fetch-wins keeps the minimum doc_id.
     */
   def urlDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val url = concat(
       when(col("doc_id") % 4 === 0, lit("https://WWW.Example.COM:443"))
         .otherwise(lit("https://www.example.com")),
@@ -1268,7 +1188,6 @@ object ExtQueries {
     * (no false negatives; false positives die in the real join).
     */
   def bloomJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val dim = Tables.customer(spark, sfDir)
       .filter(col("c_nationkey") === 1)
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -1291,7 +1210,6 @@ object ExtQueries {
     * edge set is total-order-determined in both engines.
     */
   def pageRank(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1306,7 +1224,6 @@ object ExtQueries {
     * 2 exact-integer iterations, end-normalized (see [[Graph.hits]]).
     */
   def hitsScores(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1325,7 +1242,6 @@ object ExtQueries {
     * [[Graph.triangleStats]]).
     */
   def triangleStats(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1342,7 +1258,6 @@ object ExtQueries {
     * [[Graph.personalizedPageRank]]).
     */
   def trustRank(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1361,7 +1276,6 @@ object ExtQueries {
     * iterations, smallest-label tie-break ([[Graph.labelPropagation]]).
     */
   def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1382,7 +1296,6 @@ object ExtQueries {
     * exposes it to graph users directly.
     */
   def components(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1410,7 +1323,6 @@ object ExtQueries {
     * costs; the oracle unrolls the same 4 relaxations.
     */
   def shortestPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1434,7 +1346,6 @@ object ExtQueries {
     */
   def harmonicCentrality(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1468,7 +1379,6 @@ object ExtQueries {
     */
   def betweennessCentrality(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val seeds = Tables.part(spark, sfDir)
       .filter(col("p_partkey") % 500 === 0)
       .select(col("p_partkey").as("seed"))
@@ -1482,7 +1392,6 @@ object ExtQueries {
     * reproducibility discipline.
     */
   def randomWalks(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val seeds = Tables.part(spark, sfDir)
       .filter(col("p_partkey") % 100 === 0)
       .select(col("p_partkey").as("seed"))
@@ -1496,7 +1405,6 @@ object ExtQueries {
     * window 2 — the word2vec training-pair table for the chain graph.
     */
   def skipGramPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.skipGramPairs(randomWalks(spark, sfDir), window = 2)
   }
 
@@ -1509,7 +1417,6 @@ object ExtQueries {
     * turned).
     */
   def linkPrediction(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.linkPrediction(chainGraphEdges(spark, sfDir),
       minCommon = 2, maxDegree = 16, topN = 100)
   }
@@ -1522,7 +1429,6 @@ object ExtQueries {
     * the ANN paths.
     */
   def linkPredictionEval(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.linkPredictionEval(chainGraphEdges(spark, sfDir),
       holdoutMod = 10, minCommon = 1, maxDegree = 16,
       ks = Seq(10, 50, 100))
@@ -1533,7 +1439,6 @@ object ExtQueries {
     * round with a 4-hop horizon, confirmed feedback rings only.
     */
   def stronglyConnected(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.stronglyConnected(chainGraphEdges(spark, sfDir), hops = 4)
   }
 
@@ -1544,7 +1449,6 @@ object ExtQueries {
     */
   def stronglyConnectedPeel(spark: SparkSession,
                             sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.stronglyConnectedPeel(chainGraphEdges(spark, sfDir),
       hops = 4, peelRounds = 3)
   }
@@ -1554,7 +1458,6 @@ object ExtQueries {
     * (mutual world vs broadcast feed) for the whole x-tier.
     */
   def reciprocity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.reciprocity(chainGraphEdges(spark, sfDir))
   }
 
@@ -1564,7 +1467,6 @@ object ExtQueries {
     * is sized from.
     */
   def diameterEstimate(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.diameterEstimate(chainGraphEdges(spark, sfDir), hops = 6)
   }
 
@@ -1573,7 +1475,6 @@ object ExtQueries {
     * source/middle/sink roles.
     */
   def triadCensus(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.triadCensus(chainGraphEdges(spark, sfDir))
   }
 
@@ -1603,7 +1504,6 @@ object ExtQueries {
     * [[chainLpaLabels]]).
     */
   def modularity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.modularity(chainGraphEdges(spark, sfDir),
       chainLpaLabels(spark, sfDir))
   }
@@ -1614,7 +1514,6 @@ object ExtQueries {
     * third stage, on the same stored assignment x63 scores.
     */
   def modularityRefine(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.modularityRefine(chainGraphEdges(spark, sfDir),
       chainLpaLabels(spark, sfDir))
   }
@@ -1625,7 +1524,6 @@ object ExtQueries {
     * tie" skeleton under x31's counts and x60's node-level core.
     */
   def kTruss(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.kTruss(chainGraphEdges(spark, sfDir), k = 3, rounds = 2)
   }
 
@@ -1634,7 +1532,6 @@ object ExtQueries {
     * skew guard (salting vs bucket caps) before any expensive pass.
     */
   def assortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.assortativity(chainGraphEdges(spark, sfDir))
   }
 
@@ -1645,7 +1542,6 @@ object ExtQueries {
     * just what is connected).
     */
   def temporalReach(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1666,7 +1562,6 @@ object ExtQueries {
     */
   def pageRankConvergence(spark: SparkSession,
                           sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.pageRankConvergence(chainGraphEdges(spark, sfDir))
   }
 
@@ -1675,7 +1570,6 @@ object ExtQueries {
     * x48's components.
     */
   def kCore(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Graph.kCore(chainGraphEdges(spark, sfDir), k = 3, rounds = 4)
   }
 
@@ -1685,7 +1579,6 @@ object ExtQueries {
     */
   def degreeDistribution(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -1703,7 +1596,6 @@ object ExtQueries {
     * aggregates; DECIMAL state is what makes merge order immaterial).
     */
   def incrementalRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val o = Tables.orders(spark, sfDir)
     val cut = lit("1998-01-01").cast("timestamp")
     val keys = Seq("o_orderpriority", "o_orderstatus")
@@ -1722,7 +1614,6 @@ object ExtQueries {
     * test-scale quality readout (t24 discipline).
     */
   def joinEstimate(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.joinSizeEstimate(
       Tables.orders(spark, sfDir),
       Tables.customer(spark, sfDir)
@@ -1737,7 +1628,6 @@ object ExtQueries {
     * draw.
     */
   def weightedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.std.Sampling.weightedSample(
       Tables.orders(spark, sfDir), "o_orderkey", "o_totalprice", n = 100)
   }
@@ -1749,7 +1639,6 @@ object ExtQueries {
     * is exactly the shuffle-everything plan the aggregate avoids).
     */
   def stratifiedWeighted(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.std.Sampling.stratifiedWeightedSample(
       Tables.orders(spark, sfDir), "o_orderpriority", "o_orderkey",
       "o_totalprice", nPerGroup = 20)
@@ -1760,7 +1649,6 @@ object ExtQueries {
     * doubles), boundary assignment per row.
     */
   def equalFreqBins(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Features.equalFreqBins(
         Tables.orders(spark, sfDir)
           .select(col("o_orderkey"), col("o_totalprice")),
@@ -1772,7 +1660,6 @@ object ExtQueries {
     * hour-of-day with its traffic share.
     */
   def modalHour(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.groupMode(
       Tables.events(spark, sfDir)
         .select(col("event_type"), hour(col("ts")).as("hour_of_day")),
@@ -1785,7 +1672,6 @@ object ExtQueries {
     * DECIMAL moments per priority.
     */
   def priceDelayCorr(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val firstShip = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_orderkey"))
       .agg(min(col("l_shipdate")).as("_ship"))
@@ -1800,7 +1686,6 @@ object ExtQueries {
 
   /** Per-event-type z-score standardization of event values (x24). */
   def zscoreEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Features.zscore(
         Tables.events(spark, sfDir)
           .select(col("event_id"), col("event_type"), col("value")),
@@ -1818,7 +1703,6 @@ object ExtQueries {
     */
   def sourceShingleDiversity(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
     val tmpl = docs.filter(col("doc_id") % 6 === 0)
@@ -1841,7 +1725,6 @@ object ExtQueries {
     */
   def sourceOverlapMatrix(spark: SparkSession,
                           sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
     val mirror = docs.filter(col("doc_id") % 7 === 0)
@@ -1858,7 +1741,6 @@ object ExtQueries {
     * score at doc grain.
     */
   def noveltyScore(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = spread(Tables.documents(spark, sfDir))
     TextAnalysis.noveltyScore(
       docs.filter(col("doc_id") % 5 === 4),
@@ -1870,13 +1752,11 @@ object ExtQueries {
     * bands, the complexity axis of the quality shelf.
     */
   def readability(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.readability(spread(Tables.documents(spark, sfDir)))
   }
 
   /** Per-source token-entropy diversity report (t47). */
   def sourceEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.sourceEntropy(spread(Tables.documents(spark, sfDir)))
   }
 
@@ -1886,7 +1766,6 @@ object ExtQueries {
     * corpus before fixing a production (bands, rows) choice.
     */
   def lshTuning(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val corpus = nearDupCorpus(Tables.documents(spark, sfDir))
     val withSh = graft.std.Materialize.once(
       shingled(corpus, split(col("text"), " ")))
@@ -1907,7 +1786,6 @@ object ExtQueries {
     * unique base docs.
     */
   def repeatedNgrams(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.repeatedNgramSpans(
       spread(nearDupCorpus(Tables.documents(spark, sfDir))))
   }
@@ -1919,7 +1797,6 @@ object ExtQueries {
     * corpus — nothing else changes.
     */
   def dsirWeights(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.dsirWeights(spread(Tables.documents(spark, sfDir)),
       DsirTargetSources)
   }
@@ -1929,7 +1806,6 @@ object ExtQueries {
 
   /** Robust (median/MAD) per-priority order-value outliers (x26). */
   def robustOutliers(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Features.robustZscore(
         Tables.orders(spark, sfDir)
           .select(col("o_orderkey"), col("o_orderpriority"),
@@ -1943,14 +1819,12 @@ object ExtQueries {
     * z-scored against its trailing 24 observed hours.
     */
   def hourlyAnomalies(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.hourlyAnomalies(Tables.events(spark, sfDir))
       .withColumnRenamed("key", "event_type")
   }
 
   /** Retention cohort matrix over the event stream (x12). */
   def retentionCohorts(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.retentionCohorts(Tables.events(spark, sfDir))
   }
 
@@ -1958,7 +1832,6 @@ object ExtQueries {
     * the oracle contract; production uses the approx sketch mode.
     */
   def priceQuantiles(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.quantileReport(Tables.orders(spark, sfDir),
       "o_orderpriority", "o_totalprice", Seq(0.25, 0.5, 0.75, 0.9),
       exact = true)
@@ -1968,7 +1841,6 @@ object ExtQueries {
     * event payload inside the scan pass.
     */
   def propsRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     SemiStructured.propsRollup(Tables.events(spark, sfDir))
   }
 
@@ -1976,7 +1848,6 @@ object ExtQueries {
     * collapsed into validity intervals.
     */
   def scd2Intervals(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Scd.scd2FromLog(Tables.events(spark, sfDir),
       keyCol = "user_id", valueCol = "event_type",
       tsCol = "ts", tiebreakCol = "event_id")
@@ -1991,7 +1862,6 @@ object ExtQueries {
     * upsert path; the oracle replays the same merge relationally.
     */
   def cdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
       "o_totalprice", "o_orderdate")
     val o = Tables.orders(spark, sfDir).select(cols.map(col): _*)
@@ -2017,7 +1887,6 @@ object ExtQueries {
     * pre-1998 reference vs 1998-onward current.
     */
   def driftPsi(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val o = Tables.orders(spark, sfDir)
     val cut = lit("1998-01-01").cast("timestamp")
     Validation.driftPsi(
@@ -2028,7 +1897,6 @@ object ExtQueries {
 
   /** Order-value histogram (x11): 25k-wide bins over o_totalprice. */
   def priceHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.histogram(Tables.orders(spark, sfDir), "o_totalprice", 25000.0)
   }
 
@@ -2042,7 +1910,6 @@ object ExtQueries {
     * pre-existing partition column.)
     */
   def ivfTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfTopKTrained(vecs.filter(col("vec_id") < 20), vecs, 5,
         nprobe = 2, cells = 8, cellIters = 4,
@@ -2056,7 +1923,6 @@ object ExtQueries {
     * expected verdict is "no drift" with cos ≈ 1 per language.
     */
   def centroidDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     Similarity.centroidDrift(
       docs.filter(col("doc_id") % 2 === 0),
@@ -2066,21 +1932,18 @@ object ExtQueries {
 
   /** Per-language centroid-distance outliers (s7). */
   def embeddingOutliers(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.centroidOutliers(Tables.documents(spark, sfDir),
       Tables.embeddings(spark, sfDir))
   }
 
   /** KMV distinct-token cardinality sketch per language (t24). */
   def kmvCardinality(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.kmvCardinality(
       spread(Tables.documents(spark, sfDir)))
   }
 
   /** Corpus-unigram-LM per-document quality score (t25). */
   def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.unigramLogprob(
       spread(Tables.documents(spark, sfDir)))
   }
@@ -2089,13 +1952,11 @@ object ExtQueries {
     * table over the documents corpus.
     */
   def epochAllocation(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.epochAllocation(Tables.documents(spark, sfDir), 200000L)
   }
 
   /** CCNet-style perplexity tertile buckets per source (t62). */
   def perplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.perplexityBuckets(
       spread(Tables.documents(spark, sfDir)))
   }
@@ -2104,13 +1965,11 @@ object ExtQueries {
     * per-label codebooks, over the labeled embedding corpus.
     */
   def pqReport(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.pqReport(Tables.embeddings(spark, sfDir))
   }
 
   /** Hashed-feature classifier scoring (t32). */
   def hashedClassifier(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.hashedClassifier(
       spread(Tables.documents(spark, sfDir)))
   }
@@ -2121,7 +1980,6 @@ object ExtQueries {
     * can twin it) packed to one dense array row and broadcast.
     */
   def weightedClassifier(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.hashedClassifierWithWeights(
       spread(Tables.documents(spark, sfDir)),
       TextAnalysis.stubWeights(spark))
@@ -2129,7 +1987,6 @@ object ExtQueries {
 
   /** Bigram-LM document scoring (t31). */
   def bigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.bigramLogprob(
       spread(Tables.documents(spark, sfDir)))
   }
@@ -2141,7 +1998,6 @@ object ExtQueries {
     * the score itself).
     */
   def classifierAuc(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     // the synthetic corpus draws the same vocabulary for every lang
     // label (a text score CANNOT rank it — measured AUC 0.507), so
     // the fixture appends real English stopwords to half the English
@@ -2175,7 +2031,6 @@ object ExtQueries {
     */
   def dedupTokenSavings(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val base = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
     val corpus = base.unionByName(base.filter(col("doc_id") % 5 === 0)
@@ -2210,7 +2065,6 @@ object ExtQueries {
     * says whether its magnitude is trustworthy as a threshold.
     */
   def calibrationCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir).withColumn("text",
       when(col("lang") === "en" && col("doc_id") % 2 === 0,
         concat(col("text"), lit(" the of and is to")))
@@ -2234,7 +2088,6 @@ object ExtQueries {
     * marginal.
     */
   def missingnessAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val ev = Tables.events(spark, sfDir).select(col("event_id"),
       when(col("user_id") % 13 === 0, lit(null).cast("long"))
         .otherwise(col("user_id")).as("user_id"),
@@ -2246,7 +2099,6 @@ object ExtQueries {
   }
 
   def ksDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val ev = Tables.events(spark, sfDir)
     Experiment.ksDrift(ev.filter(col("event_type") === "purchase"),
       ev.filter(col("event_type") === "click"), "value")
@@ -2256,7 +2108,6 @@ object ExtQueries {
     * mutual information — the phrase-mining readout.
     */
   def pmiCollocations(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.pmiCollocations(spread(Tables.documents(spark, sfDir)))
   }
 
@@ -2265,7 +2116,6 @@ object ExtQueries {
     * (t29's BM25 statistics pointed the other way).
     */
   def tfidfTopTerms(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.tfidfTopTerms(spread(Tables.documents(spark, sfDir)),
       topK = 5)
   }
@@ -2274,13 +2124,11 @@ object ExtQueries {
     * 3-shingle shares with the novel/boilerplate_heavy/mixed verdict.
     */
   def dupDensity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.dupDensity(spread(Tables.documents(spark, sfDir)))
   }
 
   /** Count-Min-sketch heavy hitters (t27). */
   def cmsHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.cmsHeavyHitters(
       spread(Tables.documents(spark, sfDir)))
   }
@@ -2294,7 +2142,6 @@ object ExtQueries {
     * every even doc; organic segments survive untouched.
     */
   def segmentDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     val withHdr = spread(docs.select(col("doc_id"),
       when(col("doc_id") % 2 === 0,
@@ -2313,7 +2160,6 @@ object ExtQueries {
     * collapses to one removed span; organic unique text survives.
     */
   def spanDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val promo = TextAnalysis.SpanPromoText
     val docs = Tables.documents(spark, sfDir)
     val withPromo = spread(docs.select(col("doc_id"),
@@ -2335,7 +2181,6 @@ object ExtQueries {
     * promo constant as t77's fixture, so the fixtures cannot drift.
     */
   def nearDupSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val head = TextAnalysis.SpanPromoHead
     val tail = TextAnalysis.SpanPromoTail
     val docs = Tables.documents(spark, sfDir)
@@ -2368,7 +2213,6 @@ object ExtQueries {
     */
   def curationTrainPipeline(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineFrom(nearDupCorpus(Tables.documents(spark, sfDir)))
   }
 
@@ -2392,7 +2236,6 @@ object ExtQueries {
     */
   def curationTrainPipelineNearDup(spark: SparkSession,
                                    sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineFrom(
       nearDupCorpus(Tables.documents(spark, sfDir)),
       chrome = "tweaked", span = "neardup")
@@ -2409,7 +2252,6 @@ object ExtQueries {
     */
   def curationTrainPipelineCdc(spark: SparkSession,
                                sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineFrom(
       nearDupCorpus(Tables.documents(spark, sfDir)),
       chrome = "promo2", span = "cdc")
@@ -2645,7 +2487,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrement(spark: SparkSession,
                                      sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineIncrementFrom(spark, sfDir,
       nearDupCorpus(Tables.documents(spark, sfDir)),
       curationIncrementCorpus(Tables.documents(spark, sfDir)))
@@ -2663,7 +2504,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrementNearDup(spark: SparkSession,
                                             sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineIncrementFrom(spark, sfDir,
       nearDupCorpus(Tables.documents(spark, sfDir)),
       curationIncrementCorpus(Tables.documents(spark, sfDir)),
@@ -2679,7 +2519,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrementCdc(spark: SparkSession,
                                         sfDir: String): DataFrame = {
-    Tables.tune(spark)
     curationTrainPipelineIncrementFrom(spark, sfDir,
       nearDupCorpus(Tables.documents(spark, sfDir)),
       curationIncrementCorpus(Tables.documents(spark, sfDir)),
@@ -2957,7 +2796,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrement2(spark: SparkSession,
                                       sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     curationTrainPipelineIncrement2From(spark, sfDir, nearDupCorpus(docs),
       curationIncrementCorpus(docs), curationIncrementCorpusV3(docs))
@@ -2969,7 +2807,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrement2Cdc(spark: SparkSession,
                                          sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     curationTrainPipelineIncrement2From(spark, sfDir, nearDupCorpus(docs),
       curationIncrementCorpus(docs), curationIncrementCorpusV3(docs),
@@ -2989,7 +2826,6 @@ object ExtQueries {
     */
   def curationTrainPipelineIncrement2NearDup(spark: SparkSession,
                                              sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     curationTrainPipelineIncrement2From(spark, sfDir, nearDupCorpus(docs),
       curationIncrementCorpus(docs), curationIncrementCorpusV3(docs),
@@ -3147,7 +2983,6 @@ object ExtQueries {
     * trade vs t77's every-offset windows).
     */
   def cdcSegments(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val promo = TextAnalysis.SpanPromoText
     val docs = Tables.documents(spark, sfDir)
     val withChrome = spread(docs.select(col("doc_id"),
@@ -3165,7 +3000,6 @@ object ExtQueries {
     * ones instead of smearing t77's doc_id-gated injection evenly.
     */
   def sourceSpanPressure(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val promo = TextAnalysis.SpanPromoText
     val docs = Tables.documents(spark, sfDir)
     val injected = spread(docs.select(col("doc_id"), col("source"),
@@ -3181,7 +3015,6 @@ object ExtQueries {
     * identical query set.
     */
   def bm25Search(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import spark.implicits._
     val qs = Seq(
       (1L, "spark join merge"),
@@ -3196,7 +3029,6 @@ object ExtQueries {
     * 2–4, one deterministic easy negative outside the retrieved set.
     */
   def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import spark.implicits._
     val qs = Seq(
       (1L, "spark join merge"),
@@ -3216,7 +3048,6 @@ object ExtQueries {
     * the fusion kernel is agnostic to where the vectors came from).
     */
   def hybridSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     import spark.implicits._
     val qs = Seq(
       (1L, "spark join merge"),
@@ -3241,7 +3072,6 @@ object ExtQueries {
     * in the synthetic vocabulary are counted too, on both engines.
     */
   def duplicateSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
     val footer =
       "all rights reserved contact us at example dot com for details"
@@ -3258,7 +3088,6 @@ object ExtQueries {
     * target fraction the twin-shared [[TextAnalysis.TempTargetFrac]].
     */
   def temperatureResample(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.temperatureResample(
       spread(Tables.documents(spark, sfDir)),
       TextAnalysis.TempTargetFrac)
@@ -3273,7 +3102,6 @@ object ExtQueries {
     * first build per (session, sfDir).
     */
   def cubeSales(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.queries.Merged.cleanedShared(spark, sfDir)
       .cube(col("region_desc"), col("brand_desc"))
       .agg(round(sum("total_line_price"), 2).as("revenue"),
@@ -3286,7 +3114,6 @@ object ExtQueries {
     * on user_id; the four 1-row aggregates cross-join for free.
     */
   def setOpsUsers(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val ev = Tables.events(spark, sfDir)
     val clickers = ev.filter(col("event_type") === "click")
       .select("user_id").distinct()
@@ -3305,7 +3132,6 @@ object ExtQueries {
 
   /** Top-3 trending event types per hour (w6). */
   def trendingByWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.trendingByWindow(Tables.events(spark, sfDir))
   }
 
@@ -3318,7 +3144,6 @@ object ExtQueries {
     * group key is the 128-bit digest, byte sizes aggregate map-side.
     */
   def mediaDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val base = Media.synthCorpus(Tables.documents(spark, sfDir))
     val corpus = base.unionByName(
       base.filter(col("doc_id") % 4 === 0)
@@ -3337,7 +3162,6 @@ object ExtQueries {
     * chunks surface as `n_refs > 1` — the sub-file win.
     */
   def mediaChunkDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val base = Media.synthCorpus(Tables.documents(spark, sfDir))
     val corpus = base.select(col("doc_id"), col("payload")).unionByName(
       base.filter(col("doc_id") % 4 === 0)
@@ -3352,7 +3176,6 @@ object ExtQueries {
     * exist to support.
     */
   def mediaDedupSavings(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Media.dedupSavings(mediaChunkDedup(spark, sfDir))
   }
 
@@ -3361,7 +3184,6 @@ object ExtQueries {
     * surfaces with high Jaccard; unrelated files share none.
     */
   def mediaNearDups(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val base = Media.synthCorpus(Tables.documents(spark, sfDir))
     val corpus = base.select(col("doc_id"), col("payload")).unionByName(
       base.filter(col("doc_id") % 4 === 0)
@@ -3372,7 +3194,6 @@ object ExtQueries {
   }
 
   def mediaMetadata(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Media.extractMeta(Media.synthCorpus(Tables.documents(spark, sfDir)))
       .withColumn("n_bytes", col("n_bytes").cast("long"))
   }
@@ -3387,7 +3208,6 @@ object ExtQueries {
     */
   def mediaPerceptualDups(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     Media.perceptualDups(rotatedMirrorCorpus(spark, sfDir))
   }
 
@@ -3397,7 +3217,6 @@ object ExtQueries {
     */
   def mediaGradientDups(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     Media.gradientDups(rotatedMirrorCorpus(spark, sfDir))
   }
 
@@ -3427,7 +3246,6 @@ object ExtQueries {
     */
   def mediaTemporalAlignment(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val mirrors = docs.filter(col("doc_id") % 7 === 0)
@@ -3445,7 +3263,6 @@ object ExtQueries {
     * boundaries and scene numbering, the keyframe-sampling input.
     */
   def mediaSceneCuts(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     // spread: the sf parquet is one row group and the per-frame hash
     // kernel is the expensive part — without it the whole corpus
     // hashes in ONE task (measured 29 s vs 2.5 s at sf0.1)
@@ -3458,7 +3275,6 @@ object ExtQueries {
     * covers the payload exactly).
     */
   def mediaFrames(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val media = Media.synthCorpus(Tables.documents(spark, sfDir))
     Media.sampleFrames(media, chunkBytes = 32)
       .groupBy(col("doc_id"))
@@ -3470,17 +3286,14 @@ object ExtQueries {
   //      run the same functions after readStream — see StreamingSpec) ----
 
   def hourlyByType(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.hourlyByType(Tables.events(spark, sfDir))
   }
 
   def slidingHourly(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.slidingHourly(Tables.events(spark, sfDir))
   }
 
   def userSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.userSessions(Tables.events(spark, sfDir))
   }
 
@@ -3498,7 +3311,6 @@ object ExtQueries {
     * instead of degrading toward the one-partition window.
     */
   def concurrency(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val s = StreamingOps.userSessions(Tables.events(spark, sfDir))
     val bounds = s.select(col("session_start").as("ts"),
         lit(1L).as("delta"))
@@ -3515,7 +3327,6 @@ object ExtQueries {
 
   /** Conversion funnel over the event stream (w4). */
   def clickFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.clickFunnel(Tables.events(spark, sfDir))
   }
 
@@ -3523,7 +3334,6 @@ object ExtQueries {
     * pair set.
     */
   def attributionCredit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.attributionCredit(attributionJoin(spark, sfDir))
   }
 
@@ -3533,7 +3343,6 @@ object ExtQueries {
     * only the watermarks.
     */
   def attributionJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val e = Tables.events(spark, sfDir)
     StreamingOps.attributionJoin(
       e.filter(col("event_type") === "view"),
@@ -3547,7 +3356,6 @@ object ExtQueries {
     * against SQL, not just unit tests.
     */
   def funnelTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.funnelTransitions(Tables.events(spark, sfDir)).toDF()
   }
 
@@ -3557,7 +3365,6 @@ object ExtQueries {
     * the support/confidence/lift arithmetic bit-identical cross-engine.
     */
   def basketRules(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Basket.associationRules(Tables.lineitem(spark, sfDir),
       "l_orderkey", "l_partkey", minItemCount = 20L, minPairCount = 2L)
   }
@@ -3569,7 +3376,6 @@ object ExtQueries {
     * is the whole point of gating it.
     */
   def paretoParts(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Skyline.paretoFront(
       Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_retailprice"), col("p_size")),
@@ -3582,7 +3388,6 @@ object ExtQueries {
     * The oracle unrolls the same three frontier/visited rounds in SQL.
     */
   def kHopReach(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -3601,7 +3406,6 @@ object ExtQueries {
     * CASE ladder in SQL.
     */
   def rfmSegments(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Features.rfmSegments(Tables.orders(spark, sfDir),
       "o_custkey", "o_orderdate", "o_totalprice")
   }
@@ -3611,7 +3415,6 @@ object ExtQueries {
     * log-log regression, oracle-twinned moment for moment.
     */
   def zipfFit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.zipfFit(Tables.documents(spark, sfDir))
   }
 
@@ -3621,7 +3424,6 @@ object ExtQueries {
     * votes DESC, label ASC pins the prediction.
     */
   def knnClassify(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.knnClassify(vecs.filter(col("vec_id") < 20), vecs, 5)
   }
@@ -3631,7 +3433,6 @@ object ExtQueries {
     * oracle mirrors the z arithmetic expression for expression.
     */
   def abTest(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Experiment.abTest(Tables.events(spark, sfDir), "user_id",
       "event_type", Seq("purchase", "click", "view"),
       u => (u % 2).cast("int"))
@@ -3642,7 +3443,6 @@ object ExtQueries {
     * family, literal-array fast path at the schema dimensionality).
     */
   def bucketPurity(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.bucketPurity(Tables.embeddings(spark, sfDir),
       nPlanes = 8, dims = Some(64))
   }
@@ -3653,7 +3453,6 @@ object ExtQueries {
     * events by the same (ts, event_id) total order.
     */
   def topJourneys(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     StreamingOps.topJourneys(Tables.events(spark, sfDir))
   }
 
@@ -3663,7 +3462,6 @@ object ExtQueries {
     * composing both queries' SQL.
     */
   def ivfRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.recallAtK(
       ivfTopK(spark, sfDir), cosineTopK(spark, sfDir), 5)
   }
@@ -3674,7 +3472,6 @@ object ExtQueries {
     * s17 (IVF-PQ) and s19 (truncation) on the pricing shelf.
     */
   def hammingRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.recallAtK(
       hammingTopK(spark, sfDir), cosineTopK(spark, sfDir), 5)
   }
@@ -3684,7 +3481,6 @@ object ExtQueries {
     * the s9/s16 IVF indexes are sized by.
     */
   def kmeansElbow(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     // elbow sizing trains on a deterministic quarter sample — the
     // FAISS training contract (codebooks train on samples, never the
     // corpus): the k decision needs the SHAPE of WCSS-vs-k, and the
@@ -3697,7 +3493,6 @@ object ExtQueries {
     * per-digit observed vs expected share and chi-square terms.
     */
   def benford(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.benford(Tables.orders(spark, sfDir), "o_totalprice")
   }
 
@@ -3706,7 +3501,6 @@ object ExtQueries {
     * monetary sibling of x12's retention matrix.
     */
   def cohortLtv(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.cohortLtv(Tables.events(spark, sfDir))
   }
 
@@ -3717,7 +3511,6 @@ object ExtQueries {
     * proves the reflection closed form.
     */
   def clampedBalance(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val deltas = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"), col("l_shipdate"), col("l_orderkey"),
         col("l_linenumber"),
@@ -3733,7 +3526,6 @@ object ExtQueries {
     * 50-doc buckets over ingestion order.
     */
   def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.vocabGrowth(Tables.documents(spark, sfDir))
   }
 
@@ -3742,7 +3534,6 @@ object ExtQueries {
     * s13's recall.
     */
   def quantizationError(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.quantizationError(Tables.embeddings(spark, sfDir))
   }
 
@@ -3750,7 +3541,6 @@ object ExtQueries {
     * per-source top-5 by corpus lift, min count 10.
     */
   def distinctiveTokens(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     TextAnalysis.distinctiveTokens(Tables.documents(spark, sfDir))
   }
 
@@ -3762,7 +3552,6 @@ object ExtQueries {
     * threshold; the source-level ratio is exact fixed point.
     */
   def contaminationBySource(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val prof = sharedContaminationProfile(spark, sfDir)
     val src = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"))
@@ -3789,7 +3578,6 @@ object ExtQueries {
     * discipline as x20.
     */
   def weightedPageRank(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val edges = Tables.lineitem(spark, sfDir)
@@ -3804,7 +3592,6 @@ object ExtQueries {
     * recent), so the series shows real drift localized in time.
     */
   def driftTimeline(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.psiTimeline(
       Tables.orders(spark, sfDir)
         .select(to_date(date_trunc("month", col("o_orderdate")))
@@ -3818,7 +3605,6 @@ object ExtQueries {
     * supplier, customer → priority).
     */
   def fdAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Validation.fdAudit(Seq(
       Validation.FdCheck("nation_to_region",
         Tables.nation(spark, sfDir), "n_nationkey", "n_regionkey"),
@@ -3836,7 +3622,6 @@ object ExtQueries {
     * percentiles (the x13 kernel) on floored epoch seconds.
     */
   def conversionLatency(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val e = Tables.events(spark, sfDir)
     val firstView = e.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("_vt"))
@@ -3859,7 +3644,6 @@ object ExtQueries {
     * quantiles.
     */
   def survivalCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val e = Tables.events(spark, sfDir)
     val firstView = e.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("_vt"))
@@ -3886,7 +3670,6 @@ object ExtQueries {
     * timer-regularity bot fingerprint next to x47/x49.
     */
   def cadenceProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.cadenceProfile(Tables.events(spark, sfDir))
   }
 
@@ -3895,7 +3678,6 @@ object ExtQueries {
     * 8 fixed-point power-iteration rounds.
     */
   def stationaryMix(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.stationaryMix(Tables.events(spark, sfDir))
   }
 
@@ -3905,7 +3687,6 @@ object ExtQueries {
     * x10's day-over-day comparisons can be trusted.
     */
   def autocorrelation(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.autocorrelation(Tables.events(spark, sfDir))
   }
 
@@ -3915,7 +3696,6 @@ object ExtQueries {
     * exact fixed-point fold (the x52 discipline).
     */
   def ewmaBaseline(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.ewmaBaseline(Tables.events(spark, sfDir))
   }
 
@@ -3924,7 +3704,6 @@ object ExtQueries {
     * islands, covered seconds, longest gap.
     */
   def intervalCoverage(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val iv = Tables.events(spark, sfDir)
       .select(col("user_id"), col("ts"),
         (col("ts") + expr("INTERVAL 30 MINUTES")).as("te"),
@@ -3941,7 +3720,6 @@ object ExtQueries {
     * neighbors live in its probed cells; trained Voronoi cells do).
     */
   def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfPqTopKTrained(vecs.filter(col("vec_id") < 20), vecs, 5,
         nprobe = 2, cells = 8, cellIters = 4, subspaces = 16,
@@ -3955,7 +3733,6 @@ object ExtQueries {
     * s16 index consumes as its coarse quantizer.
     */
   def kmeansTrain(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.kmeansTrain(Tables.embeddings(spark, sfDir), 8, 4,
       memoTag = Some(s"emb|$sfDir"))
   }
@@ -3966,7 +3743,6 @@ object ExtQueries {
     * the deploy gate between the s26 elbow and the s16 index.
     */
   def silhouette(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.silhouette(Tables.embeddings(spark, sfDir), 8, 4,
       memoTag = Some(s"emb|$sfDir"))
   }
@@ -3977,7 +3753,6 @@ object ExtQueries {
     * all-but-the-top anisotropy readout).
     */
   def topPc(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.topPrincipalComponent(Tables.embeddings(spark, sfDir))
   }
 
@@ -3986,7 +3761,6 @@ object ExtQueries {
     * touched per width, the frontier an nprobe choice reads.
     */
   def ivfTuning(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfTuningReport(vecs.filter(col("vec_id") < 20), vecs,
       5, Seq(1, 2, 4, 8), memoTag = Some(s"emb|$sfDir"))
@@ -3999,7 +3773,6 @@ object ExtQueries {
     * recall-1.0 sanity row).
     */
   def truncationRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.truncationRecall(vecs.filter(col("vec_id") < 20), vecs,
       5, Seq(8, 16, 32, 64))
@@ -4013,7 +3786,6 @@ object ExtQueries {
     * original) and are the rows flagged `drop`.
     */
   def semDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Similarity.semDedup(
       nearDupVectors(Tables.embeddings(spark, sfDir)), 8, 4, 0.95,
       memoTag = Some(s"embdup|$sfDir"))
@@ -4028,7 +3800,6 @@ object ExtQueries {
     * index measured 0.16), against an exact-rerank ceiling of ~0.43.
     */
   def ivfPqRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     val exact = Similarity.bruteForceTopKL2(
       vecs.filter(col("vec_id") < 20), vecs, 5)
@@ -4041,7 +3812,6 @@ object ExtQueries {
     * storage cost as s16.
     */
   def ivfPqResidual(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfPqResidualTopK(vecs.filter(col("vec_id") < 20), vecs,
       k = 5, nprobe = 2, cells = 8, cellIters = 4, subspaces = 16,
@@ -4054,7 +3824,6 @@ object ExtQueries {
     * where PQ error inside the candidate set costs nothing.
     */
   def ivfPqRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfPqRerank(vecs.filter(col("vec_id") < 20), vecs,
       k = 5, candK = 15, nprobe = 2, cells = 8, cellIters = 4,
@@ -4072,7 +3841,6 @@ object ExtQueries {
     * train / linear encode as the corpus grows).
     */
   def ivfPqSampled(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     Similarity.ivfPqTopKSampled(vecs.filter(col("vec_id") < 20), vecs,
         5, sampleMod = 4, nprobe = 2, cells = 8, cellIters = 4,
@@ -4088,7 +3856,6 @@ object ExtQueries {
     */
   def ivfPqSampledRecall(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     val exact = Similarity.bruteForceTopKL2(
       vecs.filter(col("vec_id") < 20), vecs, 5)
@@ -4106,7 +3873,6 @@ object ExtQueries {
     */
   def indexAssignIncrement(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    Tables.tune(spark)
     val vecs = Tables.embeddings(spark, sfDir)
     val trainSet = vecs.filter(col("vec_id") % 5 =!= 4)
     val memo = Some(s"embtrain|$sfDir")
@@ -4132,7 +3898,6 @@ object ExtQueries {
     * over the event stream, row-normalized.
     */
   def transitionMatrix(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.transitionMatrix(Tables.events(spark, sfDir))
   }
 
@@ -4141,7 +3906,6 @@ object ExtQueries {
     * the order-anomaly readout downstream of x47.
     */
   def sequenceLikelihood(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.sequenceLikelihood(Tables.events(spark, sfDir))
   }
 
@@ -4152,7 +3916,6 @@ object ExtQueries {
     * `StreamingSpec`.
     */
   def transitionStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.streaming.StreamingOps.transitionRollup(
       graft.streaming.StreamingOps.transitionPairs(
         Tables.events(spark, sfDir)).toDF())
@@ -4165,7 +3928,6 @@ object ExtQueries {
     * of the stateful form must reproduce the window form exactly.
     */
   def asofStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     graft.streaming.StreamingOps.asofPairs(Tables.events(spark, sfDir))
       .toDF()
   }
@@ -4177,7 +3939,6 @@ object ExtQueries {
     * `StreamingSpec`.
     */
   def cadenceStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.cadenceRollup(
       graft.streaming.StreamingOps.gapPairs(Tables.events(spark, sfDir))
         .toDF())
@@ -4190,7 +3951,6 @@ object ExtQueries {
     * is pinned in `StreamingSpec`.
     */
   def ewmaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.ewmaVerdicts(
       graft.streaming.StreamingOps.ewmaPoints(
         Timeseries.dailySeries(Tables.events(spark, sfDir))).toDF())
@@ -4201,7 +3961,6 @@ object ExtQueries {
     * β = 0.2, shared guarded daily collapse.
     */
   def holtTrend(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.holtTrend(Tables.events(spark, sfDir))
   }
 
@@ -4212,7 +3971,6 @@ object ExtQueries {
     * stream side is pinned in `StreamingSpec`.
     */
   def holtStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Timeseries.holtDisplay(
       graft.streaming.StreamingOps.holtPoints(
         Timeseries.holtDaily(Tables.events(spark, sfDir))).toDF())
@@ -4225,7 +3983,6 @@ object ExtQueries {
     * per-user aggregate before the bottom-k cut.
     */
   def sequenceScore(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val ev = Tables.events(spark, sfDir)
     graft.streaming.StreamingOps.sequenceScoreStream(ev,
       Timeseries.transitionLogprobE9(ev)).toDF()
@@ -4242,7 +3999,6 @@ object ExtQueries {
     * the matrix is one partial-agg shuffle to |langs|² cells.
     */
   def langIdConfusion(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val pred = langId(spark, sfDir).select(col("doc_id"), col("lang_pred"))
     val truth = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))

@@ -19,7 +19,6 @@ object OperatorQueries {
 
   /** P3 — trim + null-literal normalization over constructed dirt. */
   def nullNormalizeDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val dirty = Tables.part(spark, sfDir).select(
       col("p_partkey"),
       when(col("p_partkey") % 5 === 0, concat(lit("  "), col("p_name"), lit("  ")))
@@ -32,7 +31,6 @@ object OperatorQueries {
 
   /** P4 — coercing numeric cast (non-ANSI cast ≡ `to_numeric(coerce)`). */
   def castCoerceDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Tables.lineitem(spark, sfDir).select(
       col("l_orderkey"), col("l_linenumber"),
       when(col("l_linenumber") === 3, lit("abc"))
@@ -46,7 +44,6 @@ object OperatorQueries {
 
   /** P5 — coercing timestamp parse. */
   def dateParseDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Tables.orders(spark, sfDir).select(
       col("o_orderkey"),
       when(col("o_orderkey") % 4 === 0,
@@ -62,7 +59,6 @@ object OperatorQueries {
     * but present `deposit_date` still get null (not a per-row coalesce).
     */
   def eventDateDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val li = Tables.lineitem(spark, sfDir)
     val ord = Tables.orders(spark, sfDir)
     val base = li.join(ord, col("l_orderkey") === col("o_orderkey")).select(
@@ -92,7 +88,6 @@ object OperatorQueries {
     * across engines, so no rounding is needed here.
     */
   def qualityFlagsDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Metrics.withAll(syntheticAnomalies(Tables.lineitem(spark, sfDir)))
       .select(col("l_orderkey"), col("l_linenumber"), col("quantity"),
         col("total_line_price"), col("asp"), col("cogs"),
@@ -102,14 +97,12 @@ object OperatorQueries {
 
   /** P12 — quality filter + aggregate over the anomaly frame. */
   def qualityFilterDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     BiQueries.qualityIssueCounts(
       Metrics.withAll(syntheticAnomalies(Tables.lineitem(spark, sfDir))))
   }
 
   /** P13 — substring + concat display names (`Project.py:202,254`). */
   def displayNameDemo(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Tables.part(spark, sfDir).select(
       col("p_partkey"),
       concat(substring(col("p_name"), 1, 30), lit("...")).as("product_short"),
@@ -120,7 +113,6 @@ object OperatorQueries {
     * date: the critical cross-dialect parity query (SURVEY §7.4 "hard #1").
     */
   def fincalColumns(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val d = Tables.lineitem(spark, sfDir)
       .select(to_date(col("l_shipdate")).as("event_date")).distinct()
     val fm = FiscalCalendar.finMonthDate(col("event_date"))
@@ -141,7 +133,6 @@ object OperatorQueries {
     * dialects — the grain a weekly dashboard groups on).
     */
   def finWeekRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     Tables.lineitem(spark, sfDir)
       .select(FiscalCalendar.finWeekLabel(to_date(col("l_shipdate")))
         .as("fin_week_label"))
@@ -153,7 +144,6 @@ object OperatorQueries {
     * (`Project.py:124`; SURVEY §2.4).
     */
   def fincalNullLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.tune(spark)
     val d = Tables.lineitem(spark, sfDir).select(
       when(col("l_linenumber") === 5, lit(null))
         .otherwise(to_date(col("l_shipdate"))).as("d"))

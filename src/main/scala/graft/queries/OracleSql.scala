@@ -1,6 +1,7 @@
 package graft.queries
 
-/** DuckDB oracle SQL, one entry per `SparkEntry.queries` key.
+/** DuckDB oracle SQL for the BI, cleaning and fiscal-calendar queries in
+  * `SparkEntry.registry`.
   *
   * Dialect traps handled here (FIXTURES.md §4):
   *  - DuckDB `dayofweek` is Sunday=0 (Spark's is Sunday=1) — the last-

@@ -80,9 +80,11 @@ object Tables {
       .reduce(_ unionByName _)
   }
 
-  /** Session knobs every entry point applies. ANSI must be OFF for
-    * pandas-parity coerce-to-null casts (SURVEY §1.3); AQE handles runtime
-    * re-planning (skew, small-partition coalescing) at scale.
+  /** The session policy, applied by every registered query's
+    * [[graft.QuerySpec.run]] and once at session start by the mains and
+    * the test session. ANSI must be OFF for pandas-parity coerce-to-null
+    * casts (SURVEY §1.3); AQE handles runtime re-planning (skew,
+    * small-partition coalescing) at scale.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -96,12 +98,11 @@ object Tables {
     // The AQE threshold lets a planned SMJ rewrite to SHJ at runtime
     // when every post-shuffle partition is under 128 MiB — a
     // per-partition bound, so it stays valid at any corpus size
-    // (measured here: x58 12.1→9.3 s, x60 4.3→3.4 s, x34 4.2→3.6 s,
-    // s33 11.4→9.4 s at sf0.1/local[32]).
+    // (measured: x60 4.3→3.4 s, x34 4.2→3.6 s, s33 11.4→9.4 s at
+    // sf0.1/local[32]).
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     spark.conf.set(
-      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "134217728"))
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
     // TIMESTAMP(NANOS) parquet columns (events table) read as long; set
     // here — not as a loader side effect — so typing is consistent for
     // the whole session lifetime.

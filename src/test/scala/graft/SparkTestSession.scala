@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (Spark startup is ~5s;
-  * per-spec sessions would dominate test time).
+  * per-spec sessions would dominate test time), under the session policy
+  * ([[graft.sources.Tables.tune]]) from the start, so a spec that calls a
+  * query body directly plans it the way the registry runs it.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -18,6 +20,6 @@ object SparkTestSession {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    s
+    graft.sources.Tables.tune(s)
   }
 }

@@ -21,6 +21,7 @@ import graft.ext.{Dedup, TextOps}
 spark.conf.set("spark.sql.shuffle.partitions", "32")
 spark.conf.set("spark.sql.session.timeZone", "UTC")
 spark.sparkContext.setLogLevel("ERROR")
+graft.sources.Tables.tune(spark)
 
 def time[T](label: String)(f: => T): T = {
   val t0 = System.nanoTime()

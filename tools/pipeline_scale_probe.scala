@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
 spark.conf.set("spark.sql.shuffle.partitions", "32")
 spark.conf.set("spark.sql.session.timeZone", "UTC")
 spark.sparkContext.setLogLevel("ERROR")
+graft.sources.Tables.tune(spark)
 
 def time[T](label: String)(f: => T): T = {
   val t0 = System.nanoTime()
