@@ -3882,15 +3882,7 @@ object ExtQueries {
       subspaces = 1, seedTag = "km", memoTag = memo))
     val pqCb = cbOf(Similarity.kmeansTrain(trainSet, 32, 3,
       subspaces = 16, seedTag = "pq", memoTag = memo))
-    // the test-scale increment arrives as ONE parquet file-partition,
-    // which would run the whole interpreted argmin on one core (5.3 s
-    // for 400 vectors); production micro-batches arrive parallelized
-    // by the stream source, so the BATCH query makes that explicit —
-    // a 400-row shuffle, never corpus-sized. The operator itself
-    // stays repartition-free: its streaming twin must add no shuffle
-    Similarity.indexAssign(
-      vecs.filter(col("vec_id") % 5 === 4)
-        .repartition(spark.sparkContext.defaultParallelism),
+    Similarity.indexAssign(vecs.filter(col("vec_id") % 5 === 4),
       cellCb, pqCb, 16)
   }
 

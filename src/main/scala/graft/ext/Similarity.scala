@@ -1,8 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+
+import graft.functions.Codebook
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -675,10 +680,9 @@ object Similarity {
                      cellIters: Int = 4, idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      memoTag: Option[String] = None): DataFrame = {
-    val ex = graft.std.Materialize.once(
-      pqExplode(corpus, 1, idCol, vecCol))
-    val (cellCb, cellAssign) =
-      kmeansLoopShared(ex, cells, cellIters, "km", memoTag)
+    val (cellCb, cellAssign) = kmeansLoopShared(corpus.sparkSession,
+      graft.std.Materialize.once(vecFrame(corpus, idCol, vecCol)), 1,
+      cells, cellIters, "km", memoTag)
     val cellOf = cellAssign.select(col("_vid").as("neighbor_id"),
       col("_cw").as("_cell"))
     val cents = broadcast(cellCb
@@ -934,7 +938,7 @@ object Similarity {
     * and `_nd` so [[pqReport]] can price the reconstruction without a
     * second pass.
     */
-  private def pqNearestCodewords(ex: DataFrame, cb: DataFrame)
+  private[ext] def pqNearestCodewords(ex: DataFrame, cb: DataFrame)
       : DataFrame = {
     val byDist = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_vid"), col("_sub"))
@@ -958,7 +962,7 @@ object Similarity {
   /** The (`_vid`, `_sub`, `_dim`, `_x`) exploded frame the PQ kernels
     * run on; `extra` carries side columns (e.g. the codebook label).
     */
-  private def pqExplode(vecs: DataFrame, subspaces: Int, idCol: String,
+  private[ext] def pqExplode(vecs: DataFrame, subspaces: Int, idCol: String,
                         vecCol: String,
                         extra: Seq[(String, String)] = Nil): DataFrame =
     vecs.select(Seq(col(idCol).as("_vid")) ++
@@ -1119,101 +1123,156 @@ object Similarity {
   // Deterministic k-means (s18): the TRAINER FAISS runs before IVF/PQ.
   // -------------------------------------------------------------------
 
-  /** One Lloyd training loop over an exploded (`_vid`, `_sub`, `_dim`,
-    * `_x`) frame — the generalized trainer behind [[kmeansTrain]] and
-    * [[ivfPqTopKTrained]]: with one subspace it trains the IVF coarse
-    * quantizer; with `m` subspaces it trains all `m` per-subspace PQ
-    * codebooks in the SAME loop (subspace is just a group key, so the
-    * m trainings share every scan and shuffle).
-    *
-    * Init is "random partition": cluster = `hash64(tag|sub|vid) mod k`
-    * — deterministic across runs, partitionings, and engines (the
-    * repo's no-RNG rule; the DuckDB twin computes the identical md5
-    * lane). Each iteration then (a) recomputes centroids as 6-dp
-    * DECIMAL-exact means of the current members (the s3 discipline —
-    * a double mean varies in the last ulps with partial-agg order,
-    * which would fork the whole training run) and (b) reassigns every
-    * (entity, subspace) to its nearest centroid by DECIMAL(38,12)-
-    * exact squared L2 with ties to the smallest cluster id
-    * ([[pqNearestCodewords]] — the same kernel PQ encode uses). A
-    * cluster that loses all members simply drops out of the codebook
-    * (deterministic in both engines; FAISS logs-and-splits instead —
-    * a policy choice, not a correctness one).
-    *
-    * 100 TB shape: per iteration, ONE broadcast equi-join of the
-    * exploded corpus with the |clusters| × dims codebook (k is a
-    * CONSTANT of the index — the s16 sizing contract) and two partial
-    * aggregations; iterations are a fixed small count. Production
-    * trains on a bounded SAMPLE (FAISS trains IVF/PQ on ~1M vectors
-    * regardless of corpus size) and encodes the full corpus once —
-    * pass the sample as `ex` and this loop never touches the rest.
-    *
-    * Returns (codebook, assignment): codebook `(_cw, _dim, _c)` after
-    * `iters` update+assign rounds; assignment `(_vid, _sub, _cw,
-    * _dist, _nd)` = each (entity, subspace)'s nearest trained
-    * centroid with its exact squared distance.
+  /** The (`_vid`, `_v`) array-grain frame the k-means loop trains on. */
+  private def vecFrame(vecs: DataFrame, idCol: String,
+                       vecCol: String): DataFrame =
+    vecs.select(col(idCol).as("_vid"),
+      col(vecCol).cast("array<double>").as("_v"))
+
+  /** A `(_cw, _dim, _c)` codebook frame collected into the driver-side
+    * [[graft.functions.Codebook]] the nearest-codeword kernel reads.
     */
+  private[ext] def codebookOf(cb: DataFrame, subspaces: Int): Codebook =
+    bookOf(subspaces, cb.select(col("_cw").cast("int"),
+      col("_dim").cast("int"), col("_c").cast("double")).collect().toSeq)
+
+  /** The codebook of rows holding (cw, dim, component) from column
+    * `at` on; rows without a cw or dim join nothing and are skipped.
+    */
+  private def bookOf(subspaces: Int, rows: Seq[Row],
+                     at: Int = 0): Codebook =
+    Codebook(subspaces, rows
+      .filter(r => !r.isNullAt(at) && !r.isNullAt(at + 1))
+      .map(r => (r.getInt(at), r.getInt(at + 1),
+        if (r.isNullAt(at + 2)) Double.NaN else r.getDouble(at + 2))))
+
+  /** [[pqNearestCodewords]]'s `(_vid, _sub, _cw, _dist, _nd)` rows for
+    * an array-grain frame, as one narrow projection through the
+    * codegen'd [[graft.functions.NearestCodeword]] kernel.
+    */
+  private[ext] def nearestCodewords(v: DataFrame, book: Codebook)
+      : DataFrame =
+    v.select(col("_vid"),
+        posexplode(GraftColumns.nearestCodeword(col("_v"), book))
+          .as(Seq("_sub", "_a")))
+      .filter(col("_a").isNotNull)
+      .select(col("_vid"), col("_sub"), col("_a._cw").as("_cw"),
+        col("_a._dist").as("_dist"), col("_a._nd").as("_nd"))
+
   /** Session memo for trained quantizers — the d5–d7 lifecycle applied
     * to the ANN index: in production the index is trained ONCE at
     * write time and queried many times, so the drivers' per-query
     * re-training was pure waste (at sf0.1 the coarse quantizer alone
     * costs ~5 s and six queries trained it independently). Keyed by a
-    * caller tag naming the CORPUS (the kernel appends k/iters/seed);
-    * entries are pinned self-contained frames released by
+    * caller tag naming the CORPUS (the kernel appends m/k/iters/seed);
+    * entries are self-contained frames (the codebook is a local
+    * relation, the assignment a pin) released by
     * `SessionMemo.releaseSession` in driver/test teardown. Callers
     * that need re-train-on-every-call semantics pass no tag — the
     * kernels stay pure by default.
     */
   private val trainMemo = new graft.std.SessionMemo()
 
-  /** [[kmeansLoop]] behind the session memo. A lost build race pins
-    * and releases per [[graft.std.SessionMemo]]; a cb-present/assign-
-    * missing partial state re-trains, and determinism (same input →
-    * bit-identical codebook) keeps the pair consistent.
+  /** One-chain [[kmeansLoop]] behind the session memo. `v` is by-name:
+    * a memo hit never builds the training frame. A lost build race
+    * pins and releases per [[graft.std.SessionMemo]]; a cb-present/
+    * assign-missing partial state re-trains, and determinism (same
+    * input → bit-identical codebook) keeps the pair consistent.
     */
-  private def kmeansLoopShared(ex: DataFrame, k: Int, iters: Int,
+  private def kmeansLoopShared(spark: SparkSession, v: => DataFrame,
+                               subspaces: Int, k: Int, iters: Int,
                                seedTag: String, memoTag: Option[String])
-      : (DataFrame, DataFrame) = memoTag match {
-    case None => kmeansLoop(ex, k, iters, seedTag)
-    case Some(tag) =>
-      val spark = ex.sparkSession
-      var built: Option[(DataFrame, DataFrame)] = None
-      def b: (DataFrame, DataFrame) = {
-        if (built.isEmpty) built = Some(kmeansLoop(ex, k, iters, seedTag))
-        built.get
-      }
-      val key = s"kmeans|$tag|k=$k|i=$iters|s=$seedTag"
-      val cb = trainMemo.getOrBuild(spark, key + "|cb")(
-        graft.std.Materialize.pinUnregistered(b._1))
-      val assign = trainMemo.getOrBuild(spark, key + "|assign")(
-        graft.std.Materialize.pinUnregistered(b._2))
-      (cb, assign)
+      : (DataFrame, DataFrame) = {
+    lazy val built = kmeansLoop(v, subspaces, Seq((k, seedTag)), iters).head
+    memoTag match {
+      case None => built
+      case Some(tag) =>
+        val key = s"kmeans|$tag|m=$subspaces|k=$k|i=$iters|s=$seedTag"
+        val cb = trainMemo.getOrBuild(spark, key + "|cb")(built._1)
+        val assign = trainMemo.getOrBuild(spark, key + "|assign")(
+          graft.std.Materialize.pinUnregistered(built._2))
+        (cb, assign)
+    }
   }
 
-  private def kmeansLoop(ex: DataFrame, k: Int, iters: Int,
-                         seedTag: String): (DataFrame, DataFrame) = {
-    require(k >= 1, "need k >= 1")
+  /** Lloyd's algorithm over a pinned array-grain frame (`_vid`, `_v`),
+    * training every chain `(k, seedTag)` in `chains` side by side — the
+    * trainer behind [[kmeansTrain]], [[kmeansElbow]] and the IVF/PQ
+    * indexes. With one subspace it trains a coarse quantizer; with `m`
+    * subspaces (dimension d belongs to subspace d % m) it trains all
+    * `m` per-subspace PQ codebooks in the same loop.
+    *
+    * Init is "random partition": cluster = `hash64(tag|sub|vid) mod k`
+    * — deterministic across runs, partitionings, and engines (the
+    * repo's no-RNG rule; the DuckDB twin computes the identical md5
+    * lane). Each of the `iters` rounds is ONE aggregate and one
+    * collect:
+    *  - update: every chain's current assignment rides the vector
+    *    (`explode` over chains), `posexplode` yields (dim, x), and the
+    *    6-dp DECIMAL-exact member mean `round(sum(x::decimal(38,18))
+    *    ::double / count, 6)` runs grouped by (chain, codeword, dim) —
+    *    the s3 discipline (a double mean varies in the last ulps with
+    *    partial-agg order, which would fork the whole training run).
+    *    The chain is a group key, so chains never mix.
+    *  - the collected codebook (|chains| × k × dims rows — k is a
+    *    CONSTANT of the index, the s16 sizing contract) lives on the
+    *    driver, and the next round's assignment is a narrow projection
+    *    through [[graft.functions.NearestCodeword]]: exact
+    *    DECIMAL(38,12) squared L2 per (vector, subspace), ties to the
+    *    smallest codeword id — bit-identical to [[pqNearestCodewords]],
+    *    the kernel PQ encode uses.
+    * A cluster that loses all members simply drops out of the codebook
+    * (deterministic in both engines; FAISS logs-and-splits instead —
+    * a policy choice, not a correctness one).
+    *
+    * Production trains on a bounded SAMPLE (FAISS trains IVF/PQ on ~1M
+    * vectors regardless of corpus size) and encodes the full corpus
+    * once — pass the sample as `v` and this loop never touches the
+    * rest.
+    *
+    * Returns, per chain, (codebook, assignment): the codebook `(_cw,
+    * _dim, _c)` after `iters` rounds as a local relation; the
+    * assignment `(_vid, _sub, _cw, _dist, _nd)` = each (entity,
+    * subspace)'s nearest trained centroid with its exact squared
+    * distance, a lazy projection over `v`.
+    */
+  private def kmeansLoop(v: DataFrame, subspaces: Int,
+                         chains: Seq[(Int, String)],
+                         iters: Int): Seq[(DataFrame, DataFrame)] = {
+    require(chains.nonEmpty, "need at least one chain")
+    require(chains.forall(_._1 >= 1), "need k >= 1")
     require(iters >= 1, "need iters >= 1")
-    var assign = ex.select(col("_vid"), col("_sub")).distinct()
-      .withColumn("_cw",
-        (TextOps.hash64(concat_ws("|", lit(seedTag),
-          col("_sub").cast("string"), col("_vid").cast("string")))
-          % k).cast("int"))
-    var cb: DataFrame = null
-    for (_ <- 1 to iters) {
-      // update: 6-dp DECIMAL-exact member means (codebook is tiny —
-      // pinning it each round cuts the iteration lineage at a
-      // |clusters| × dims frame, the pageRankLoop discipline)
-      cb = graft.std.Materialize.once(
-        ex.join(assign.select(col("_vid"), col("_sub"), col("_cw")),
-            Seq("_vid", "_sub"))
-          .groupBy(col("_cw"), col("_dim"))
-          .agg(round(sum(col("_x").cast("decimal(38,18)")).cast("double") /
-            count(lit(1)), 6).as("_c")))
-      // assign: nearest centroid, exact distances, ties to smallest id
-      assign = pqNearestCodewords(ex, cb)
+    val subs = sequence(lit(0), lit(subspaces - 1))
+    var cws: Seq[Column] = chains.map { case (k, tag) =>
+      transform(subs, s => (TextOps.hash64(concat_ws("|", lit(tag),
+        s.cast("string"), col("_vid").cast("string"))) % k).cast("int"))
     }
-    (cb, assign)
+    var perChain: Seq[Seq[Row]] = Nil
+    for (_ <- 1 to iters) {
+      val assigned = array(cws.zipWithIndex.map { case (c, i) =>
+        struct(lit(i).as("_chain"), c.as("_cws")) }: _*)
+      val rows = v.select(explode(assigned).as("_a"), col("_v"))
+        .select(col("_a._chain").as("_chain"), col("_a._cws").as("_cws"),
+          posexplode(col("_v")).as(Seq("_dim", "_x")))
+        .withColumn("_cw",
+          element_at(col("_cws"), col("_dim") % subspaces + 1))
+        .filter(col("_cw").isNotNull)
+        .groupBy(col("_chain"), col("_cw"), col("_dim"))
+        .agg(round(sum(col("_x").cast("decimal(38,18)")).cast("double") /
+          count(lit(1)), 6).as("_c"))
+        .collect().toSeq
+      val byChain = rows.groupBy(_.getInt(0))
+      perChain = chains.indices.map(byChain.getOrElse(_, Nil))
+      cws = perChain.map(rs => GraftColumns.nearestCodeword(col("_v"),
+        bookOf(subspaces, rs, 1)).getField("_cw"))
+    }
+    val schema = StructType(Seq(StructField("_cw", IntegerType),
+      StructField("_dim", LongType), StructField("_c", DoubleType)))
+    perChain.map { rs =>
+      val cb = v.sparkSession.createDataFrame(rs.map(r =>
+        Row(r.getInt(1), r.getInt(2).toLong, r.get(3))).asJava, schema)
+      (cb, nearestCodewords(v, bookOf(subspaces, rs, 1)))
+    }
   }
 
   /** Deterministic k-means training report (s18): Lloyd's algorithm
@@ -1235,21 +1294,9 @@ object Similarity {
                   seedTag: String = "km",
                   memoTag: Option[String] = None): DataFrame = {
     require(subspaces >= 1, "need at least one subspace")
-    kmeansTrainEx(graft.std.Materialize.once(
-      pqExplode(vecs, subspaces, idCol, vecCol)),
+    val (cb, assign) = kmeansLoopShared(vecs.sparkSession,
+      graft.std.Materialize.once(vecFrame(vecs, idCol, vecCol)),
       subspaces, k, iters, seedTag, memoTag)
-  }
-
-  /** [[kmeansTrain]] over an ALREADY-exploded (and pinned) frame —
-    * the entry point for callers that train several codebooks from
-    * one corpus scan ([[kmeansElbow]] pins one exploded frame and
-    * sweeps k over it; re-exploding per k was the sweep's dominant
-    * repeated cost).
-    */
-  private def kmeansTrainEx(ex: DataFrame, subspaces: Int, k: Int,
-                            iters: Int, seedTag: String,
-                            memoTag: Option[String]): DataFrame = {
-    val (cb, assign) = kmeansLoopShared(ex, k, iters, seedTag, memoTag)
     val stats = assign.groupBy(col("_sub"), col("_cw"))
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("_dist")).cast("double"), 9).as("wcss"))
@@ -1260,100 +1307,47 @@ object Similarity {
         col("n_members"), col("wcss"))
   }
 
-  /** k-means elbow sweep (s26): [[kmeansTrain]] at each k with one
-    * row per k — live-cluster count, total within-cluster sum of
-    * squares, and the size extremes. The "how many cells" tuning
-    * readout the IVF family depends on, next to s20's nprobe sweep:
-    * s20 prices probe width on a FIXED quantizer, this prices the
-    * quantizer's k itself (total WCSS falls monotonically with k; the
-    * elbow is where the marginal drop flattens — and collapsed or
-    * runt cells show up in the size extremes before an index ships).
+  /** k-means elbow sweep (s26): one [[kmeansTrain]]-equivalent chain
+    * per k with one row per k — live-cluster count, total within-
+    * cluster sum of squares, and the size extremes. The "how many
+    * cells" tuning readout the IVF family depends on, next to s20's
+    * nprobe sweep: s20 prices probe width on a FIXED quantizer, this
+    * prices the quantizer's k itself (total WCSS falls monotonically
+    * with k; the elbow is where the marginal drop flattens — and
+    * collapsed or runt cells show up in the size extremes before an
+    * index ships).
     *
-    * Determinism: per-cluster WCSS is the kmeansLoop fixed-point
-    * value (exact DECIMAL distance totals, one 9-dp round); the
-    * cross-cluster total re-sums those 9-dp values as DECIMAL(28,9) —
-    * order-free — and rounds once for display. Each k trains from its
-    * own hash seed (`el$k`), so runs are independent and the DuckDB
-    * twin unrolls each chain by tag.
-    *
-    * 100 TB shape: Σ over ks of the kmeansLoop contract (sample-
-    * bounded training in production, broadcast codebooks); the elbow
-    * frame itself is |ks| rows.
+    * Every k trains in the SAME [[kmeansLoop]] as its own chain
+    * (`el$k` hash seed, chain id a group key), so a round costs one
+    * aggregate for the whole sweep and each row equals a lone
+    * `kmeansTrain(vecs, k, iters, seedTag = s"el$k")` readout (spec-
+    * pinned). Per-cluster WCSS is the loop's fixed-point value (exact
+    * DECIMAL distance totals, one 9-dp round); the cross-cluster total
+    * re-sums those 9-dp values as DECIMAL(28,9) — order-free — and
+    * rounds once for display. The DuckDB twin unrolls each chain by
+    * tag.
     */
-  /* MEASURED (r22, plans/r22/scaling_sf0.4x.json + profiles): on a
-   * 4×-replicated corpus the sweep ANTI-SCALES 8→32 cores (5.5 s @8c
-   * vs 10.7 s @32c warm, clean sessions). The profile pins the
-   * mechanism: the SAME work reads 23 s of task-time at 8 cores but
-   * 251 s at 32 — an ~11× CPU inflation, i.e. the 32-core run pays
-   * allocation/GC pressure from 32 concurrent DECIMAL(38,18)-heavy
-   * aggregation tasks across the four training chains, not idle
-   * cores. Named follow-up: cut the per-row DECIMAL allocation in the
-   * distance/update kernel (exact scaled longs where range allows,
-   * keeping the oracle's fixed-point values bit-identical) before any
-   * batching of the k's — the batch rewrite alone would not touch the
-   * allocation rate that actually burns the cores. */
   def kmeansElbow(vecs: DataFrame, ks: Seq[Int] = Seq(2, 4, 8, 16),
                   iters: Int = 4, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     require(ks.nonEmpty, "need at least one k")
-    // ONE pinned exploded frame feeds every k: the per-k trainings
-    // differ only in their hash seed, so re-running pqExplode per k
-    // (the pre-r14 shape) repeated the sweep's one corpus-sized scan
-    // |ks| times for nothing
-    val ex = graft.std.Materialize.once(
-      pqExplode(vecs, 1, idCol, vecCol))
-    // the per-k trainings are independent job chains whose cost is
-    // dominated by per-iteration scheduling, not data (the loop pins
-    // a tiny codebook each round) — run them CONCURRENTLY and let the
-    // scheduler interleave; results are deterministic frames and the
-    // reduce keeps ks order, so the sweep output is unchanged.
-    // Concurrency discipline: a DEDICATED bounded pool (never the
-    // shared global EC — blocking trainings there can starve other
-    // users of it), a FINITE Await (a wedged job fails loudly instead
-    // of hanging the query forever), and each worker adopts the
-    // caller's Materialize scope token so the one-row pins it
-    // registers release with the enclosing `scoped` block rather
-    // than escaping it.
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val scope = graft.std.Materialize.capturedScope()
-    val pool = Executors.newFixedThreadPool(math.min(ks.size, 4))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      val perK = ks.map { k =>
-        Future {
-          graft.std.Materialize.withScope(scope) {
-            val agg = kmeansTrainEx(ex, 1, k, iters, s"el$k", None)
-              .select(col("cluster_id"), col("n_members"), col("wcss"))
-              .distinct()
-              .agg(count(lit(1)).as("n_live_clusters"),
-                sum(col("n_members")).as("n_vectors"),
-                round(sum(col("wcss").cast("decimal(28,9)"))
-                  .cast("double"), 9).as("total_wcss"),
-                max(col("n_members")).as("largest_cluster"),
-                min(col("n_members")).as("smallest_cluster"))
-              .select(lit(k).as("k"), col("n_live_clusters"),
-                col("n_vectors"), col("total_wcss"),
-                col("largest_cluster"), col("smallest_cluster"))
-            // pin the one-row readout so the sweep's training jobs
-            // run inside the Future, not lazily at the caller's
-            // action
-            graft.std.Materialize.once(agg)
-          }
-        }
-      }
-      Await.result(Future.sequence(perK), 2.hours)
-        .reduce(_ unionByName _)
-    } catch { case e: Throwable =>
-      // a timed-out Await or one failed training must not leave the
-      // OTHER trainings running Spark jobs against a scope that is
-      // about to exit: interrupt them now. Any pin a straggler still
-      // registers lands unscoped (the token dies with the enclosing
-      // `scoped` block) and the next releaseAll reclaims it.
-      pool.shutdownNow(); throw e
-    } finally pool.shutdown()
+    val trained = kmeansLoop(
+      graft.std.Materialize.once(vecFrame(vecs, idCol, vecCol)), 1,
+      ks.map(k => (k, s"el$k")), iters)
+    ks.zip(trained).map { case (k, (_, assign)) =>
+      assign.groupBy(col("_cw"))
+        .agg(count(lit(1)).as("n_members"),
+          round(sum(col("_dist")).cast("double"), 9).as("wcss"))
+        .agg(count(lit(1)).as("n_live_clusters"),
+          sum(col("n_members")).as("n_vectors"),
+          round(sum(col("wcss").cast("decimal(28,9)"))
+            .cast("double"), 9).as("total_wcss"),
+          max(col("n_members")).as("largest_cluster"),
+          min(col("n_members")).as("smallest_cluster"))
+        .select(lit(k).as("k"), col("n_live_clusters"),
+          col("n_vectors"), col("total_wcss"),
+          col("largest_cluster"), col("smallest_cluster"))
+    }.reduce(_ unionByName _)
   }
 
   /** Simplified-silhouette report (s30): per trained cluster, how
@@ -1399,12 +1393,12 @@ object Similarity {
                  boundary: Double = 0.25): DataFrame = {
     require(k >= 1, "need k >= 1")
     require(boundary > 0, "need a positive boundary margin")
-    val ex = graft.std.Materialize.once(
-      pqExplode(vecs, 1, idCol, vecCol))
-    val (cb, _) = kmeansLoopShared(ex, k, iters, seedTag, memoTag)
+    val v = graft.std.Materialize.once(vecFrame(vecs, idCol, vecCol))
+    val (cb, _) = kmeansLoopShared(vecs.sparkSession, v, 1, k, iters,
+      seedTag, memoTag)
     val byDist = Window.partitionBy(col("_vid"))
       .orderBy(col("_dist").asc, col("_cw").asc)
-    val pair = pqSubspaceDists(ex, cb)
+    val pair = pqSubspaceDists(pqExplode(v, 1, "_vid", "_v"), cb)
       .withColumn("_rn", row_number().over(byDist))
       .filter(col("_rn") <= 2)
       .groupBy(col("_vid"))
@@ -1558,17 +1552,15 @@ object Similarity {
                        memoTag: Option[String] = None): DataFrame = {
     require(k >= 1, "need k >= 1")
     require(nprobe >= 1, "need nprobe >= 1")
-    // ---- train: one exploded pass feeds both quantizers ----
-    val ex = graft.std.Materialize.once(
-      pqExplode(corpus, subspaces, idCol, vecCol))
-    // the _sub=0 rows are exactly pqExplode(corpus, 1)'s, so the
-    // coarse memo key is SHARED with ivfTopKTrained/kmeansTrain on
-    // the same corpus tag — one coarse training serves the family
-    val (cellCb, cellAssign) =
-      kmeansLoopShared(ex.withColumn("_sub", lit(0).cast("int")),
-        cells, cellIters, "km", memoTag)
-    val (pqCb, pqAssign) =
-      kmeansLoopShared(ex, codewords, pqIters, "pq", memoTag)
+    // ---- train: one pinned vector frame feeds both quantizers ----
+    // (built only when a memo misses). The coarse memo key is SHARED
+    // with ivfTopKTrained/kmeansTrain on the same corpus tag — one
+    // coarse training serves the family
+    lazy val v = graft.std.Materialize.once(vecFrame(corpus, idCol, vecCol))
+    val (cellCb, cellAssign) = kmeansLoopShared(corpus.sparkSession, v,
+      1, cells, cellIters, "km", memoTag)
+    val (pqCb, pqAssign) = kmeansLoopShared(corpus.sparkSession, v,
+      subspaces, codewords, pqIters, "pq", memoTag)
     // ---- write-time artifacts: cells, codes (free from the loop's
     // final assignment when training saw the whole corpus) ----
     val cellOf = cellAssign.select(col("_vid").as("neighbor_id"),
@@ -1669,14 +1661,13 @@ object Similarity {
     val sampled = corpus.filter(
       TextOps.hash64(concat(lit("s27|"), col(idCol).cast("string")))
         % sampleMod === 0)
-    val exT = graft.std.Materialize.once(
-      pqExplode(sampled, subspaces, idCol, vecCol))
+    lazy val vT = graft.std.Materialize.once(
+      vecFrame(sampled, idCol, vecCol))
     val sTag = memoTag.map(t => s"$t|s27m$sampleMod")
-    val (cellCb, _) = kmeansLoopShared(
-      exT.withColumn("_sub", lit(0).cast("int")),
+    val (cellCb, _) = kmeansLoopShared(corpus.sparkSession, vT, 1,
       cells, cellIters, "km", sTag)
-    val (pqCb, _) = kmeansLoopShared(exT, codewords, pqIters, "pq",
-      sTag)
+    val (pqCb, _) = kmeansLoopShared(corpus.sparkSession, vT, subspaces,
+      codewords, pqIters, "pq", sTag)
     // ---- encode the FULL corpus against the frozen codebooks ----
     // cells and codes are WRITE-TIME artifacts exactly like the
     // codebooks (in production they are stored with the index), so
@@ -1717,21 +1708,19 @@ object Similarity {
     * codewords against the FROZEN codebooks, never retraining (the
     * d9/s6 increment discipline applied to the ANN index).
     *
-    * Both codebooks pack into ONE broadcastable row each
-    * (|codewords| × dims structs — index artifacts, driver-tiny by
-    * contract), and the argmin is a pure array expression:
-    * `array_sort` over `struct(dist, cw)` picks (dist asc, cw asc),
-    * exactly [[pqNearestCodewords]]'s window order. Distances fold
-    * per-dim squares through DECIMAL(38,12) — exact and associative,
-    * so the fold equals the batch kernel's SUM bit-for-bit and the
-    * DuckDB twin (the s27 `assignCte`) cannot diverge.
+    * Both codebooks are collected to the driver (|codewords| × dims
+    * entries — index artifacts, driver-tiny by contract) and ride
+    * inside the codegen'd [[graft.functions.NearestCodeword]] kernel,
+    * the same one the k-means loop assigns with: exact DECIMAL(38,12)
+    * squared L2, ties to the smallest codeword id — exactly
+    * [[pqNearestCodewords]]' order, so the DuckDB twin (the s27
+    * `assignCte`) cannot diverge.
     *
-    * Because every step is a stateless projection over a broadcast
-    * row, the SAME code runs unchanged as a streaming micro-batch
-    * assign (stream-static broadcast join + map — zero stream-side
-    * shuffle, zero state), which the streaming spec pins ≡ this
-    * batch form. That IS the production serving shape: broadcast the
-    * trained artifacts, map-assign every arriving vector.
+    * Because the assign is a stateless projection, the SAME code runs
+    * unchanged as a streaming micro-batch assign (zero stream-side
+    * shuffle, zero state), which the streaming spec pins ≡ this batch
+    * form. That IS the production serving shape: ship the trained
+    * artifacts, map-assign every arriving vector.
     *
     * Returns one row per (vector, subspace): (vec_id, cell,
     * subspace, codeword).
@@ -1740,62 +1729,19 @@ object Similarity {
                   subspaces: Int, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     require(subspaces >= 1, "need at least one subspace")
-    // codeword IDS are shared across subspaces (the loop assigns
-    // each (vid, sub) pair an id 0..k-1 independently; the (_cw,
-    // _dim) codebook disambiguates by dim % subspaces) — so packing
-    // must key on (subspace, cw), not cw alone, or one id's per-sub
-    // codewords would fuse into a 64-dim chimera. The outer level is
-    // INDEXED BY SUBSPACE (array position s+1 = subspace s, every
-    // trained subspace has ≥1 codeword): each row's per-subspace
-    // argmin reads its 32 candidates positionally instead of
-    // re-filtering the full |m|×|cw| codebook per subspace — HOFs run
-    // interpreted, and the filter scan was ~80% of the per-row evals
-    def packed(cb: DataFrame, m: Int, out: String) = cb
-      .withColumn("_sub", (col("_dim") % m).cast("int"))
-      .groupBy(col("_sub"), col("_cw"))
-      .agg(array_sort(collect_list(struct(col("_dim"), col("_c"))))
-        .as("_dims"))
-      .groupBy(col("_sub"))
-      .agg(array_sort(collect_list(struct(col("_cw"), col("_dims"))))
-        .as("_cands"))
-      .agg(array_sort(collect_list(struct(col("_sub"), col("_cands"))))
-        .as(out))
-    // fold in LONG e12 fixed point, not decimal: Spark's decimal ADD
-    // inside a fold widens past precision 38 and silently drops
-    // scale (allowPrecisionLoss), which would fork the fold from the
-    // batch kernel's exact DECIMAL(38,12) SUM — the e12 longs are
-    // the same per-dim values shifted 12 places (squares of centered
-    // embedding components: far below long range even ×dims), and
-    // long addition is exact, so dist_e12 ≡ SUM × 1e12 bit-for-bit.
-    // (The Media.let binding does NOT pay here: the re-evaluated
-    // subexpression is one double subtraction, cheaper than the
-    // one-element array the binding allocates per dimension.)
-    def d2(vcol: Column, dims: Column): Column =
-      aggregate(dims, lit(0L), (acc, p) => {
-        val x = element_at(vcol, p.getField("_dim").cast("int") + 1)
-        acc + (((x - p.getField("_c")) * (x - p.getField("_c")))
-          .cast("decimal(38,12)") * lit(1000000000000L)).cast("long")
-      })
-    def argmin(vcol: Column, cands: Column): Column =
-      element_at(array_sort(transform(cands, cb =>
-        struct(d2(vcol, cb.getField("_dims")).as("d"),
-          cb.getField("_cw").as("cw")))), 1).getField("cw")
-    val v = batch.select(col(idCol).as("vec_id"),
+    val cells = codebookOf(cellCb, 1)
+    val codes = codebookOf(pqCb, subspaces)
+    batch.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("_v"))
-      .crossJoin(broadcast(packed(cellCb, 1, "_cellcb")))
-      .crossJoin(broadcast(packed(pqCb, subspaces, "_pqcb")))
-    val subCodes = transform(sequence(lit(0), lit(subspaces - 1)), s =>
-      struct(s.cast("int").as("sub"),
-        argmin(col("_v"),
-          element_at(col("_pqcb"), s + 1).getField("_cands"))
-          .as("cw")))
-    v.select(col("vec_id"),
-        argmin(col("_v"),
-          element_at(col("_cellcb"), 1).getField("_cands")).as("_cell"),
-        explode(subCodes).as("_sc"))
+      .select(col("vec_id"),
+        element_at(GraftColumns.nearestCodeword(col("_v"), cells), 1)
+          .getField("_cw").as("_cell"),
+        posexplode(GraftColumns.nearestCodeword(col("_v"), codes))
+          .as(Seq("_sub", "_a")))
+      .filter(col("_a").isNotNull)
       .select(col("vec_id"), col("_cell").cast("long").as("cell"),
-        col("_sc").getField("sub").cast("long").as("subspace"),
-        col("_sc").getField("cw").cast("long").as("codeword"))
+        col("_sub").cast("long").as("subspace"),
+        col("_a._cw").cast("long").as("codeword"))
   }
 
   /** Leading principal component of the embedding covariance (s21)
@@ -2150,10 +2096,9 @@ object Similarity {
     require(nprobes.nonEmpty, "need at least one probe width")
     require(nprobes.forall(_ >= 1), "probe widths start at 1")
     val maxNp = nprobes.max
-    val ex = graft.std.Materialize.once(
-      pqExplode(corpus, 1, idCol, vecCol))
-    val (cellCb, cellAssign) =
-      kmeansLoopShared(ex, cells, cellIters, "km", memoTag)
+    val (cellCb, cellAssign) = kmeansLoopShared(corpus.sparkSession,
+      graft.std.Materialize.once(vecFrame(corpus, idCol, vecCol)), 1,
+      cells, cellIters, "km", memoTag)
     val cellOf = cellAssign.select(col("_vid").as("neighbor_id"),
       col("_cw").as("_cell"))
     val cents = broadcast(cellCb
@@ -2365,32 +2310,32 @@ object Similarity {
     require(k >= 1, "need k >= 1")
     require(nprobe >= 1, "need nprobe >= 1")
     // ---- coarse quantizer: shared with the s16/s18 family ----
-    val ex = graft.std.Materialize.once(
-      pqExplode(corpus, subspaces, idCol, vecCol))
-    val (cellCb, cellAssign) =
-      kmeansLoopShared(ex.withColumn("_sub", lit(0).cast("int")),
-        cells, cellIters, "km", memoTag)
+    lazy val v = graft.std.Materialize.once(
+      vecFrame(corpus, idCol, vecCol))
+    val (cellCb, cellAssign) = kmeansLoopShared(corpus.sparkSession, v,
+      1, cells, cellIters, "km", memoTag)
     val cellDims = cellCb.select(col("_cw").as("_cell"), col("_dim"),
       col("_c"))
-    // ---- residual frame: x − centroid(cell(x)), dim for dim ----
-    val resEx = graft.std.Materialize.once(
-      ex.join(cellAssign.select(col("_vid"), col("_cw").as("_cell")),
-          Seq("_vid"))
-        .join(broadcast(cellDims), Seq("_cell", "_dim"))
-        .select(col("_vid"), col("_sub"), col("_dim"),
-          (col("_x") - col("_c")).as("_x")))
-    val (pqCb, pqAssign) =
-      kmeansLoopShared(resEx, codewords, pqIters, "pqr", memoTag)
-    val cellOf = cellAssign.select(col("_vid").as("neighbor_id"),
-      col("_cw").as("_cell"))
-    val codes = pqAssign.select(col("_vid").as("neighbor_id"),
-      col("_sub"), col("_cw"))
-    val cents = broadcast(cellCb
+    val centroids = cellCb
       .groupBy(col("_cw").as("_cell"))
       .agg(array_sort(collect_list(struct(col("_dim"), col("_c"))))
         .as("_pm"))
       .select(col("_cell"),
         transform(col("_pm"), p => p.getField("_c")).as("centroid"))
+    // ---- residual vectors: x − centroid(cell(x)), dim for dim ----
+    lazy val resV = graft.std.Materialize.once(
+      v.join(cellAssign.select(col("_vid"), col("_cw").as("_cell")),
+          Seq("_vid"))
+        .join(broadcast(centroids), Seq("_cell"))
+        .select(col("_vid"), transform(col("_v"),
+          (x, i) => x - element_at(col("centroid"), i + 1)).as("_v")))
+    val (pqCb, pqAssign) = kmeansLoopShared(corpus.sparkSession, resV,
+      subspaces, codewords, pqIters, "pqr", memoTag)
+    val cellOf = cellAssign.select(col("_vid").as("neighbor_id"),
+      col("_cw").as("_cell"))
+    val codes = pqAssign.select(col("_vid").as("neighbor_id"),
+      col("_sub"), col("_cw"))
+    val cents = broadcast(centroids
       .withColumn("cn", l2Norm(col("centroid"))))
     // ---- probe: the s16 cosine ranking against trained centroids ----
     val q = queries.select(col(idCol).as("query_id"),
@@ -2464,13 +2409,10 @@ object Similarity {
                seedTag: String = "km",
                memoTag: Option[String] = None): DataFrame = {
     require(threshold > 0, "need a positive cosine threshold")
-    val ex = graft.std.Materialize.once(
-      pqExplode(vectors, 1, idCol, vecCol))
-    val (_, assign) = kmeansLoopShared(ex, k, iters, seedTag, memoTag)
-    val base = vectors
-      .select(col(idCol).as("_vid"),
-        col(vecCol).cast("array<double>").as("_v"))
-      .withColumn("_nm", l2Norm(col("_v")))
+    val v = graft.std.Materialize.once(vecFrame(vectors, idCol, vecCol))
+    val (_, assign) = kmeansLoopShared(vectors.sparkSession, v, 1, k,
+      iters, seedTag, memoTag)
+    val base = v.withColumn("_nm", l2Norm(col("_v")))
       .join(assign.select(col("_vid"), col("_cw").as("cluster_id")),
         Seq("_vid"))
     val a = base.select(col("cluster_id"), col("_vid").as("_ida"),

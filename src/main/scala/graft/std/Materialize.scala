@@ -57,8 +57,8 @@ object Materialize {
     * [[withScope]] but registers AFTER the owning block exited falls
     * back to an UNSCOPED pin (reclaimed by the next [[releaseAll]])
     * instead of tagging the pin with a dead token nothing will ever
-    * release — the permanent-leak hazard on e.g. an elbow-sweep
-    * training Future that outlives its Await timeout.
+    * release — the permanent-leak hazard on e.g. a worker Future
+    * that outlives its Await timeout.
     */
   private val liveTokens =
     scala.collection.mutable.Set.empty[AnyRef]

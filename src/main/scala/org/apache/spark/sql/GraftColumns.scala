@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.ExpressionUtils
 
-import graft.functions.{BloomBits, BloomContains, DecDot18, DeflateRatio, DeflateRound9, DotProductD, KmvMins, LooSpanHashes, Md5Lane, NfcNormalize, SpanWindowHashes, TopSample, WordShingles}
+import graft.functions.{BloomBits, BloomContains, Codebook, DecDot18, DeflateRatio, DeflateRound9, DotProductD, KmvMins, LooSpanHashes, Md5Lane, NearestCodeword, NfcNormalize, SpanWindowHashes, TopSample, WordShingles}
 
 /** Typed analysis errors for graft's SQL function builders (the
   * message-only `AnalysisException` constructor is `private[sql]`,
@@ -36,6 +36,13 @@ object GraftColumns {
   def decDot18(a: Column, b: Column): Column =
     ExpressionUtils.column(DecDot18(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** Codegen'd per-subspace nearest codeword against a driver-side
+    * codebook, exact DECIMAL(38,12) distances — see [[NearestCodeword]].
+    */
+  def nearestCodeword(v: Column, book: Codebook): Column =
+    ExpressionUtils.column(
+      NearestCodeword(ExpressionUtils.expression(v), book))
 
   /** Codegen'd deflation bridge round(c − s·v, 9) per element — see
     * [[DeflateRound9]].

@@ -462,4 +462,111 @@ class KmeansSpec extends AnyFunSuite {
       .toMap
     assert(got == expByC, s"got $got expected $expByC")
   }
+
+  // ---- the nearest-codeword kernel vs the exploded DECIMAL form ----
+
+  private type Assigned = (Long, Int, Int, Option[java.math.BigDecimal], Long)
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[Assigned] =
+    df.select("_vid", "_sub", "_cw", "_dist", "_nd").collect().map(r =>
+      (r.getLong(0), r.getInt(1), r.getInt(2),
+        Option(r.getDecimal(3)).map(_.stripTrailingZeros), r.getLong(4)))
+      .toSet
+
+  /** Kernel rows and pqNearestCodewords rows for the same vectors and
+    * `(_cw, _dim, _c)` codebook at `m` subspaces.
+    */
+  private def bothForms(vecs: org.apache.spark.sql.DataFrame,
+                        cb: org.apache.spark.sql.DataFrame,
+                        m: Int): (Set[Assigned], Set[Assigned]) = {
+    import org.apache.spark.sql.functions.col
+    val v = vecs.select(col("vec_id").as("_vid"),
+      col("embedding").cast("array<double>").as("_v"))
+    val kernel = rowsOf(Similarity.nearestCodewords(v,
+      Similarity.codebookOf(cb, m)))
+    val exploded = rowsOf(Similarity.pqNearestCodewords(
+      Similarity.pqExplode(vecs, m, "vec_id", "embedding"), cb))
+    (kernel, exploded)
+  }
+
+  test("nearest-codeword kernel ≡ pqNearestCodewords: exact ties, a " +
+    "dropped codeword, 1 and 4 subspaces") {
+    // 8-dim grid vectors (0.5 steps: every distance is exact, so ties
+    // are real ties); codeword 2 is absent in every subspace and
+    // codewords 3 and 4 are identical, so 4 may never win
+    val vecs = Seq(
+      (1L, Seq(1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0)),
+      (2L, Seq(0.0, 2.0, 0.5, 1.5, 3.0, 0.0, 2.0, 1.0)),
+      (3L, Seq(2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0)),
+      (4L, Seq(0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5)),
+      (5L, Seq(-1.0, 3.5, 1.0, 0.0, 1.5, 2.5, 0.5, 2.0)))
+      .toDF("vec_id", "embedding")
+    val comps = Map(0 -> 0.0, 1 -> 2.0, 3 -> 1.5, 4 -> 1.5, 5 -> 0.5)
+    val cb = (for { (cw, c) <- comps.toSeq; d <- 0 until 8 }
+      yield (cw, d.toLong, if (d % 2 == 0) c else 2.0 - c))
+      .toDF("_cw", "_dim", "_c")
+    for (m <- Seq(1, 4)) {
+      val (kernel, exploded) = bothForms(vecs, cb, m)
+      assert(exploded.size == 5 * m)
+      assert(kernel == exploded, s"m=$m: ${kernel -- exploded} vs " +
+        s"${exploded -- kernel}")
+      assert(!kernel.exists(_._3 == 4), "a tie goes to the smaller id")
+    }
+    // vector 1 is 0.5 from codewords 3, 4 and 5 in every dim
+    val (k1, _) = bothForms(vecs.filter($"vec_id" === 1L), cb, 1)
+    assert(k1.map(_._3) == Set(3), s"equidistant -> smallest id: $k1")
+  }
+
+  test("nearest-codeword kernel ≡ pqNearestCodewords on seeded data, " +
+    "with null elements, a short vector and long-overflowing sums") {
+    val rnd = new scala.util.Random(41)
+    val vecs = (1L to 120L).map { i =>
+      val scale = if (i % 10 == 0) 3000.0 else 1.0
+      val dims = if (i == 7L) 5 else 8
+      (i, (0 until dims).map { d =>
+        if (i == 11L && d == 3) null
+        else java.lang.Double.valueOf(rnd.nextGaussian() * scale)
+      })
+    }.toDF("vec_id", "embedding")
+    val cb = (for { cw <- Seq(0, 1, 2, 4, 6); d <- 0 until 8 }
+      yield (cw, d.toLong, rnd.nextGaussian())).toDF("_cw", "_dim", "_c")
+    for (m <- Seq(1, 4)) {
+      val (kernel, exploded) = bothForms(vecs, cb, m)
+      assert(kernel == exploded, s"m=$m: ${kernel -- exploded} vs " +
+        s"${exploded -- kernel}")
+      assert(kernel.exists(_._4.exists(_.compareTo(
+        new java.math.BigDecimal("9223372.036854775807")) > 0)),
+        "some distance must leave the e12 long range")
+    }
+  }
+
+  // ---- s26: every k is an independent chain of ONE loop ----
+
+  test("elbow chains are independent: each k's row equals a lone " +
+    "kmeansTrain readout with the same seed tag") {
+    import org.apache.spark.sql.functions._
+    // three overlapping blobs: chains of different k move different
+    // members, so any leak between chains changes the codebooks
+    val rnd = new scala.util.Random(5)
+    val df = (1L to 60L).map { i =>
+      val c = (i % 3).toDouble * 2.0
+      (i, Seq(c + rnd.nextGaussian(), c - rnd.nextGaussian(),
+        rnd.nextGaussian()))
+    }.toDF("vec_id", "embedding")
+    val ks = Seq(1, 2, 3)
+    val elbow = Similarity.kmeansElbow(df, ks, iters = 3).collect()
+      .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
+    graft.std.Materialize.releaseAll()
+    for (k <- ks) {
+      val lone = Similarity.kmeansTrain(df, k, 3, seedTag = s"el$k")
+        .select(col("cluster_id"), col("n_members"), col("wcss"))
+        .distinct()
+        .agg(count(lit(1)), sum(col("n_members")),
+          round(sum(col("wcss").cast("decimal(28,9)")).cast("double"), 9),
+          max(col("n_members")), min(col("n_members")))
+        .collect().head.toSeq
+      graft.std.Materialize.releaseAll()
+      assert(elbow(k) == lone, s"k=$k: elbow ${elbow(k)} vs lone $lone")
+    }
+  }
 }

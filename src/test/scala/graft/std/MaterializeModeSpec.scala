@@ -32,6 +32,34 @@ class MaterializeModeSpec extends AnyFunSuite {
     assert(local == disk)
   }
 
+  /** The k-means loop pins its vector frame and (memoized) its final
+    * assignment; both must hold under `disk` as under `local`. The
+    * training memo is released between modes so each mode trains.
+    */
+  test("k-means training (s18) and the elbow sweep (s26) rows identical " +
+    "under local and disk modes") {
+    def run(): (Set[String], Set[String]) = {
+      val train = ExtQueries.kmeansTrain(spark, sfDir)
+        .collect().map(_.toString).toSet
+      val elbow = ExtQueries.kmeansElbow(spark, sfDir)
+        .collect().map(_.toString).toSet
+      (train, elbow)
+    }
+    def release(): Unit = {
+      Materialize.releaseAll()
+      SessionMemo.releaseSession(spark)
+    }
+    spark.conf.set("spark.graft.materialize.mode", "local")
+    val local = try run() finally release()
+    spark.conf.set("spark.graft.materialize.mode", "disk")
+    val disk = try run() finally {
+      release()
+      spark.conf.unset("spark.graft.materialize.mode")
+    }
+    assert(local._1.nonEmpty && local._2.size == 4)
+    assert(local == disk)
+  }
+
   /** r22: the partitioned standing-state pin must (a) return the same
     * rows, (b) leave consumers keyed on the pin key exchange-free —
     * the contract the warm curation lookup joins lean on — and
