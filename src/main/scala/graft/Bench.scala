@@ -347,6 +347,10 @@ object Bench {
         .map { case (max, rem) => max - rem }.sum
       s / (1024 * 1024)
     }
+    // key → first error of every query that threw in any run (canary,
+    // rep or retry): written to failures.json beside the record, and
+    // the bench exits 1 when it is non-empty
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def oneRun(name: String,
                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
@@ -359,6 +363,7 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        if (!failures.contains(name)) failures(name) = e.toString
         // -1 marks a failed query in the JSON; a thrown query must not
         // masquerade as a fast success
         -1.0
@@ -513,6 +518,9 @@ object Bench {
         outPath, sfDir, reps, samples, retries, memoStats, started,
         drift, canaryStartMs, canaryEndMs, guardDisarmed, anomCtx))
     catch { case _: Throwable => () }
+    val failuresPath = java.nio.file.Paths.get(outPath).toAbsolutePath
+      .resolveSibling("failures.json")
+    Verify.writeJson(failuresPath.toFile, failures.toMap)
     println(headJson(results, canaryStart, canaryEnd, flaky, anomalous,
       outPath, sfDir,
       v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)),
@@ -521,5 +529,10 @@ object Bench {
     // before stop — keeps the pin lifecycle honest end-to-end
     graft.std.SessionMemo.releaseSession(spark)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[bench] ${failures.size} queries failed: " +
+        s"see $failuresPath")
+      sys.exit(1)
+    }
   }
 }

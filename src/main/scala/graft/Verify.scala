@@ -8,6 +8,14 @@ import scala.jdk.CollectionConverters._
   * any query failed.
   */
 object Verify {
+  /** A string map as one key-sorted JSON object (oracle_sql.json and the
+    * failures.json that Verify and [[Bench]] write).
+    */
+  private[graft] def writeJson(file: java.io.File,
+                               entries: Map[String, String]): Unit =
+    new ObjectMapper().writeValue(file,
+      new java.util.TreeMap[String, String](entries.asJava))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -42,12 +50,9 @@ object Verify {
       graft.std.Materialize.releaseAll()
       failure
     }
-    val json = new ObjectMapper()
-    def writeJson(file: String, entries: Map[String, String]): Unit =
-      json.writeValue(new java.io.File(s"$outDir/$file"),
-        new java.util.TreeMap[String, String](entries.asJava))
-    writeJson("oracle_sql.json", SparkEntry.sqlOf(SparkEntry.selected))
-    writeJson("failures.json", failures.toMap)
+    writeJson(new java.io.File(s"$outDir/oracle_sql.json"),
+      SparkEntry.sqlOf(SparkEntry.selected))
+    writeJson(new java.io.File(s"$outDir/failures.json"), failures.toMap)
     // free the session memos (see graft.std.SessionMemo) before stop
     graft.std.SessionMemo.releaseSession(spark)
     spark.stop()

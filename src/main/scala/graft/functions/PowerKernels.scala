@@ -107,12 +107,12 @@ case class DeflateRound9(first: Expression, second: Expression,
   override def prettyName: String = "graft_deflate_round9"
 
   override protected def nullSafeEval(c: Any, v: Any, s: Any): Any =
-    DeflateRound9.apply(c.asInstanceOf[ArrayData], v.asInstanceOf[ArrayData],
-      s.asInstanceOf[Double])
+    DeflateRound9.deflate(c.asInstanceOf[ArrayData],
+      v.asInstanceOf[ArrayData], s.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (c, v, s) =>
-      s"${ev.value} = graft.functions.DeflateRound9.apply($c, $v, $s);")
+      s"${ev.value} = graft.functions.DeflateRound9.deflate($c, $v, $s);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -128,7 +128,13 @@ object DeflateRound9 {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else JBigDecimal.valueOf(x).setScale(9, RoundingMode.HALF_UP).doubleValue()
 
-  def apply(c: ArrayData, v: ArrayData, s: Double): ArrayData = {
+  /** Named `deflate`, not `apply`: the generated Java calls it as a
+    * static method on the class, and Scala emits no static forwarder
+    * for a companion method whose name the class already has (the
+    * expression inherits `TreeNode.apply(Int)`), so an `apply` here
+    * failed to compile and Spark silently ran the interpreted path.
+    */
+  def deflate(c: ArrayData, v: ArrayData, s: Double): ArrayData = {
     val n = math.min(c.numElements(), v.numElements())
     val out = new Array[Any](n)
     var i = 0

@@ -1,6 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{CompletionException, Executors}
+
+import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 
 /** Sinks + collection projections (SURVEY §2.1 S2–S6, §2.2 P14;
@@ -110,10 +113,40 @@ object Sinks {
   /** S6 end-to-end (`Project.py:367-423`): project + serialize all three
     * MongoDB collections as JSONL directories, the exact mongoimport
     * input contract.
+    *
+    * The three writes are independent jobs over the same frame, so they
+    * are submitted concurrently, on a pool of 3 that is shut down before
+    * the call returns. Each is submitted through Spark's own capture
+    * primitive (`SQLExecution.withThreadLocalCaptured`, the one
+    * broadcast exchanges use), so its jobs carry the caller's local
+    * properties (job group, description, job tags) and active session.
+    * The call returns only after all three writes have finished; if any
+    * failed it then throws the first failure (in collection order), with
+    * the others attached as suppressed. No write creates a pin.
     */
   def exportCollections(cleaned: DataFrame, dir: String): Unit = {
-    writeJsonl(projectCollection(cleaned, SalesLinesColumns), s"$dir/sales_lines")
-    writeJsonl(projectCollection(cleaned, ReceivablesColumns), s"$dir/receivables")
-    writeJsonl(projectCollection(cleaned, PaymentsColumns), s"$dir/payments")
+    val collections = Seq(
+      "sales_lines" -> SalesLinesColumns,
+      "receivables" -> ReceivablesColumns,
+      "payments" -> PaymentsColumns)
+    val pool = Executors.newFixedThreadPool(collections.size)
+    try {
+      val writes = collections.map { case (name, cols) =>
+        SQLExecution.withThreadLocalCaptured(
+          cleaned.sparkSession.asInstanceOf[classic.SparkSession], pool) {
+          writeJsonl(projectCollection(cleaned, cols), s"$dir/$name")
+        }
+      }
+      val failures = writes.flatMap { w =>
+        try { w.join(); None }
+        catch {
+          case e: CompletionException => Some(Option(e.getCause).getOrElse(e))
+        }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 }

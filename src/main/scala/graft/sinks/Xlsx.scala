@@ -3,6 +3,8 @@ package graft.sinks
 import java.io.FileOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 /** A real binary `.xlsx` workbook sink (SURVEY §2.1 S4 — the reference
@@ -21,8 +23,11 @@ import org.apache.spark.sql.DataFrame
   * Scale note (deliberate): a workbook is a single zip stream, so this
   * sink is driver-side BY NATURE — it exists for REPORT artifacts
   * (aggregated frames: revenue by month, top-15 products), never for
-  * fact data. Rows stream through `toLocalIterator` (one partition in
-  * driver memory at a time) and the sink fails loudly past
+  * fact data. A local frame (`df.isLocal`: rows already in driver
+  * memory, e.g. a collected report) is iterated with `collect()`, which
+  * runs no Spark job; a distributed frame streams through
+  * `toLocalIterator` (one partition in driver memory at a time, one job
+  * per partition). Either way the sink fails loudly past
   * `maxRowsPerSheet` instead of silently producing a file Excel cannot
   * open (the format's own row ceiling is 1 048 576).
   */
@@ -52,8 +57,9 @@ object Xlsx {
     private[sinks] def cy: Long = math.round(heightPx * scale * 9525.0)
   }
 
-  /** Read a rendered PNG file (e.g. a [[Charts]] output) into an
-    * [[XlsxImage]], taking pixel dimensions from the image itself.
+  /** Read an external PNG file into an [[XlsxImage]], taking pixel
+    * dimensions from the decoded image. ([[Charts.writeCharts]] returns
+    * its renders as images directly, with no read-back.)
     */
   def imageFromPng(path: String, scale: Double = 1.0): XlsxImage = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -102,9 +108,11 @@ object Xlsx {
   }
 
   /** Stream one worksheet's XML straight into the zip: rows go from
-    * `toLocalIterator` to the compressed stream, so driver memory holds
-    * one partition of rows + one row's XML — never the sheet (a
-    * near-cap sheet would be multi-GB as a single string).
+    * the frame to the compressed stream, so driver memory holds the rows
+    * the frame already keeps there (local) or one partition of them
+    * (distributed, `toLocalIterator`) + one row's XML — never the
+    * sheet's XML (a near-cap sheet would be multi-GB as a single
+    * string).
     */
   private def writeSheetEntry(zip: ZipOutputStream, df: DataFrame,
                               maxRows: Long): Unit = {
@@ -119,7 +127,9 @@ object Xlsx {
     }
     w.write("</row>")
     var r = 1L
-    val it = df.toLocalIterator()
+    val it =
+      if (df.isLocal) df.collect().iterator
+      else df.toLocalIterator().asScala
     while (it.hasNext) {
       val row = it.next()
       r += 1

@@ -1,14 +1,93 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Session-scoped memo of inferred parquet schemas, keyed (session,
+  * path) and valid while the path's leaf-file listing and the session's
+  * parquet reader confs are unchanged.
+  *
+  * `spark.read.parquet(path)` launches a footer-reading job on every
+  * call just to learn the schema; the same read with the schema given
+  * launches none. A rewritten table (any leaf file added, removed,
+  * resized or touched) or a changed `spark.sql.parquet.*` /
+  * `spark.sql.legacy.parquet.*` conf re-infers. Entries of stopped
+  * sessions are swept on every read, by [[graft.std.SessionMemo]]'s
+  * rule. The stamp costs one driver-side listing per read, the same
+  * listing Spark's file index makes for the read itself. It caches a `StructType`, not a pin, so it has no release path
+  * and stays out of the memo hit/build counters.
+  *
+  * @param stopped predicate marking a session as dead (injectable so the
+  *                sweep is testable without stopping the JVM's one local
+  *                SparkContext).
+  */
+private[graft] final class SchemaMemo(
+    stopped: SparkSession => Boolean = _.sparkContext.isStopped) {
+
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+
+  private val map = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), (Stamp, StructType)]
+
+  /** `spark.read.parquet(path)`, inferring the schema only when no
+    * entry matches the path's current stamp. A path that cannot be
+    * listed goes straight to Spark, so its error is Spark's own.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    map.keys.filter(k => stopped(k._1)).toList.foreach(map.remove)
+    val files =
+      try Some(leafFiles(spark, path))
+      catch { case _: java.io.IOException => None }
+    files match {
+      case None => spark.read.parquet(path)
+      case Some(fs) =>
+        val stamp: Stamp = (fs, parquetConfs(spark))
+        map.get((spark, path)) match {
+          case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            map.put((spark, path), (stamp, df.schema))
+            df
+        }
+    }
+  }
+
+  /** (path, length, modification time) of every file under `path`. */
+  private def leafFiles(spark: SparkSession,
+                        path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val b = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    b.result()
+  }
+
+  private def parquetConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  private[graft] def entryCount(spark: SparkSession): Int =
+    map.count { case ((s, _), _) => s eq spark }
+}
 
 /** Parquet table loaders over a scale-factor directory (TESTDATA.md).
-  * Thin on purpose: `spark.read.parquet` gives column pruning and filter
-  * pushdown for free; never pre-materialize.
+  * Each read keeps `spark.read.parquet`'s column pruning and filter
+  * pushdown and never pre-materializes; the only state is the
+  * [[SchemaMemo]], so a table's schema is inferred once per session and
+  * listing instead of by a Spark job on every read.
   */
 object Tables {
+  private val schemas = new SchemaMemo()
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    schemas.read(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "orders")
