@@ -278,29 +278,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // n>=3 repeats per query, min reported: rounds 5-7 proved a
     // single-shot bench swings up to 26x on byte-identical code under
     // host contention (t4 0.56->14.7s with zero src diff). The min of
     // n runs is the contention-resistant statistic; all samples go to
     // the JSON file copy so rep-1 warm-up (memo builds, codegen) stays
     // auditable.
-    val reps = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.Tables.tune(spark) // join-strategy confs, see scaladoc
-    spark.sparkContext.setLogLevel("WARN")
-    // releasing a localCheckpoint pin intentionally discards truncated
-    // lineage; the per-RDD WARN would spam the driver-captured tail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val reps = 3
+    val spark = SparkEntry.localSession()
     // untimed warmup: JVM/codegen/parquet-reader startup otherwise lands
     // entirely on the alphabetically-first query (measured ~6s of the
     // first entry's wall time)
@@ -340,8 +325,7 @@ object Bench {
         s"[bench] ERROR no baseline found at ${baselinePaths.mkString(", ")}"
           + " — outlier guard DISARMED; is the working directory the"
           + " repo root? (record carries guard_disarmed:true)")
-    val maxRetries = math.max(0,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt)
+    val maxRetries = 2
     def storageUsedMb: Long = {
       val s = spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, rem) => max - rem }.sum
@@ -381,11 +365,8 @@ object Bench {
     // statistic) — a mid-run host step shows as end/start >> 1, which
     // a start-only canary structurally cannot see (the r17 driver run:
     // healthy start canary, 44 queries at 2–31x committed). Skipped
-    // under SPARK_GRAFT_ONLY (local iteration) or
-    // SPARK_GRAFT_BENCH_CANARY=0.
-    val canaryEnabled =
-      !sys.env.contains("SPARK_GRAFT_ONLY") &&
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_CANARY", "1") != "0"
+    // under SPARK_GRAFT_ONLY (local iteration).
+    val canaryEnabled = !sys.env.contains("SPARK_GRAFT_ONLY")
     def runCanary(label: String): Seq[(String, Double)] =
       if (!canaryEnabled) Nil
       else canaryKeys.flatMap { k =>

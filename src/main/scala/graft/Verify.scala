@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each selected query's result → parquet,
@@ -18,20 +17,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.Tables.tune(spark) // join-strategy confs, see scaladoc
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench: pin release intentionally discards truncated lineage
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=t24,s7 dumps a subset (SparkEntry.selected); the
     // oracle json holds the same subset so a subset compare doesn't

@@ -169,8 +169,8 @@ object Bpe {
     * are below the floor). With no truncation the table is IDENTICAL
     * to [[trainMerges]] (spec-checked). Distributed fallback
     * ([[trainMergesBatched]]) exists for vocabularies that genuinely
-    * exceed driver memory; the probe (`tools/bpe_scale_probe.scala`)
-    * shows why this local form is the default — real pair
+    * exceed driver memory; the README's "BPE-training probe" shows
+    * why this local form is the default — real pair
     * distributions are conflict-dense at the head, so exactness-
     * preserving distributed batching rarely commits more than one
     * merge per round.

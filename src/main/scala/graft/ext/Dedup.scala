@@ -237,8 +237,7 @@ object Dedup {
     * pipeline persists the accumulated corpus's band keys (bucketed on
     * (band, key)) between increments, so each new batch joins against
     * a pre-partitioned table and only the batch side shuffles — the
-    * probe in `tools/incremental_dedup_scale_probe.scala` measures
-    * exactly that.
+    * README's "Incremental-dedup scale probe" measures exactly that.
     */
   def bandKeysOf(sigs: DataFrame, k: Int, bands: Int,
                  idCol: String = "doc_id"): DataFrame = {
@@ -512,8 +511,8 @@ object Dedup {
 
   /** [[incrementalClassify]] against precomputed [[corpusState]] — the
     * per-increment cost is O(batch) because the corpus side arrives
-    * materialized (the probe in
-    * `tools/incremental_dedup_scale_probe.scala` measures this form).
+    * materialized (the README's "Incremental-dedup scale probe"
+    * measures this form).
     */
   def classifyIncrement(state: IncrementalState, batchRaw: DataFrame,
                         bands: Int = 4,

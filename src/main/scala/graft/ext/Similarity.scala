@@ -200,8 +200,8 @@ object Similarity {
     * plane ranges of the deterministic family), each a bucket
     * equi-join with Hamming-1 multi-probe on the query side — the
     * classic LSH recall dial: one table at 10× corpus recalls ~0.45,
-    * the default 4 tables ~0.9+ (probed:
-    * `tools/ann_recall_probe.scala`). Shuffle is
+    * the default 4 tables ~0.9+ (README, "MIPS ANN recall probe").
+    * Shuffle is
     * O(nTables × (batch × (nPlanes+1) + corpus)) — linear in corpus,
     * never batch × corpus; cross-table duplicate candidates dedupe
     * BEFORE scoring (a candidate-sized exchange, not a corpus-sized
@@ -1049,10 +1049,10 @@ object Similarity {
     * per candidate. No full-vector read anywhere on the query path.
     * The ONE sizing contract: |codewords| is a CONSTANT of the trained
     * codebook (FAISS deployments use 256), never a function of corpus
-    * size — the encode join is |corpus| × |codewords| rows, and
-    * `tools/ivfpq_scale_probe.scala` measured what letting the
-    * codeword space grow with the data does (3.3 → 134 s at 10×,
-    * quadratic) vs the fixed-codebook shape (3.7 → 6.6 s, sub-linear).
+    * size — the encode join is |corpus| × |codewords| rows, and the
+    * README's "IVF-PQ scale probe" records what letting the codeword
+    * space grow with the data does (3.3 → 134 s at 10×, quadratic) vs
+    * the fixed-codebook shape (3.7 → 6.6 s, sub-linear).
     *
     * Determinism: cells probe on 6-dp cosines over DECIMAL-exact
     * centroids (s9); codes and ADC entries are DECIMAL(38,12)-exact

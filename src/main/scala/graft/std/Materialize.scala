@@ -52,24 +52,8 @@ object Materialize {
 
   private val owner = new ThreadLocal[AnyRef]
 
-  /** Tokens of currently-live [[scoped]] blocks. Registration checks
-    * membership so a worker thread that adopted a token via
-    * [[withScope]] but registers AFTER the owning block exited falls
-    * back to an UNSCOPED pin (reclaimed by the next [[releaseAll]])
-    * instead of tagging the pin with a dead token nothing will ever
-    * release — the permanent-leak hazard on e.g. a worker Future
-    * that outlives its Await timeout.
-    */
-  private val liveTokens =
-    scala.collection.mutable.Set.empty[AnyRef]
-
   private def register(release: () => Unit): Unit =
-    synchronized {
-      val tok = owner.get()
-      val effective =
-        if (tok != null && !liveTokens.contains(tok)) null else tok
-      pins += ((effective, release))
-    }
+    synchronized { pins += ((owner.get(), release)) }
 
   /** Compute `df` once and return a frame whose reads never re-execute
     * the upstream plan. The pin is held until [[releaseAll]].
@@ -194,51 +178,23 @@ object Materialize {
     * pipelines on different threads (a micro-batch alongside an
     * interactive query) can no longer release each other's blocks.
     * `once` calls that `f` dispatches to OTHER threads register as
-    * unscoped — keep pinning on the scope's own thread.
+    * unscoped, so the scope does not free them and the next
+    * [[releaseAll]] does — keep pinning on the scope's own thread.
     */
   def scoped[T](f: => T): T = {
     val token = new Object
     val prev = owner.get()
     owner.set(token)
-    synchronized { liveTokens += token }
     try f
     finally {
       owner.set(prev)
       val mine = synchronized {
-        liveTokens -= token
         val (s, rest) = pins.partition(_._1 eq token)
         pins.clear(); pins ++= rest
         s.toList
       }
       mine.foreach(p => try p._2() catch { case _: Throwable => () })
     }
-  }
-
-  /** Capture the calling thread's [[scoped]] token (null when
-    * unscoped) so work dispatched to ANOTHER thread can register its
-    * pins under the same enclosing scope via [[withScope]] — without
-    * this, `once` calls on worker threads register unscoped and
-    * escape the enclosing `scoped` block's release (the hazard the
-    * [[scoped]] doc warns about).
-    */
-  def capturedScope(): AnyRef = owner.get()
-
-  /** Run `f` on the current thread with pins registering under
-    * `token` (from [[capturedScope]]), restoring the thread's prior
-    * owner afterwards. The worker-thread half of the capture/adopt
-    * pair.
-    *
-    * The caller should still join/await its workers INSIDE the
-    * enclosing [[scoped]] block (so their pins release with it), but
-    * a straggler that registers after the block exits is safe: the
-    * token is no longer live, so registration falls back to an
-    * unscoped pin and the next [[releaseAll]] reclaims it — late
-    * release, never a leak.
-    */
-  def withScope[T](token: AnyRef)(f: => T): T = {
-    val prev = owner.get()
-    owner.set(token)
-    try f finally owner.set(prev)
   }
 
   /** Currently-held pin count (test hook). */

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -26,11 +26,11 @@ object JobCounter {
         val _ = jobs.add(e)
       }
     }
-    TestListenerBus.drain(sc)
+    GraftListenerBus.drain(sc)
     sc.addSparkListener(l)
     try {
       val r = Try(body)
-      TestListenerBus.drain(sc)
+      GraftListenerBus.drain(sc)
       (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(l)
   }

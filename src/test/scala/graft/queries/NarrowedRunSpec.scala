@@ -5,11 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, SparkTestSession}
 
-/** A `SPARK_GRAFT_ONLY` run of two keys or fewer plans every query over
-  * the cleaned star join on the declarative [[Merged.cleaned]]; the full
-  * suite plans it on the memoized [[Merged.cleanedShared]]. Only the
-  * second plan meets the oracle, so each query must give the same rows
-  * on both.
+/** [[Merged]] offers the cleaned star join two ways: the declarative
+  * [[Merged.cleaned]], which a one-shot library caller plans with full
+  * scan pruning, and the memoized [[Merged.cleanedShared]], which the
+  * registry runs and the oracle checks. Each query over it must give the
+  * same rows on both.
   */
 class NarrowedRunSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -24,10 +24,10 @@ class NarrowedRunSpec extends AnyFunSuite {
 
   SparkEntry.overCleaned.foreach { case (name, query, _) =>
     test(s"$name: Merged.cleaned rows equal Merged.cleanedShared rows") {
-      val narrowed = canonical(query(Merged.cleaned(spark, sfDir)))
+      val declarative = canonical(query(Merged.cleaned(spark, sfDir)))
       val shared = canonical(query(Merged.cleanedShared(spark, sfDir)))
-      assert(narrowed._2.nonEmpty)
-      assert(narrowed == shared)
+      assert(declarative._2.nonEmpty)
+      assert(declarative == shared)
     }
   }
 }

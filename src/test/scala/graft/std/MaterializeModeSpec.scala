@@ -105,69 +105,27 @@ class MaterializeModeSpec extends AnyFunSuite {
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
   }
 
-  /** The r14 ADVICE hazard: a `once` inside `scoped` but dispatched to
-    * a worker thread registered UNSCOPED, so the scope's release left
-    * it pinned (and a later global releaseAll could drop it under a
-    * concurrent query). capturedScope/withScope closes the gap —
-    * worker-thread pins adopt the caller's token and release with the
-    * scoped block, exactly like same-thread pins.
+  /** Ownership is per thread: a `once` that a `scoped` block dispatches
+    * to a worker thread registers unscoped, so the scope's release
+    * leaves it pinned and the next `releaseAll` frees it.
     */
-  test("withScope(capturedScope()) makes worker-thread pins release " +
-    "with the enclosing scoped block") {
+  test("a worker-thread pin inside scoped registers unscoped and " +
+    "releaseAll frees it") {
     import spark.implicits._
-    def rddIdOf(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-      }
-    var adoptedId = -1
     var strayId = -1
     Materialize.scoped {
-      val token = Materialize.capturedScope()
       val t = new Thread(() => {
-        // adopted: releases when the scope exits
-        adoptedId = rddIdOf(Materialize.withScope(token) {
-          Materialize.once(Seq(1, 2).toDF("v"))
-        })
-        // unadopted control: stays pinned past the scope exit
-        strayId = rddIdOf(Materialize.once(Seq(3, 4).toDF("v")))
+        strayId = Materialize.once(Seq(3, 4).toDF("v"))
+          .queryExecution.logical match {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+          case other => fail(s"expected LogicalRDD, got ${other.getClass}")
+        }
       })
       t.start(); t.join()
-      assert(spark.sparkContext.getPersistentRDDs.contains(adoptedId))
     }
-    val live = spark.sparkContext.getPersistentRDDs
-    assert(!live.contains(adoptedId),
-      "adopted pin must release with its scope")
-    assert(live.contains(strayId),
-      "the unadopted control registers outside the scope")
+    assert(spark.sparkContext.getPersistentRDDs.contains(strayId),
+      "a worker-thread pin registers outside the scope")
     Materialize.releaseAll()
     assert(!spark.sparkContext.getPersistentRDDs.contains(strayId))
-  }
-
-  /** The r15 ADVICE hazard: a worker that adopts a scope token but
-    * registers AFTER the scoped block exited (an elbow-sweep training
-    * Future surviving its Await timeout) used to tag the pin with a
-    * dead token that neither the scope (already released) nor
-    * releaseAll (skips owner != null) would ever free. Registration
-    * now checks token LIVENESS and falls back to an unscoped pin, so
-    * the next releaseAll reclaims the straggler.
-    */
-  test("pins registered under a dead scope token fall back to " +
-    "unscoped and releaseAll reclaims them") {
-    import spark.implicits._
-    var token: AnyRef = null
-    Materialize.scoped { token = Materialize.capturedScope() }
-    // scope has exited: the token is dead
-    val late = Materialize.withScope(token) {
-      Materialize.once(Seq(5, 6).toDF("v"))
-    }
-    val lateId = late.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-    }
-    assert(spark.sparkContext.getPersistentRDDs.contains(lateId))
-    Materialize.releaseAll()
-    assert(!spark.sparkContext.getPersistentRDDs.contains(lateId),
-      "a dead-token pin must be reclaimable by releaseAll")
   }
 }
