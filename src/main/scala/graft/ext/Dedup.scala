@@ -451,12 +451,11 @@ object Dedup {
 
   /** Precomputed corpus-side dedup state: what a production pipeline
     * persists between increments (content digests, shingle arrays,
-    * MinHash signatures — [[bandKeysOf]] derives per-join). Frames are
-    * BARE eager checkpoints, deliberately outside the
-    * [[graft.std.Materialize]] pin registry so neither a per-query
-    * `releaseAll` nor a per-micro-batch `scoped` drops them while a
-    * stream is live; the owner calls [[IncrementalState.release]] when
-    * done.
+    * MinHash signatures — [[bandKeysOf]] derives per-join). Each frame
+    * is a [[graft.std.Materialize.pinUnregistered]] pin, kept out of the
+    * per-query registry so neither a per-query `releaseAll` nor a
+    * per-micro-batch `scoped` drops it while a stream is live; the
+    * state owns its pins and [[IncrementalState.release]] frees them.
     */
   final case class IncrementalState(k: Int, digests: DataFrame,
                                     shingles: DataFrame,
@@ -467,10 +466,10 @@ object Dedup {
   }
 
   /** Build [[IncrementalState]] for an existing (doc_id, text) corpus.
-    * Materialization honors `spark.graft.materialize.mode` (same switch
-    * as [[graft.std.Materialize.once]]): under `disk` the state frames
-    * keep lineage, so an executor lost mid-stream recomputes their
-    * partitions instead of killing the long-lived stream.
+    * The pins follow the materialize mode like every other pin: under
+    * `disk` the state frames keep lineage, so an executor lost
+    * mid-stream recomputes their partitions instead of killing the
+    * long-lived stream.
     */
   def corpusState(existingRaw: DataFrame, k: Int = 8): IncrementalState = {
     import graft.std.Materialize.{pinUnregistered, releasePin}
@@ -755,14 +754,17 @@ object Dedup {
     * chains of edits, not long paths).
     *
     * Driver-sync discipline: propagation rounds run in SUPERSTEPS of
-    * two — one eager `localCheckpoint` (truncates the growing lineage)
-    * and one convergence aggregate per two rounds, so the serial
-    * job-wave count is half that of the check-every-round form.
-    * Overshooting is free: min-propagation is monotone, so an extra
-    * round past the fixed point is a no-op. Each superstep unpersists
-    * the previous superstep's checkpoint blocks — without that a
-    * 10-round run leaves 10 generations of labels pinned in executor
-    * storage for the rest of the session (round-3's bench cliff).
+    * two — one [[graft.std.Materialize.pinUnregistered]] pin and one
+    * convergence aggregate per two rounds, so the serial job-wave count
+    * is half that of the check-every-round form. Overshooting is free:
+    * min-propagation is monotone, so an extra round past the fixed
+    * point is a no-op. Each superstep releases the previous
+    * superstep's pin, and the returned labels ride the last one, which
+    * is handed to the per-query registry: [[graft.std.Materialize
+    * .releaseAll]] (or the enclosing `scoped` block) frees it, and a
+    * caller that keeps the labels longer pins its own copy (the d5
+    * cluster memo does). The pins follow the materialize mode, so
+    * `disk` mode covers the whole loop.
     *
     * Convergence: for numeric ids, the label sum (exact DECIMAL) —
     * min-propagation only ever decreases a label, so the sum is
@@ -777,21 +779,27 @@ object Dedup {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 20,
                           idCol: String = "doc_id"): DataFrame = {
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+    import graft.std.Materialize.{pinUnregistered, register, releasePin}
+    // every edge both ways plus a self-loop per id, so ONE join hands a
+    // node its own label and its neighbors'; a round then reads the
+    // previous labels once, and a lineage-keeping (`disk`) pin's plan
+    // grows linearly in the rounds instead of doubling per round
+    val both = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
+    val sym = pinUnregistered(both.unionByName(
+      both.select(col("src"))
+        .unionByName(nodes.select(col(idCol).as("src"))).distinct()
+        .select(col("src"), col("src").as("dst"))))
     val numericId = nodes.schema(idCol).dataType
       .isInstanceOf[org.apache.spark.sql.types.NumericType]
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
-    def propagate(l: DataFrame): DataFrame = {
-      val nbr = l.join(sym, l(idCol) === sym("src"))
-        .select(col("dst").as(idCol), col("label"))
-      l.unionByName(nbr).groupBy(col(idCol)).agg(min("label").as("label"))
-    }
-    var labels = nodes.select(col(idCol), col(idCol).as("label"))
-      .localCheckpoint(true)
+    def propagate(l: DataFrame): DataFrame =
+      l.join(sym, l(idCol) === sym("src"))
+        .groupBy(col("dst").as(idCol)).agg(min("label").as("label"))
+    var labels = pinUnregistered(
+      nodes.select(col(idCol), col(idCol).as("label")))
     var prevSum = if (numericId) labelSum(labels) else null
     var converged = false
     var done = 0
@@ -804,7 +812,7 @@ object Dedup {
       val rounds = math.min(2, maxIter + 2 - done)
       var cur = labels
       (0 until rounds).foreach(_ => cur = propagate(cur))
-      val next = cur.localCheckpoint(true)
+      val next = pinUnregistered(cur)
       if (numericId) {
         val curSum = labelSum(next)
         converged = curSum.compareTo(prevSum) == 0
@@ -814,11 +822,12 @@ object Dedup {
           .join(labels.as("p"), col(s"n.$idCol") === col(s"p.$idCol"))
           .filter(col("n.label") =!= col("p.label")).isEmpty
       }
-      graft.std.Materialize.releaseCheckpoint(labels)
+      releasePin(labels)
       labels = next
       done += rounds
     }
-    graft.std.Materialize.releaseCheckpoint(sym)
+    releasePin(sym)
+    register(labels)
     // Partial labels are silently wrong (a diameter->maxIter component
     // would split into several clusters in a data-dependent way); fail
     // loudly instead of returning them.
@@ -843,50 +852,55 @@ object Dedup {
     * only stable states are star forests rooted at component minima, so
     * an unchanged edge set IS convergence (checked exactly via a set
     * compare — the potential argument makes false positives impossible,
-    * no hashing involved). Per superstep: two groupBy+join rounds over
-    * the current edge set, each keyed on the node id; edge count never
-    * exceeds the input's, and the previous superstep's checkpoint is
-    * released like the sibling's.
+    * no hashing involved). Per superstep: two per-node minimum rounds
+    * (a window partitioned on the node id) over the current edge set;
+    * edge count never exceeds the input's. Pins follow the sibling's lifecycle: each
+    * superstep releases the previous one's, and the last one, which the
+    * returned labels read, goes to the per-query registry.
     */
   def connectedComponentsStars(nodes: DataFrame, edges: DataFrame,
                                maxIter: Int = 20,
                                idCol: String = "doc_id"): DataFrame = {
-    def sym(e: DataFrame): DataFrame = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst")))
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      val m = s.groupBy(col("src")).agg(min(col("dst")).as("_mn"))
-        .select(col("src").as("_u"), least(col("_mn"), col("src")).as("_m"))
-      s.join(m, col("src") === col("_u"))
+    // Each step reads its input edge set ONCE — both directions come
+    // from one explode, the per-node minimum from a window instead of a
+    // self-join — so a lineage-keeping (`disk`) pin's plan grows
+    // linearly in the supersteps instead of 16× per superstep.
+    def unfold(df: DataFrame, pairs: Column*): DataFrame =
+      df.select(explode(array(pairs: _*)).as("_e"))
+        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
+    def pair(src: Column, dst: Column): Column =
+      struct(src.as("src"), dst.as("dst"))
+    val bySrc = Window.partitionBy(col("src"))
+    def sym(e: DataFrame): DataFrame =
+      unfold(e, pair(col("src"), col("dst")), pair(col("dst"), col("src")))
+    def largeStar(e: DataFrame): DataFrame =
+      sym(e)
+        .withColumn("_m", least(min(col("dst")).over(bySrc), col("src")))
         .where(col("dst") > col("src"))
         .select(col("dst").as("src"), col("_m").as("dst"))
         .where(col("src") =!= col("dst"))
         .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val s = sym(e).where(col("dst") < col("src"))
-      val m = s.groupBy(col("src")).agg(min(col("dst")).as("_mn"))
-        .select(col("src").as("_u"), col("_mn").as("_m"))
-      val j = s.join(m, col("src") === col("_u"))
-      j.where(col("dst") =!= col("_m"))
-        .select(col("dst").as("src"), col("_m").as("dst"))
-        .unionByName(j.select(col("src"), col("_m").as("dst")))
+    // a (dst, m) pair with dst == m is dropped by the src != dst filter
+    def smallStar(e: DataFrame): DataFrame =
+      unfold(sym(e).where(col("dst") < col("src"))
+          .withColumn("_m", min(col("dst")).over(bySrc)),
+        pair(col("dst"), col("_m")), pair(col("src"), col("_m")))
         .where(col("src") =!= col("dst"))
         .distinct()
-    }
-    var cur = edges
+    import graft.std.Materialize.{pinUnregistered, register, releasePin}
+    var cur = pinUnregistered(edges
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .where(col("src") =!= col("dst")).distinct())
     var converged = cur.isEmpty
     var i = 0
     while (!converged && i < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(true)
+      val next = pinUnregistered(smallStar(largeStar(cur)))
       converged = next.count() == cur.count() && next.except(cur).isEmpty
-      graft.std.Materialize.releaseCheckpoint(cur)
+      releasePin(cur)
       cur = next
       i += 1
     }
+    register(cur)
     require(converged,
       s"connectedComponentsStars did not converge after $maxIter " +
         "supersteps — raise maxIter (expected O(log^2 n))")

@@ -137,20 +137,17 @@ object ExtQueries {
   }
 
   /** Session-scoped memo of [[clustersOf]] over the injected near-dup
-    * corpus, keyed by (session, sfDir). d5/d6/d7 are three oracle views
-    * of ONE resolution pipeline; without the memo a 62-query session
-    * runs the MinHash→LSH→verify→CC chain three times (~2/3 of the
-    * round-3 dedup bench block was exactly this). The memo'd frame is
-    * backed by connectedComponents' final checkpoint — self-contained
-    * (lineage truncated) and tiny (one (id, rep, bool) row per doc), so
+    * corpus, keyed by (session, sfDir). d5/d6/d7/d12/d14 are views of
+    * ONE resolution pipeline; without the memo a session runs the
+    * MinHash→LSH→verify→CC chain once per view. The memo pins the
+    * cluster frame itself — tiny (one (id, rep, bool) row per doc), so
     * holding it for the session is deliberate; the pipeline's bulky
-    * intermediates (shingles, signatures) are registered pins that
-    * [[graft.std.Materialize.releaseAll]] frees after the query.
+    * intermediates (shingles, signatures, the CC labels) are registered
+    * pins that [[graft.std.Materialize.releaseAll]] frees after the
+    * query.
     */
-  private val clusterMemo = new graft.std.SessionMemo()
-
   private def sharedClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clusterMemo.getOrBuild(spark, s"clusters|$sfDir")(
+    graft.std.SessionMemo.getOrBuild(spark, s"clusters|$sfDir")(
       clustersOf(nearDupCorpus(Tables.documents(spark, sfDir))))
 
   /** Full dedup resolution (d5): MinHash→LSH→verify pairs, then
@@ -158,8 +155,8 @@ object ExtQueries {
     * representative (min doc_id in component) and keep/drop decision.
     *
     * SNAPSHOT SEMANTICS: reads the session's memoized cluster
-    * resolution ([[clusterMemo]]) — data as of its first build per
-    * (session, sfDir); release via [[releaseMemos]].
+    * resolution ([[sharedClusters]]) — data as of its first build per
+    * (session, sfDir); see [[graft.std.SessionMemo]].
     */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     sharedClusters(spark, sfDir)
@@ -172,8 +169,8 @@ object ExtQueries {
     * doc-keyed counterfactual as the audit column.
     *
     * SNAPSHOT SEMANTICS: reads the session's memoized cluster
-    * resolution ([[clusterMemo]]) — data as of its first build per
-    * (session, sfDir); release via [[releaseMemos]].
+    * resolution ([[sharedClusters]]) — data as of its first build per
+    * (session, sfDir); see [[graft.std.SessionMemo]].
     */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame = {
     Dedup.leakageSafeSplit(sharedClusters(spark, sfDir))
@@ -186,8 +183,8 @@ object ExtQueries {
     * shuffle) — only the cluster resolution is worth memoizing.
     *
     * SNAPSHOT SEMANTICS: reads the session's memoized cluster
-    * resolution ([[clusterMemo]]) — data as of its first build per
-    * (session, sfDir); release via [[releaseMemos]].
+    * resolution ([[sharedClusters]]) — data as of its first build per
+    * (session, sfDir); see [[graft.std.SessionMemo]].
     */
   def dedupSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
     val keepers = sharedClusters(spark, sfDir)
@@ -201,8 +198,8 @@ object ExtQueries {
     * — the audit trail a curation pipeline keeps of what dedup removed.
     *
     * SNAPSHOT SEMANTICS: reads the session's memoized cluster
-    * resolution ([[clusterMemo]]) — data as of its first build per
-    * (session, sfDir); release via [[releaseMemos]].
+    * resolution ([[sharedClusters]]) — data as of its first build per
+    * (session, sfDir); see [[graft.std.SessionMemo]].
     */
   def dedupDropped(spark: SparkSession, sfDir: String): DataFrame = {
     val keepers = sharedClusters(spark, sfDir)
@@ -216,7 +213,7 @@ object ExtQueries {
     * cluster, keep the HIGHEST-QUALITY document instead of d5's min-id
     * representative — what a production dedup actually does (the first
     * crawl of a page is not necessarily the best extraction of it).
-    * Reuses the session's one cluster resolution ([[clusterMemo]]) and
+    * Reuses the session's one cluster resolution ([[sharedClusters]]) and
     * ranks by the same composite score t3 reports
     * ([[TextAnalysis.qualityScoreExpr]], rounded 6 dp so the ranking is
     * cross-engine deterministic; doc_id breaks ties). The window
@@ -224,8 +221,8 @@ object ExtQueries {
     * construction (near-dup groups), so no partition is hot at scale.
     *
     * SNAPSHOT SEMANTICS: reads the session's memoized cluster
-    * resolution ([[clusterMemo]]) — data as of its first build per
-    * (session, sfDir); release via [[releaseMemos]].
+    * resolution ([[sharedClusters]]) — data as of its first build per
+    * (session, sfDir); see [[graft.std.SessionMemo]].
     */
   def bestKeeperClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = nearDupCorpus(Tables.documents(spark, sfDir))
@@ -244,33 +241,21 @@ object ExtQueries {
   }
 
   /** Session-scoped memo of the d8 contamination profile, keyed
-    * (session, sfDir) — same pattern as [[clusterMemo]]. d8 and t23 are
-    * two views of ONE profile pass (t23 quarantines exactly the docs d8
-    * scores ≥ 0.2), so without the memo a full session shingles and
-    * broadcast-joins the corpus twice. The memo'd frame is pinned
-    * UNREGISTERED (one thin row per corpus doc) so the per-query
-    * [[graft.std.Materialize.releaseAll]] can't drop it mid-session;
-    * the shingle intermediates die with the materializing action.
+    * (session, sfDir) — same pattern as [[sharedClusters]]. d8 and t23
+    * are two views of ONE profile pass (t23 quarantines exactly the docs
+    * d8 scores ≥ 0.2), so without the memo a full session shingles and
+    * broadcast-joins the corpus twice. The memo pins one thin row per
+    * corpus doc; the shingle intermediates die with the materializing
+    * action.
     */
-  private val profileMemo = new graft.std.SessionMemo()
-
-  /** Release this session's ext-query memos (cluster resolution +
-    * contamination profile) — see [[graft.std.SessionMemo]] for the
-    * lifecycle; also reachable via `SessionMemo.releaseSession`.
-    */
-  def releaseMemos(spark: SparkSession): Unit = {
-    clusterMemo.release(spark); profileMemo.release(spark)
-  }
-
   private def sharedContaminationProfile(
       spark: SparkSession, sfDir: String): DataFrame =
-    profileMemo.getOrBuild(spark, s"profile|$sfDir") {
+    graft.std.SessionMemo.getOrBuild(spark, s"profile|$sfDir") {
       val withSh = shingled(Tables.documents(spark, sfDir),
         TextOps.tokens(col("text")))
-      graft.std.Materialize.pinUnregistered(
-        Dedup.contaminationProfile(
-          withSh.filter(col("doc_id") % 31 =!= 0),
-          withSh.filter(col("doc_id") % 31 === 0)))
+      Dedup.contaminationProfile(
+        withSh.filter(col("doc_id") % 31 =!= 0),
+        withSh.filter(col("doc_id") % 31 === 0))
     }
 
   /** Decontamination audit (d8): every 31st doc is the "benchmark"; the
@@ -591,20 +576,16 @@ object ExtQueries {
     * the injected vector corpus — s4 and the d11 closure are two oracle
     * views of ONE candidate+verify pass, so a full session should run
     * the bucketed join once. Same [[graft.std.SessionMemo]] lifecycle
-    * and snapshot semantics as [[clusterMemo]]; the pinned frame is
+    * and snapshot semantics as [[sharedClusters]]; the pinned frame is
     * thin (id_a, id_b, cosine).
     */
-  private val pairsMemo = new graft.std.SessionMemo()
-
   private def sharedLshPairs(spark: SparkSession, sfDir: String): DataFrame =
-    pairsMemo.getOrBuild(spark, s"lshpairs|$sfDir")(
-      graft.std.Materialize.pinUnregistered(
-        // dims=64 (the corpus' schema-level embedding width) switches
-        // the bucket projections to literal planes + the native dot
-        // kernel
-        Similarity.lshNearDupPairs(
-          nearDupVectors(Tables.embeddings(spark, sfDir)), 0.97,
-          dims = Some(64))))
+    graft.std.SessionMemo.getOrBuild(spark, s"lshpairs|$sfDir")(
+      // dims=64 (the corpus' schema-level embedding width) switches the
+      // bucket projections to literal planes + the native dot kernel
+      Similarity.lshNearDupPairs(
+        nearDupVectors(Tables.embeddings(spark, sfDir)), 0.97,
+        dims = Some(64)))
 
   def lshEmbeddingNearDups(spark: SparkSession, sfDir: String): DataFrame = {
     sharedLshPairs(spark, sfDir)
@@ -1484,17 +1465,14 @@ object ExtQueries {
     * stored, and the scorer (x63) / refiner (x64) consume that STORED
     * partition. x34 itself stays pure — it is the operator being
     * priced; these two queries price the score/refine dataflow over
-    * its artifact. Entries are pinned self-contained frames released
-    * by `SessionMemo.releaseSession` in driver/test teardown.
+    * its artifact. The memo pins the partition and
+    * `SessionMemo.releaseSession` frees it in driver/test teardown.
     */
-  private val labelMemo = new graft.std.SessionMemo()
   private def chainLpaLabels(spark: SparkSession,
                              sfDir: String): DataFrame =
-    labelMemo.getOrBuild(spark, s"lpa|chain|$sfDir")(
-      graft.std.Materialize.pinUnregistered(
-        Graph.labelPropagation(chainGraphEdges(spark, sfDir),
-            iterations = 3)
-          .select(col("node"), col("community"))))
+    graft.std.SessionMemo.getOrBuild(spark, s"lpa|chain|$sfDir")(
+      Graph.labelPropagation(chainGraphEdges(spark, sfDir), iterations = 3)
+        .select(col("node"), col("community")))
 
   /** Community modularity (x63): [[Graph.modularity]] scoring the x34
     * label-propagation partition of the chain graph — did 3 LPA
@@ -2206,10 +2184,10 @@ object ExtQueries {
     * Memo discipline under composition: the span-cleaned corpus is
     * pinned ONCE ([[graft.std.Materialize.once]]) before fan-out —
     * the cluster chain consumes it twice (shingles + the component
-    * seed) and the split/order tail reads the cluster frame (itself
-    * backed by connectedComponents' final checkpoint), so the final
-    * plan contains NO second span-window explode and NO second
-    * MinHash chain (asserted in `CurationPipelineSpec`).
+    * seed) and the split/order tail reads the cluster frame (riding
+    * the pinned CC labels), so the final plan contains NO second
+    * span-window explode and NO second MinHash chain (asserted in
+    * `CurationPipelineSpec`).
     */
   def curationTrainPipeline(spark: SparkSession,
                            sfDir: String): DataFrame = {
@@ -2415,40 +2393,6 @@ object ExtQueries {
         (t, i) => (i + 1) % IncPairDrop =!= 0)).as("text")))
   }
 
-  /** Session memo of the standing curation artifacts — what the daily
-    * production pipeline keeps MATERIALIZED between crawls: the
-    * span-window index, the cleaned corpus, its shingles + MinHash
-    * signatures (the d9 "existing side's keys" discipline), and the
-    * cluster resolution. Built once per (session, sfDir, span policy)
-    * from the policy's own composite tiers — each span tier cleans the
-    * standing corpus differently, so its standing state is a distinct
-    * artifact under a policy-suffixed tag (exact keeps the unsuffixed
-    * r18 tags); every increment run consumes the checkpoints (memo
-    * counters make a rebuild machine-visible in the bench record).
-    */
-  private val curationMemo = new graft.std.SessionMemo()
-
-  private def curationStanding(spark: SparkSession, memoTag: String,
-                               tag: String)(build: => DataFrame): DataFrame =
-    curationMemo.getOrBuild(spark, s"curation_$tag|$memoTag")(
-      graft.std.Materialize.pinUnregistered(build))
-
-  /** [[curationStanding]] with the pin kept hash-partitioned on `key`
-    * ([[graft.std.Materialize.pinUnregisteredBy]]): the standing
-    * fingerprint indexes are consumed through an equi-join on `span_h`
-    * by EVERY warm increment run, and the plain pin's lost
-    * partitioning re-shuffled the whole index (O(standing) rows) per
-    * crawl — the r20 probe's warm-growth pathology. Partitioned pins
-    * make the lookup join exchange-free on the standing side, so the
-    * warm join moves O(increment) rows only (guide §2.4/§6; the
-    * at-scale form is the same index hash-bucketed on disk).
-    */
-  private def curationStandingBy(spark: SparkSession, memoTag: String,
-                                 tag: String, keys: String*)
-                                (build: => DataFrame): DataFrame =
-    curationMemo.getOrBuild(spark, s"curation_$tag|$memoTag")(
-      graft.std.Materialize.pinUnregisteredBy(build, keys.map(col): _*))
-
   /** Incremental curation (pipeline_curation_increment): the v2 crawl
     * increment flows through the SAME four tiers as pipeline_curation
     * — span dedup → cluster resolution → leakage-safe split → train
@@ -2558,9 +2502,20 @@ object ExtQueries {
       incRaw, chrome, span)
 
   /** The materialized standing state a daily curation pipeline keeps
-    * between crawls — every frame a session-memoized checkpoint:
+    * between crawls — every frame a [[graft.std.SessionMemo]] pin:
     * cleaned corpus, span-fingerprint index, shingles, MinHash
-    * signatures, cluster resolution, per-(epoch, shard) train fill.
+    * signatures, LSH band keys, cluster resolution, per-(epoch, shard)
+    * train fill. Built once per (session, memoTag, policy); every
+    * increment run consumes the pins, and the memo counters make a
+    * rebuild machine-visible in the bench record.
+    *
+    * The fingerprint index, the shingles and the band keys are pinned
+    * hash-partitioned on the key every warm increment equi-joins them
+    * on (`span_h`, `doc_id`, (`band`, `key`)): an unpartitioned pin
+    * re-shuffled the whole standing side (O(standing) rows) per crawl,
+    * while a partitioned one leaves the lookup join exchange-free on
+    * the standing side, so a warm crawl moves O(increment) rows only
+    * (the at-scale form is the same index hash-bucketed on disk).
     */
   private case class CurationState(clean: DataFrame, spanIdx: DataFrame,
                                    shingles: DataFrame, sigs: DataFrame,
@@ -2569,9 +2524,9 @@ object ExtQueries {
 
   /** Per-policy memo tag: each span tier cleans the standing corpus
     * differently, so its materialized state is a distinct artifact
-    * (exact keeps the unsuffixed r18 tags for bench-record continuity).
+    * (exact keeps the unsuffixed tags for bench-record continuity).
     *
-    * The CHROME knob is part of the key too (r20 advice): chrome and
+    * The CHROME knob is part of the key too: chrome and
     * span are independent public parameters of
     * [[curationTrainPipelineIncrementFrom]], and two calls sharing a
     * memoTag+span but differing in chrome would otherwise silently
@@ -2588,6 +2543,11 @@ object ExtQueries {
     if (canonicalChrome.get(span).contains(chrome)) base
     else s"${base}_c_$chrome"
   }
+
+  /** [[graft.std.SessionMemo]] tag of one standing-state artifact. */
+  private def standingTag(memoTag: String, span: String, chrome: String,
+                          t: String): String =
+    s"curation_${polTag(span, chrome, t)}|$memoTag"
 
   /** The policy's standing fingerprint index over an injected corpus. */
   private def curationIndexOf(injected: DataFrame, span: String): DataFrame =
@@ -2606,36 +2566,34 @@ object ExtQueries {
   private def curationStandingState(spark: SparkSession, memoTag: String,
                                     standingRaw: DataFrame, chrome: String,
                                     span: String): CurationState = {
-    def tag(t: String) = polTag(span, chrome, t)
+    def memo(t: String, keys: String*)(b: => DataFrame) =
+      graft.std.SessionMemo.getOrBuild(spark,
+        standingTag(memoTag, span, chrome, t), keys.map(col): _*)(b)
     val standingInjected = curationChromeInjected(standingRaw, chrome)
-    val standingClean = curationStanding(spark, memoTag, tag("clean"))(
+    val standingClean = memo("clean")(
       curationCleanedCorpus(standingRaw, chrome, span)
         .filter(col("text") =!= ""))
-    val standingSpanIdx = curationStandingBy(spark, memoTag,
-      tag("spanidx"), "span_h")(curationIndexOf(standingInjected, span))
-    // shingles pinned doc_id-partitioned: every warm crawl's verify
-    // join ([[Dedup.verifiedCrossNearDups]]) attaches the standing
-    // shingle arrays by doc id — the widest standing rows, which the
-    // unpartitioned pin re-shuffled per crawl
-    val standingShingles = curationStandingBy(spark, memoTag,
-      tag("shingles"), "doc_id")(Dedup.shingleFrame(standingClean))
-    val standingSigs = curationStanding(spark, memoTag, tag("sigs"))(
-      Dedup.minHashSignatures(standingShingles, 8))
-    // the standing LSH band keys, (band, key)-partitioned — what the
-    // d9 discipline says a production pipeline keeps materialized
-    // between increments (bucketed on the probe key at 100 TB), so the
-    // warm cross-LSH join shuffles only the increment's keys
-    val standingBandKeys = curationStandingBy(spark, memoTag,
-      tag("bandkeys"), "band", "key")(
+    val standingSpanIdx =
+      memo("spanidx", "span_h")(curationIndexOf(standingInjected, span))
+    // every warm crawl's verify join ([[Dedup.verifiedCrossNearDups]])
+    // attaches the standing shingle arrays — the widest standing rows —
+    // by doc id
+    val standingShingles =
+      memo("shingles", "doc_id")(Dedup.shingleFrame(standingClean))
+    val standingSigs =
+      memo("sigs")(Dedup.minHashSignatures(standingShingles, 8))
+    // the standing LSH band keys — what the d9 discipline says a
+    // production pipeline keeps materialized between increments, so
+    // the warm cross-LSH join shuffles only the increment's keys
+    val standingBandKeys = memo("bandkeys", "band", "key")(
       Dedup.bandKeysOf(standingSigs, 8, 4))
-    val clusters =
-      curationMemo.getOrBuild(spark, s"curation_${tag("clusters")}|$memoTag")(
-        clustersOf(standingClean, standingShingles, standingSigs))
+    val clusters = memo("clusters")(
+      clustersOf(standingClean, standingShingles, standingSigs))
     // standing per-(epoch, shard) fill — 16 rows, itself part of the
     // materialized standing state (recomputing it would re-window the
     // whole standing train order per crawl: an O(standing) cost the
     // probe caught riding every warm run), broadcast into the append
-    val stdMax = curationStanding(spark, memoTag, tag("stdfill"))(
+    val stdMax = memo("stdfill")(
       TextAnalysis.trainOrder(curationTrainKeepers(clusters))
         .groupBy(col("epoch"), col("shard"))
         .agg(count(lit(1)).as("_npos")))
@@ -2744,8 +2702,9 @@ object ExtQueries {
                                     st: CurationState, inc1Raw: DataFrame,
                                     chrome: String,
                                     span: String): CurationState = {
-    def adv(t: String)(b: => DataFrame) =
-      curationStanding(spark, memoTag, polTag(span, chrome, s"adv_$t"))(b)
+    def adv(t: String, keys: String*)(b: => DataFrame) =
+      graft.std.SessionMemo.getOrBuild(spark,
+        standingTag(memoTag, span, chrome, s"adv_$t"), keys.map(col): _*)(b)
     // day 1's increment tiers, shared lazily across the six builders —
     // on a memo hit no builder runs and none of this is computed
     lazy val (clean1, clusters1) =
@@ -2758,18 +2717,14 @@ object ExtQueries {
     val cleanA = adv("clean")(st.clean.unionByName(clean1))
     // the advanced index is the day-2 lookup join's standing side —
     // same span_h-partitioned pin as the day-0 index
-    val idxA = curationStandingBy(spark, memoTag,
-      polTag(span, chrome, "adv_spanidx"), "span_h")(
+    val idxA = adv("spanidx", "span_h")(
       TextAnalysis.indexMerge(st.spanIdx,
         curationIndexOf(curationChromeInjected(inc1Raw, chrome), span)))
-    val shinglesA = curationStandingBy(spark, memoTag,
-      polTag(span, chrome, "adv_shingles"), "doc_id")(
-      st.shingles.unionByName(sh1))
+    val shinglesA = adv("shingles", "doc_id")(st.shingles.unionByName(sh1))
     val sigsA = adv("sigs")(st.sigs.unionByName(sig1))
     // band keys advance by union (a per-row derivation of the sigs:
     // union distributes over it), keeping the (band, key) pin
-    val bandKeysA = curationStandingBy(spark, memoTag,
-      polTag(span, chrome, "adv_bandkeys"), "band", "key")(
+    val bandKeysA = adv("bandkeys", "band", "key")(
       st.bandKeys.unionByName(Dedup.bandKeysOf(sig1, 8, 4)))
     val clustersA = adv("clusters")(st.clusters.unionByName(clusters1))
     val fillA = adv("stdfill")(

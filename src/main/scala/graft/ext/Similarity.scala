@@ -1159,25 +1159,20 @@ object Similarity {
       .select(col("_vid"), col("_sub"), col("_a._cw").as("_cw"),
         col("_a._dist").as("_dist"), col("_a._nd").as("_nd"))
 
-  /** Session memo for trained quantizers — the d5–d7 lifecycle applied
-    * to the ANN index: in production the index is trained ONCE at
-    * write time and queried many times, so the drivers' per-query
-    * re-training was pure waste (at sf0.1 the coarse quantizer alone
-    * costs ~5 s and six queries trained it independently). Keyed by a
-    * caller tag naming the CORPUS (the kernel appends m/k/iters/seed);
-    * entries are self-contained frames (the codebook is a local
-    * relation, the assignment a pin) released by
-    * `SessionMemo.releaseSession` in driver/test teardown. Callers
-    * that need re-train-on-every-call semantics pass no tag — the
-    * kernels stay pure by default.
-    */
-  private val trainMemo = new graft.std.SessionMemo()
-
-  /** One-chain [[kmeansLoop]] behind the session memo. `v` is by-name:
-    * a memo hit never builds the training frame. A lost build race
-    * pins and releases per [[graft.std.SessionMemo]]; a cb-present/
-    * assign-missing partial state re-trains, and determinism (same
-    * input → bit-identical codebook) keeps the pair consistent.
+  /** One-chain [[kmeansLoop]] behind the session memo — the d5–d7
+    * lifecycle applied to the ANN index: in production the index is
+    * trained ONCE at write time and queried many times, so per-query
+    * re-training is pure waste (at sf0.1 the coarse quantizer alone
+    * costs ~5 s and six queries train it). Keyed by a caller tag naming
+    * the CORPUS (the kernel appends m/k/iters/seed); the codebook is a
+    * local relation the memo stores as it is, the assignment a memo
+    * pin, both freed by `SessionMemo.releaseSession` in driver/test
+    * teardown. Callers that need re-train-on-every-call semantics pass
+    * no tag — the kernels stay pure by default.
+    *
+    * `v` is by-name: a memo hit never builds the training frame. A
+    * cb-present/assign-missing partial state re-trains, and determinism
+    * (same input → bit-identical codebook) keeps the pair consistent.
     */
   private def kmeansLoopShared(spark: SparkSession, v: => DataFrame,
                                subspaces: Int, k: Int, iters: Int,
@@ -1188,9 +1183,9 @@ object Similarity {
       case None => built
       case Some(tag) =>
         val key = s"kmeans|$tag|m=$subspaces|k=$k|i=$iters|s=$seedTag"
-        val cb = trainMemo.getOrBuild(spark, key + "|cb")(built._1)
-        val assign = trainMemo.getOrBuild(spark, key + "|assign")(
-          graft.std.Materialize.pinUnregistered(built._2))
+        val cb = graft.std.SessionMemo.getOrBuild(spark, key + "|cb")(built._1)
+        val assign =
+          graft.std.SessionMemo.getOrBuild(spark, key + "|assign")(built._2)
         (cb, assign)
     }
   }
@@ -1693,10 +1688,8 @@ object Similarity {
         }
         val key = s"encode|$tag|c=$cells|ci=$cellIters|" +
           s"m=$subspaces|cw=$codewords|pi=$pqIters"
-        (trainMemo.getOrBuild(spark, key + "|cells")(
-          graft.std.Materialize.pinUnregistered(b._1)),
-          trainMemo.getOrBuild(spark, key + "|codes")(
-            graft.std.Materialize.pinUnregistered(b._2)))
+        (graft.std.SessionMemo.getOrBuild(spark, key + "|cells")(b._1),
+          graft.std.SessionMemo.getOrBuild(spark, key + "|codes")(b._2))
     }
     ivfPqQueryPath(queries, cellCb, pqCb, cellOf, codes, k, nprobe,
       subspaces, idCol, vecCol)

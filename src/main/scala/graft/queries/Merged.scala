@@ -88,29 +88,28 @@ object Merged {
     * query was ~10 redundant 6-table joins per bench run. The memo'd
     * frame is already the union column set every consumer projects
     * from, so per-consumer pruning loses nothing downstream of the pin;
-    * it is pinned UNREGISTERED (outside [[graft.std.Materialize]]'s
-    * per-query release) and freed by [[releaseShared]] / session stop.
+    * [[graft.std.SessionMemo]] pins it outside the per-query release
+    * and frees it at [[releaseShared]] / session teardown.
     *
     * 100-TB note: this is a single-session working-set optimization —
-    * `spark.graft.materialize.mode=disk` keeps it lineage-recoverable
-    * on a real cluster, and a one-shot query on a cluster simply calls
+    * `disk` materialize mode keeps it lineage-recoverable on a real
+    * cluster, and a one-shot query on a cluster simply calls
     * [[cleaned]] and keeps full scan pruning.
-    */
-  private val cleanedMemo = new graft.std.SessionMemo()
-
-  /** SNAPSHOT SEMANTICS: returns the data as of the first call per
-    * (session, sfDir) — the pin truncates lineage, so later changes to
-    * the parquet under `sfDir` are invisible until [[releaseShared]] or
+    *
+    * SNAPSHOT SEMANTICS: returns the data as of the first call per
+    * (session, sfDir) — the pin fixes it, so later changes to the
+    * parquet under `sfDir` are invisible until [[releaseShared]] or
     * session stop. Callers needing re-read-per-query semantics use
     * [[cleaned]].
     */
   def cleanedShared(spark: SparkSession, sfDir: String): DataFrame =
-    cleanedMemo.getOrBuild(spark, s"cleaned|$sfDir")(
-      graft.std.Materialize.pinUnregistered(cleaned(spark, sfDir)))
+    graft.std.SessionMemo.getOrBuild(spark, s"cleaned|$sfDir")(
+      cleaned(spark, sfDir))
 
   /** Drop a session's memoized cleaned frames (test/benchmark hygiene;
-    * also reachable via [[graft.std.SessionMemo.releaseSession]], which
-    * Bench/Verify call at teardown).
+    * [[graft.std.SessionMemo.releaseSession]] without a tag filter, which
+    * Bench/Verify call at teardown, frees them too).
     */
-  def releaseShared(spark: SparkSession): Unit = cleanedMemo.release(spark)
+  def releaseShared(spark: SparkSession): Unit =
+    graft.std.SessionMemo.releaseSession(spark, _.startsWith("cleaned|"))
 }

@@ -1,6 +1,7 @@
 package graft.std
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftPins}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -16,28 +17,34 @@ import org.apache.spark.storage.StorageLevel
   * fire. Pinning the frame makes the cost deterministic: compute once,
   * read N times.
   *
-  * Two mechanisms, selected by the session conf
-  * `spark.graft.materialize.mode`:
+  * Every pin in the engine has one lifecycle:
   *
-  *  - `local` (default): `localCheckpoint(eager)` — executor-local
-  *    blocks, lineage truncated. Fastest on a single-node runner, but a
-  *    lost executor is unrecoverable, so it is the LOCAL mode.
-  *  - `disk`: `persist(DISK_ONLY)` + a materializing action — lineage is
-  *    kept, so on a multi-executor cluster a lost executor's partitions
-  *    recompute from source instead of failing the job. This is the
-  *    cluster-safe mode (a parquet intermediate would additionally
-  *    survive driver restarts; DISK_ONLY keeps the same API surface).
+  *  - [[pinUnregistered]] builds it. It is the one reader of the session
+  *    conf `spark.graft.materialize.mode`:
+  *    - `local` (default): `localCheckpoint(eager)` — executor-local
+  *      blocks, lineage truncated. Fastest on a single-node runner, but
+  *      a lost executor is unrecoverable, so it is the LOCAL mode.
+  *    - `disk`: DISK_ONLY blocks that keep their lineage, so on a
+  *      multi-executor cluster a lost executor's partitions recompute
+  *      from source instead of failing the job
+  *      ([[org.apache.spark.sql.GraftPins.persistRows]]; the keyed form
+  *      is a `persist(DISK_ONLY)` repartition).
+  *  - [[releasePin]] frees it, whichever mechanism built it.
+  *  - Its owner decides when: a per-query pin is handed to the registry
+  *    ([[once]] / [[register]]) and freed by [[releaseAll]] or the
+  *    enclosing [[scoped]] block; a frame that outlives the query is
+  *    held by [[SessionMemo]] (which pins its own entries) or by an
+  *    explicit owner such as `Dedup.IncrementalState`.
   *
   * Call sites only rely on the materialize-once contract, not on the
-  * mechanism — `MaterializeModeSpec` proves the dedup pipeline emits
-  * identical rows under both.
+  * mechanism — `MaterializeModeSpec` proves the pinned pipelines emit
+  * identical rows under both modes.
   *
-  * Every pin is REGISTERED, and the per-query drivers ([[graft.Bench]],
-  * [[graft.Verify]]) call [[releaseAll]] after each query's action:
-  * without that, eagerly-stored blocks accumulate across a 60-query
-  * session, the storage pool squeezes execution memory, and late
-  * queries nondeterministically spill (round-3 bench: two identical
-  * pipelines at 6 s and 69 s — the slow one ran last).
+  * The per-query drivers ([[graft.Bench]], [[graft.Verify]]) call
+  * [[releaseAll]] after each query's action: without that,
+  * eagerly-stored blocks accumulate across a session, the storage pool
+  * squeezes execution memory, and late queries nondeterministically
+  * spill.
   */
 object Materialize {
 
@@ -48,124 +55,88 @@ object Materialize {
     * checkpoint blocks (and vice versa).
     */
   private val pins =
-    scala.collection.mutable.ListBuffer.empty[(AnyRef, () => Unit)]
+    scala.collection.mutable.ListBuffer.empty[(AnyRef, DataFrame)]
 
   private val owner = new ThreadLocal[AnyRef]
 
-  private def register(release: () => Unit): Unit =
-    synchronized { pins += ((owner.get(), release)) }
-
   /** Compute `df` once and return a frame whose reads never re-execute
-    * the upstream plan. The pin is held until [[releaseAll]].
+    * the upstream plan. The pin is held until [[releaseAll]] (or the end
+    * of the enclosing [[scoped]] block).
     */
-  def once(df: DataFrame): DataFrame = {
-    val mode =
-      df.sparkSession.conf.get("spark.graft.materialize.mode", "local")
-    mode match {
-      case "disk" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        p.count() // scan every partition so the cache is fully built
-        register(() => { p.unpersist(false); () })
-        p
-      case _ =>
-        val cp = df.localCheckpoint(true)
-        register(() => releaseCheckpoint(cp))
-        cp
+  def once(df: DataFrame): DataFrame = register(pinUnregistered(df))
+
+  /** Hand a [[pinUnregistered]] result to the per-query registry, so
+    * [[releaseAll]] (or the enclosing [[scoped]] block) frees it —
+    * for loops that pin round by round and return their last round.
+    */
+  def register(pinned: DataFrame): DataFrame = {
+    synchronized { pins += ((owner.get(), pinned)) }
+    pinned
+  }
+
+  /** Materialize `df` once WITHOUT registering it; the owner releases
+    * it with [[releasePin]].
+    *
+    * With `keys` the pin stays hash-partitioned on them, for standing
+    * state whose consumers equi-join on `keys` on every warm run (the
+    * curation fingerprint indexes): the cached plan is a repartition,
+    * so consumers see `HashPartitioning(keys, shuffle.partitions)` from
+    * the in-memory scan and the standing side of every lookup join
+    * stops re-exchanging. In `local` mode the repartition sits on top
+    * of a checkpoint (lineage truncation — the plain persist form keeps
+    * the full logical subtree, which re-grows analyzer cost and
+    * re-introduces self-join attribute ambiguity against sibling frames
+    * of the same source); `disk` persists the repartition directly.
+    */
+  def pinUnregistered(df: DataFrame, keys: Column*): DataFrame = {
+    val disk =
+      df.sparkSession.conf.get("spark.graft.materialize.mode", "local") ==
+        "disk"
+    if (keys.isEmpty) {
+      if (disk) GraftPins.persistRows(df, StorageLevel.DISK_ONLY)
+      else df.localCheckpoint(true)
+    } else {
+      val base = if (disk) df else df.localCheckpoint(true)
+      val p = base.repartition(keys: _*)
+        .persist(if (disk) StorageLevel.DISK_ONLY
+                 else StorageLevel.MEMORY_AND_DISK)
+      p.count() // scan every partition so the cache is fully built
+      p
     }
   }
 
-  /** Partitioning-preserving UNREGISTERED pin for session-memoized
-    * standing state whose consumers equi-join on `keys` every warm
-    * run (the curation standing fingerprint indexes): localCheckpoint
-    * first (lineage truncation — the plain persist form keeps the
-    * full logical subtree, which re-grows analyzer cost and
-    * re-introduces self-join attribute ambiguity against sibling
-    * frames of the same source), then a cached repartition ON TOP of
-    * the checkpoint. The cached plan is the two-node
-    * `Repartition(LogicalRDD)`, so consumers see
-    * `HashPartitioning(keys, shuffle.partitions)` from the in-memory
-    * scan and the standing side of every warm lookup join stops
-    * re-exchanging — the local-mode analogue of keeping the index
-    * hash-bucketed on disk at cluster scale. Build cost (one extra
-    * exchange + cache write) is paid once per session; the memo layer
-    * reuses the frame across queries and reps. Release with
-    * [[releasePin]] (it unpersists the cache AND the checkpoint RDD
-    * under it).
-    */
-  def pinUnregisteredBy(df: DataFrame,
-                        keys: org.apache.spark.sql.Column*): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize.mode", "local") match {
-      case "disk" =>
-        // cluster-safe mode: persist keeps the plan (so the repartition's
-        // partitioning is visible) AND the lineage — no checkpoint needed
-        val p = df.repartition(keys: _*).persist(StorageLevel.DISK_ONLY)
-        p.count()
-        p
-      case _ =>
-        val cp = df.localCheckpoint(true)
-        val p = cp.repartition(keys: _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-    }
-
-  /** Materialize `df` once WITHOUT registering in the pin registry —
-    * for state that must outlive per-query `releaseAll` / per-batch
-    * `scoped` release (e.g. the incremental-dedup corpus state held
-    * across a whole stream). Honors the same
-    * `spark.graft.materialize.mode` switch as [[once]]; the owner
-    * releases with [[releasePin]] when done.
-    */
-  def pinUnregistered(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize.mode", "local") match {
-      case "disk" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        p.count()
-        p
-      case _ => df.localCheckpoint(true)
-    }
-
-  /** Release a frame pinned by [[pinUnregistered]], whichever mechanism
-    * built it: `unpersist` covers the DISK_ONLY cache entry,
-    * [[releaseCheckpoint]] the localCheckpoint blocks (each is a no-op
-    * for the other mode).
+  /** Free the blocks a [[pinUnregistered]] frame holds: its cache entry
+    * and the pinned RDD at the root of its plan, under at most the keyed
+    * form's repartition (`Dataset.unpersist` only covers cache entries).
+    * Pinned frames it was built from are left alone, so releasing a pin
+    * never frees another owner's pin. After release a `local`-mode
+    * frame is unusable (lineage was truncated).
     */
   def releasePin(df: DataFrame): Unit = {
     try { df.unpersist(false); () } catch { case _: Throwable => () }
-    releaseCheckpoint(df)
+    df.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.unpersist(false); ()
+      case RepartitionByExpression(_, lr: LogicalRDD, _, _) =>
+        lr.rdd.unpersist(false); ()
+      case _ => ()
+    }
   }
 
-  /** Drop the executor blocks behind a frame returned by
-    * `localCheckpoint` — `Dataset.unpersist` only covers CacheManager
-    * entries, so the checkpoint RDD must be unpersisted directly. The
-    * whole logical tree is traversed so a projection sitting on top of
-    * the checkpoint (e.g. the d5 cluster memo's select over the CC
-    * result) still releases the underlying RDD — every checkpoint in
-    * the tree is freed, so only call once every consumer of every
-    * pinned input has run its action. After release the frame is
-    * unusable (lineage was truncated).
-    */
-  def releaseCheckpoint(cp: DataFrame): Unit =
-    cp.queryExecution.logical.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(false); ()
-      case _              => ()
+  private def releaseOwned(owned: AnyRef => Boolean): Unit = {
+    val mine = synchronized {
+      val (m, rest) = pins.partition(p => owned(p._1))
+      pins.clear(); pins ++= rest
+      m.toList
     }
+    mine.foreach(p => try releasePin(p._2) catch { case _: Throwable => () })
+  }
 
   /** Release every UNSCOPED pin registered since the last call. The
-    * per-query harness calls this between queries; anything that must
-    * outlive a query (e.g. the d5/d6/d7 shared-clusters memo)
-    * materializes with a bare `localCheckpoint` instead of [[once]].
-    * Pins owned by a live [[scoped]] block (a concurrent streaming
-    * micro-batch) are left for their scope to release.
+    * per-query harness calls this between queries. Pins owned by a live
+    * [[scoped]] block (a concurrent streaming micro-batch) are left for
+    * their scope to release.
     */
-  def releaseAll(): Unit = {
-    val mine = synchronized {
-      val (scopedPins, unscoped) = pins.partition(_._1 != null)
-      pins.clear(); pins ++= scopedPins
-      unscoped.toList
-    }
-    mine.foreach(p => try p._2() catch { case _: Throwable => () })
-  }
+  def releaseAll(): Unit = releaseOwned(_ == null)
 
   /** Run `f` and release ONLY the pins it registered — the long-running
     *-process form of [[releaseAll]]: a streaming `foreachBatch` that
@@ -188,12 +159,7 @@ object Materialize {
     try f
     finally {
       owner.set(prev)
-      val mine = synchronized {
-        val (s, rest) = pins.partition(_._1 eq token)
-        pins.clear(); pins ++= rest
-        s.toList
-      }
-      mine.foreach(p => try p._2() catch { case _: Throwable => () })
+      releaseOwned(_ eq token)
     }
   }
 

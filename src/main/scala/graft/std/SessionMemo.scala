@@ -1,118 +1,100 @@
 package graft.std
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Session-scoped memo of pinned DataFrames, keyed (session, tag).
+/** Session-scoped memo of pinned DataFrames, keyed (session, tag) — the
+  * owner of every frame that outlives one query
+  * ([[graft.queries.Merged.cleanedShared]], the d5–d7 cluster
+  * resolution, the d8/t23 contamination profile, the trained quantizers,
+  * the curation standing state).
   *
-  * The shared-frame memos ([[graft.queries.Merged.cleanedShared]], the
-  * d5–d7 cluster resolution, the d8/t23 contamination profile) all need
-  * the same lifecycle, and each had a gap when hand-rolled on a bare
-  * `TrieMap.getOrElseUpdate`:
+  * [[getOrBuild]] pins what it stores: a builder returns a plain lazy
+  * frame and the memo materializes it with
+  * [[Materialize.pinUnregistered]] (hash-partitioned on `keys` when
+  * given), so every entry is self-contained and the per-query pins its
+  * build registered can die at [[Materialize.releaseAll]]. A local
+  * relation (e.g. a driver-side codebook) is already self-contained and
+  * is stored as it is.
+  *
+  * Lifecycle guarantees a bare `TrieMap.getOrElseUpdate` lacks:
   *
   *  - `getOrElseUpdate` evaluates the builder OUTSIDE the insertion CAS,
   *    so two concurrent first calls (a streaming micro-batch alongside an
   *    interactive query — exactly what [[Materialize.scoped]] supports)
-  *    both build; the losing frame's checkpoint blocks were never
-  *    released. Here the loser goes through `putIfAbsent` and its pin is
-  *    released immediately.
-  *  - Strong session keys lived forever: a long-running JVM that creates
-  *    and stops many sessions (the test suite does) retained every
-  *    stopped session and its plans. Here every [[getOrBuild]] first
+  *    both build. Here the loser goes through `putIfAbsent` and its pin
+  *    is released immediately.
+  *  - Strong session keys would live forever: a long-running JVM that
+  *    creates and stops many sessions (the test suite does) would retain
+  *    every stopped session and its plans. Every [[getOrBuild]] first
   *    sweeps entries whose context has stopped.
-  *  - Release paths existed (or not) per memo and nothing called them.
-  *    Every instance self-registers, so one
-  *    [[SessionMemo.releaseSession]] call in driver/test teardown frees
-  *    all memos for a session.
+  *  - One [[releaseSession]] call in driver/test teardown frees every
+  *    entry of a session.
   *
-  * Entries must be self-contained pinned frames (a [[Materialize
-  * .pinUnregistered]] result, or a frame riding its own checkpoint):
-  * [[release]] frees them with [[Materialize.releasePin]], which
-  * unpersists every checkpoint RDD in the plan.
+  * Tags are global, so call sites make them self-describing (a `site|`
+  * prefix): the hit/build counters are one flat map per tag.
   *
   * SNAPSHOT SEMANTICS: a memoized frame is the data as of the FIRST call
-  * per (session, tag) — the pin truncates lineage, so later changes to
-  * the underlying files are invisible until [[release]] or session stop.
-  * That is the right trade for the bench/verify drivers (immutable
+  * per (session, tag) — the pin fixes it, so later changes to the
+  * underlying files are invisible until [[releaseSession]] or session
+  * stop. That is the right trade for the bench/verify drivers (immutable
   * testdata, ~12 reuses per session); library callers who need
   * re-read-on-every-query semantics use the declarative (un-memoized)
   * form of each query instead.
-  *
-  * @param stopped predicate marking a session as dead (injectable so the
-  *                sweep is testable without stopping the JVM's one local
-  *                SparkContext; production default is the real check).
   */
-final class SessionMemo(
-    stopped: SparkSession => Boolean = _.sparkContext.isStopped) {
+object SessionMemo {
 
   private val map = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
 
-  SessionMemo.register(this)
-
-  /** Memoized build — see class doc for the race + sweep contract.
-    * Every call lands in the process-wide hit/build counters
-    * ([[SessionMemo.counters]]): the r17 driver bench read the
-    * memo-consuming query families at 5–31× their committed values and
-    * the record could not say whether the memos were rebuilt or the
-    * host was slow — the counters make that machine-readable (a build
-    * count above the expected one-per-tag means eviction/rebuild
-    * happened mid-suite). A losing racer's build still counts: its
+  /** Memoized, pinned build — see the object doc for the race + sweep
+    * contract. Every call lands in the per-tag hit/build counters
+    * ([[counters]]); a losing racer's build still counts, because its
     * cost was paid even though its frame was released.
     */
-  def getOrBuild(spark: SparkSession, tag: String)
+  def getOrBuild(spark: SparkSession, tag: String, keys: Column*)
                 (build: => DataFrame): DataFrame = {
-    sweep()
+    sweep(_.sparkContext.isStopped)
     val k = (spark, tag)
     map.get(k) match {
-      case Some(v) => SessionMemo.recordHit(tag); v
+      case Some(v) => recordHit(tag); v
       case None =>
-        val v = build
-        SessionMemo.recordBuild(tag)
+        val b = build
+        val v = if (b.isLocal) b else Materialize.pinUnregistered(b, keys: _*)
+        recordBuild(tag)
         map.putIfAbsent(k, v) match {
-          case Some(winner) =>
-            try Materialize.releasePin(v) catch { case _: Throwable => () }
-            winner
-          case None => v
+          case Some(winner) => release(v); winner
+          case None         => v
         }
     }
   }
 
-  /** Drop and release every entry belonging to `spark`. */
-  def release(spark: SparkSession): Unit =
-    map.keys.filter(_._1 eq spark).toList.foreach { k =>
-      map.remove(k).foreach(f =>
-        try Materialize.releasePin(f) catch { case _: Throwable => () })
-    }
+  private def release(f: DataFrame): Unit =
+    try Materialize.releasePin(f) catch { case _: Throwable => () }
 
-  /** Evict entries whose session has stopped. Their executor blocks died
-    * with the context (the release attempt is belt-and-braces, so a
-    * fake-stopped test session still frees real blocks); the map entry
-    * holding the session + plan objects is what would otherwise leak.
+  private def drop(dead: ((SparkSession, String)) => Boolean): Unit =
+    map.keys.filter(dead).toList.foreach(k => map.remove(k).foreach(release))
+
+  /** Drop and release the entries of `spark` whose tag matches `tags`
+    * (every entry by default) — the one call driver ([[graft.Bench]],
+    * [[graft.Verify]]) and test teardown make.
     */
-  private def sweep(): Unit =
-    map.keys.filter(k => stopped(k._1)).toList.foreach { k =>
-      map.remove(k).foreach(f =>
-        try Materialize.releasePin(f) catch { case _: Throwable => () })
-    }
+  def releaseSession(spark: SparkSession,
+                     tags: String => Boolean = _ => true): Unit =
+    drop { case (s, t) => (s eq spark) && tags(t) }
+
+  /** Evict entries whose session has stopped (`stopped` is injectable so
+    * the sweep is testable without stopping the JVM's one local
+    * SparkContext). Their executor blocks died with the context (the
+    * release attempt is belt-and-braces, so a fake-stopped test session
+    * still frees real blocks); the map entry holding the session + plan
+    * objects is what would otherwise leak.
+    */
+  private[graft] def sweep(stopped: SparkSession => Boolean): Unit =
+    drop(k => stopped(k._1))
 
   private[graft] def entryCount(spark: SparkSession): Int =
     map.count { case ((s, _), _) => s eq spark }
-  private[graft] def size: Int = map.size
-}
 
-object SessionMemo {
-  private val registry = scala.collection.mutable.ListBuffer.empty[SessionMemo]
-
-  private def register(m: SessionMemo): Unit =
-    synchronized { registry += m }
-
-  // Process-wide per-tag (hits, builds): one flat map covers every
-  // registered memo instance, so call sites MUST make tags globally
-  // self-describing (a "site|" prefix). The first telemetry run caught
-  // four sites keying on the bare sfDir — their four legitimate
-  // one-time builds merged into a single counter row reading
-  // "builds: 4", indistinguishable from the mid-suite rebuild signal
-  // the counters exist to expose.
   private val stats =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
@@ -139,11 +121,4 @@ object SessionMemo {
   def counters: Map[String, (Long, Long)] = stats.toMap
 
   private[graft] def resetCounters(): Unit = stats.clear()
-
-  /** Release every registered memo's entries for `spark` — the one call
-    * driver ([[graft.Bench]]/[[graft.Verify]]) and test teardown make
-    * without having to name each memo site.
-    */
-  def releaseSession(spark: SparkSession): Unit =
-    synchronized(registry.toList).foreach(_.release(spark))
 }

@@ -1,16 +1,17 @@
 package graft.std
 
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.ext.ExtQueries
 
 /** The materialize-once contract must hold under BOTH mechanisms: the
-  * single-node `localCheckpoint` default and the cluster-safe
-  * `persist(DISK_ONLY)` mode (lineage kept ⇒ executor loss recomputes
-  * instead of failing). Call sites never see the difference — proven by
-  * running the heaviest pinned pipeline (MinHash→LSH→verify, two pins)
-  * end-to-end under each mode and comparing rows.
+  * single-node `localCheckpoint` default and the cluster-safe DISK_ONLY
+  * mode (lineage kept ⇒ executor loss recomputes instead of failing). Call sites never see the difference — proven by
+  * running the pinned pipelines (MinHash→LSH→verify, k-means, connected
+  * components) end-to-end under each mode and comparing rows — and
+  * every pin dies with its owner.
   */
 class MaterializeModeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -60,22 +61,22 @@ class MaterializeModeSpec extends AnyFunSuite {
     assert(local == disk)
   }
 
-  /** r22: the partitioned standing-state pin must (a) return the same
+  /** The partitioned standing-state pin must (a) return the same
     * rows, (b) leave consumers keyed on the pin key exchange-free —
     * the contract the warm curation lookup joins lean on — and
     * (c) free BOTH its cache entry and the checkpoint RDD under it on
     * releasePin. Proven under both materialize modes (the disk mode
     * skips the checkpoint, so (c)'s RDD half is local-mode-only).
     */
-  test("pinUnregisteredBy: same rows, key-partitioned consumers plan " +
-    "no exchange, releasePin frees the blocks") {
+  test("pinUnregistered with keys: same rows, key-partitioned consumers " +
+    "plan no exchange, releasePin frees the blocks") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val in = (1 to 1000).map(i => (i.toLong % 97, i.toLong)).toDF("k", "v")
     for (mode <- Seq("local", "disk")) {
       spark.conf.set("spark.graft.materialize.mode", mode)
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val p = try Materialize.pinUnregisteredBy(in, col("k"))
+      val p = try Materialize.pinUnregistered(in, col("k"))
       finally spark.conf.unset("spark.graft.materialize.mode")
       assert(p.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
         in.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
@@ -90,6 +91,72 @@ class MaterializeModeSpec extends AnyFunSuite {
       assert(spark.sparkContext.getPersistentRDDs.keySet
         .diff(before).isEmpty,
         s"releasePin must free every block the $mode pin created")
+    }
+  }
+
+  /** Connected components (d5's label propagation, x48's star
+    * contraction) pins every superstep, so `disk` mode must cover the
+    * whole loop: the same rows as `local`, and no storage level but
+    * DISK_ONLY on any RDD a stage touched during the disk run. Each mode
+    * runs on its own session, so its memo entries are its own.
+    */
+  test("connected components (d5, x48): rows identical under local and " +
+    "disk modes, every disk-mode pin DISK_ONLY") {
+    def run(mode: String): (Set[String], Set[StorageLevel]) = {
+      val s = spark.newSession()
+      s.conf.set("spark.graft.materialize.mode", mode)
+      try {
+        val (rows, jobs) = graft.JobCounter(s) {
+          ExtQueries.dedupClusters(s, sfDir).collect().map(_.toString)
+            .toSet ++
+            ExtQueries.components(s, sfDir).collect().map("x48" + _)
+        }
+        val levels = jobs.flatMap(_.stageInfos.flatMap(_.rddInfos))
+          .map(_.storageLevel).filter(_ != StorageLevel.NONE).toSet
+        (rows.get, levels)
+      } finally {
+        Materialize.releaseAll()
+        SessionMemo.releaseSession(s)
+      }
+    }
+    val (local, _) = run("local")
+    val (disk, diskLevels) = run("disk")
+    assert(local.exists(_.startsWith("x48")) &&
+      local.exists(!_.startsWith("x48")))
+    assert(local == disk)
+    assert(diskLevels == Set(StorageLevel.DISK_ONLY),
+      s"disk mode persisted at $diskLevels")
+  }
+
+  /** x48 and d11 end in connected components; their pins die with the
+    * query. Two runs per mode leave exactly the memo's own pins (d11's
+    * pair memo) behind — no growth per run — and releaseSession frees
+    * those. The context's persistent-RDD map holds weak values, so the
+    * checks are on what is NEW since the start.
+    */
+  test("connected-components queries leave only memo pins after " +
+    "releaseAll, and releaseSession frees those, in both modes") {
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    for (mode <- Seq("local", "disk")) {
+      val s = spark.newSession()
+      s.conf.set("spark.graft.materialize.mode", mode)
+      val before = persisted
+      val held = (1 to 2).map { _ =>
+        ExtQueries.components(s, sfDir).collect()
+        Materialize.releaseAll()
+        ExtQueries.semanticClusters(s, sfDir).collect()
+        Materialize.releaseAll()
+        persisted -- before
+      }
+      assert(SessionMemo.entryCount(s) == 1)
+      assert(held.head.size == 1,
+        s"$mode: ${held.head.size} RDDs held after releaseAll, " +
+          "only the memo's one pin expected")
+      assert(held(1) == held.head, s"$mode: pins grew across runs")
+      SessionMemo.releaseSession(s)
+      assert((persisted -- before).isEmpty,
+        s"$mode: releaseSession left ${persisted -- before}")
     }
   }
 
