@@ -943,9 +943,9 @@ object Graph {
     * grain on the level slice). Moving the pair filter into the
     * forward pass (pinning predecessor-pair frames) trades the
     * backward 2M-row exchange for an identical forward one plus an
-    * extra pin per level — measured a wash. Pinned frames lose their
-    * partitioning (localCheckpoint → LogicalRDD drops it, measured),
-    * so pre-partitioned edge copies elide nothing. Remaining cost is
+    * extra pin per level — measured a wash. Plain pins report no
+    * partitioning, so pre-partitioned edge copies elided nothing; keyed
+    * pins keep it, and are not yet re-measured here. Remaining cost is
     * the estimator's honest price; |S| stays the knob.
     *
     * Returns (node_id, n_sources, betweenness_e9, betweenness).

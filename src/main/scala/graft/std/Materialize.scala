@@ -1,9 +1,7 @@
 package graft.std
 
 import org.apache.spark.sql.{Column, DataFrame, GraftPins}
-import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
 /** Materialize-once barrier for diamond-shaped plans.
   *
@@ -19,17 +17,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Every pin in the engine has one lifecycle:
   *
-  *  - [[pinUnregistered]] builds it. It is the one reader of the session
-  *    conf `spark.graft.materialize.mode`:
-  *    - `local` (default): `localCheckpoint(eager)` — executor-local
-  *      blocks, lineage truncated. Fastest on a single-node runner, but
-  *      a lost executor is unrecoverable, so it is the LOCAL mode.
+  *  - [[pinUnregistered]] builds it, plain or keyed, with one job after
+  *    its shuffles into one pinned RDD read through a one-node
+  *    `LogicalRDD` plan ([[org.apache.spark.sql.GraftPins.pin]]). It is
+  *    the one reader of the session conf `spark.graft.materialize.mode`:
+  *    - `local` (default): a local checkpoint — executor-local blocks,
+  *      lineage truncated. Fastest on a single-node runner, but a lost
+  *      block is unrecoverable, so it is the LOCAL mode.
   *    - `disk`: DISK_ONLY blocks that keep their lineage, so on a
   *      multi-executor cluster a lost executor's partitions recompute
-  *      from source instead of failing the job
-  *      ([[org.apache.spark.sql.GraftPins.persistRows]]; the keyed form
-  *      is a `persist(DISK_ONLY)` repartition).
-  *  - [[releasePin]] frees it, whichever mechanism built it.
+  *      from source instead of failing the job.
+  *  - [[releasePin]] frees it: the RDD at the root of its plan.
   *  - Its owner decides when: a per-query pin is handed to the registry
   *    ([[once]] / [[register]]) and freed by [[releaseAll]] or the
   *    enclosing [[scoped]] block; a frame that outlives the query is
@@ -79,47 +77,23 @@ object Materialize {
     *
     * With `keys` the pin stays hash-partitioned on them, for standing
     * state whose consumers equi-join on `keys` on every warm run (the
-    * curation fingerprint indexes): the cached plan is a repartition,
-    * so consumers see `HashPartitioning(keys, shuffle.partitions)` from
-    * the in-memory scan and the standing side of every lookup join
-    * stops re-exchanging. In `local` mode the repartition sits on top
-    * of a checkpoint (lineage truncation — the plain persist form keeps
-    * the full logical subtree, which re-grows analyzer cost and
-    * re-introduces self-join attribute ambiguity against sibling frames
-    * of the same source); `disk` persists the repartition directly.
+    * curation fingerprint indexes): consumers see
+    * `HashPartitioning(keys, shuffle.partitions)` on the pinned side, so
+    * the standing side of every lookup join stops re-exchanging.
     */
-  def pinUnregistered(df: DataFrame, keys: Column*): DataFrame = {
-    val disk =
+  def pinUnregistered(df: DataFrame, keys: Column*): DataFrame =
+    GraftPins.pin(df, keys, disk =
       df.sparkSession.conf.get("spark.graft.materialize.mode", "local") ==
-        "disk"
-    if (keys.isEmpty) {
-      if (disk) GraftPins.persistRows(df, StorageLevel.DISK_ONLY)
-      else df.localCheckpoint(true)
-    } else {
-      val base = if (disk) df else df.localCheckpoint(true)
-      val p = base.repartition(keys: _*)
-        .persist(if (disk) StorageLevel.DISK_ONLY
-                 else StorageLevel.MEMORY_AND_DISK)
-      p.count() // scan every partition so the cache is fully built
-      p
-    }
-  }
+        "disk")
 
-  /** Free the blocks a [[pinUnregistered]] frame holds: its cache entry
-    * and the pinned RDD at the root of its plan, under at most the keyed
-    * form's repartition (`Dataset.unpersist` only covers cache entries).
-    * Pinned frames it was built from are left alone, so releasing a pin
-    * never frees another owner's pin. After release a `local`-mode
-    * frame is unusable (lineage was truncated).
+  /** Free the blocks a [[pinUnregistered]] frame holds: the pinned RDD
+    * at the root of its plan. Pinned frames it was built from are left
+    * alone, so releasing a pin never frees another owner's pin. After
+    * release a `local`-mode frame is unusable (lineage was truncated).
     */
-  def releasePin(df: DataFrame): Unit = {
-    try { df.unpersist(false); () } catch { case _: Throwable => () }
-    df.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(false); ()
-      case RepartitionByExpression(_, lr: LogicalRDD, _, _) =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
-    }
+  def releasePin(df: DataFrame): Unit = df.queryExecution.logical match {
+    case lr: LogicalRDD => lr.rdd.unpersist(false); ()
+    case _ => ()
   }
 
   private def releaseOwned(owned: AnyRef => Boolean): Unit = {

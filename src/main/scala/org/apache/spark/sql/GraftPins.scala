@@ -1,31 +1,51 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
-/** The lineage-keeping pin behind the `disk` materialize mode
-  * ([[graft.std.Materialize.pinUnregistered]]). It lives in Spark's
-  * package because `Dataset.ofRows` is `private[sql]`.
+/** The one pin builder behind [[graft.std.Materialize.pinUnregistered]].
+  * It lives in Spark's package because `Dataset.ofRows` and
+  * `LogicalRDD.fromDataset` are `private[sql]`.
   */
 object GraftPins {
 
-  /** `df` computed once into `level` blocks of an RDD that keeps its
-    * lineage, so a lost block recomputes from source, and read through
-    * a one-node `LogicalRDD` plan like a checkpoint's. A cached
-    * Dataset would instead carry its whole plan, every earlier pin's
-    * plan nested inside it: a loop that pins each round (connected
-    * components) would plan and print a tree that grows with every
-    * round.
+  /** `df` computed once, by one job after its shuffles, into one RDD
+    * read through a one-node `LogicalRDD` plan — the node Spark's own
+    * `localCheckpoint` builds. A cached Dataset would carry its whole
+    * plan instead, so a loop that pins every round would plan a tree
+    * that grows every round. `disk = false` local-checkpoints the RDD
+    * (lineage truncated: a lost block fails the read); `disk = true`
+    * persists it DISK_ONLY with its lineage (a lost block recomputes).
+    *
+    * With `keys` the rows are first repartitioned into
+    * `spark.sql.shuffle.partitions` hash partitions on them and the pin
+    * declares that `HashPartitioning`, so consumers grouping or joining
+    * on `keys` plan no exchange on it. AQE never coalesces a repartition
+    * to a fixed count, so the declaration holds; an unkeyed pin of an
+    * AQE plan reports no partitioning, as Spark's checkpoint does.
     */
-  def persistRows(df: DataFrame, level: StorageLevel): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
+  def pin(df: DataFrame, keys: Seq[Column], disk: Boolean): DataFrame = {
+    val in = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = in.sparkSession
+    val n = spark.sessionState.conf.numShufflePartitions
+    val ds = if (keys.isEmpty) in else in.repartition(n, keys: _*)
     val qe = ds.queryExecution
-    val rows = qe.toRdd.map(_.copy()).persist(level)
-    rows.count()
-    val stats = qe.optimizedPlan.stats
-    classic.Dataset.ofRows(ds.sparkSession,
-      LogicalRDD(ds.logicalPlan.output, rows)(ds.sparkSession,
-        Some(Statistics(stats.sizeInBytes, stats.rowCount))))
+    val rows = SQLExecution.withNewExecutionId(qe) {
+      val r = qe.executedPlan.execute().map(_.copy())
+      if (disk) r.persist(StorageLevel.DISK_ONLY) else r.localCheckpoint()
+      r.count()
+      r
+    }
+    val lr = LogicalRDD.fromDataset(rows, ds, isStreaming = false)
+    val keyed = qe.analyzed match {
+      case r: RepartitionByExpression if keys.nonEmpty =>
+        lr.copy(outputPartitioning =
+          HashPartitioning(r.partitionExpressions, n))(
+          spark, Some(lr.computeStats()), Some(lr.constraints))
+      case _ => lr
+    }
+    classic.Dataset.ofRows(spark, keyed)
   }
 }

@@ -1,17 +1,22 @@
 package graft.std
 
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.ext.ExtQueries
 
-/** The materialize-once contract must hold under BOTH mechanisms: the
-  * single-node `localCheckpoint` default and the cluster-safe DISK_ONLY
-  * mode (lineage kept ⇒ executor loss recomputes instead of failing). Call sites never see the difference — proven by
-  * running the pinned pipelines (MinHash→LSH→verify, k-means, connected
-  * components) end-to-end under each mode and comparing rows — and
-  * every pin dies with its owner.
+/** The materialize-once contract must hold under BOTH modes: the
+  * single-node local-checkpoint default and the cluster-safe DISK_ONLY
+  * mode (lineage kept ⇒ a lost block recomputes instead of failing).
+  * Call sites never see the difference — proven by running the pinned
+  * pipelines (MinHash→LSH→verify, k-means, connected components)
+  * end-to-end under each mode and comparing rows — every pin, plain or
+  * keyed, is built once into one RDD behind a one-node plan, and every
+  * pin dies with its owner.
   */
 class MaterializeModeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -64,9 +69,8 @@ class MaterializeModeSpec extends AnyFunSuite {
   /** The partitioned standing-state pin must (a) return the same
     * rows, (b) leave consumers keyed on the pin key exchange-free —
     * the contract the warm curation lookup joins lean on — and
-    * (c) free BOTH its cache entry and the checkpoint RDD under it on
-    * releasePin. Proven under both materialize modes (the disk mode
-    * skips the checkpoint, so (c)'s RDD half is local-mode-only).
+    * (c) free every block it holds on releasePin. Proven under both
+    * materialize modes.
     */
   test("pinUnregistered with keys: same rows, key-partitioned consumers " +
     "plan no exchange, releasePin frees the blocks") {
@@ -162,11 +166,7 @@ class MaterializeModeSpec extends AnyFunSuite {
 
   test("releaseAll drops localCheckpoint blocks") {
     import spark.implicits._
-    val pinned = Materialize.once(Seq(1, 2, 3).toDF("v"))
-    val rddId = pinned.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-    }
+    val rddId = rddOf(Materialize.once(Seq(1, 2, 3).toDF("v")))
     assert(spark.sparkContext.getPersistentRDDs.contains(rddId))
     Materialize.releaseAll()
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
@@ -182,11 +182,7 @@ class MaterializeModeSpec extends AnyFunSuite {
     var strayId = -1
     Materialize.scoped {
       val t = new Thread(() => {
-        strayId = Materialize.once(Seq(3, 4).toDF("v"))
-          .queryExecution.logical match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-          case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-        }
+        strayId = rddOf(Materialize.once(Seq(3, 4).toDF("v")))
       })
       t.start(); t.join()
     }
@@ -194,5 +190,132 @@ class MaterializeModeSpec extends AnyFunSuite {
       "a worker-thread pin registers outside the scope")
     Materialize.releaseAll()
     assert(!spark.sparkContext.getPersistentRDDs.contains(strayId))
+  }
+
+  private def pinIn(mode: String, df: DataFrame, keys: String*): DataFrame = {
+    spark.conf.set("spark.graft.materialize.mode", mode)
+    try Materialize.pinUnregistered(df,
+      keys.map(org.apache.spark.sql.functions.col): _*)
+    finally spark.conf.unset("spark.graft.materialize.mode")
+  }
+
+  private def rddOf(pinned: DataFrame): Int = pinned.queryExecution.logical
+    match {
+      case lr: LogicalRDD => lr.rdd.id
+      case other => fail(s"expected LogicalRDD, got ${other.getClass}")
+    }
+
+  /** A keyed pin of a fresh aggregate is one build: the aggregate's
+    * shuffle, the repartition's shuffle and one job that fills one
+    * persistent RDD, read through a single `LogicalRDD` that declares
+    * the key partitioning — so key-grouped consumers and a self-join
+    * plan no exchange, and a join against an unpinned probe exchanges
+    * the probe side only.
+    */
+  test("a keyed pin is built once into one RDD behind a one-node plan " +
+    "that keeps its key partitioning, in both modes") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    for (mode <- Seq("local", "disk")) {
+      val agg = (1 to 5000).map(i => (i.toLong % 97, i.toLong)).toDF("k", "v")
+        .groupBy("k").agg(sum("v").as("s"))
+      val before = sc.getPersistentRDDs.keySet
+      val (pinned, jobs) = graft.JobCounter(spark)(pinIn(mode, agg, "k"))
+      val p = pinned.get
+      info(s"$mode: ${jobs.size} jobs, " +
+        s"${(sc.getPersistentRDDs.keySet -- before).size} new RDDs")
+      try {
+        assert(jobs.size <= 3, s"$mode: ${jobs.size} jobs to build the pin")
+        assert((sc.getPersistentRDDs.keySet -- before) == Set(rddOf(p)),
+          s"$mode: one new persistent RDD expected")
+        assert(p.queryExecution.logical.isInstanceOf[LogicalRDD])
+        val grouped = p.groupBy("k").agg(count(lit(1)))
+        val selfJoin = p.join(p.select(col("k"), col("s").as("s2")), "k")
+        for (q <- Seq(grouped, selfJoin))
+          assert(graft.sources.Bucketing.exchangeCount(q) == 0,
+            s"$mode: ${q.queryExecution.executedPlan}")
+        val key = "spark.sql.autoBroadcastJoinThreshold"
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, "-1")
+        try {
+          val probe = (0L until 200L).toDF("k")
+          val joined = p.join(probe, "k")
+          assert(graft.sources.Bucketing.exchangeCount(joined) == 1,
+            s"$mode: ${joined.queryExecution.executedPlan}")
+          assert(joined.count() == 97)
+        } finally prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case None    => spark.conf.unset(key)
+        }
+        assert(p.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+          agg.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      } finally Materialize.releasePin(p)
+    }
+  }
+
+  /** Losing a pinned block is what separates the modes: a `disk` pin,
+    * plain or keyed, recomputes the block from its lineage and reads the
+    * same rows; a `local` pin truncated its lineage and fails loudly.
+    */
+  test("a lost pin block recomputes under disk mode and fails under " +
+    "local mode") {
+    import spark.implicits._
+    val in = (1 to 1000).map(i => (i.toLong % 97, i.toLong)).toDF("k", "v")
+      .repartition(4)
+    def rows(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected = rows(in)
+    def dropBlock0(p: DataFrame): Unit = {
+      val _ = SparkEnv.get.blockManager.removeBlock(RDDBlockId(rddOf(p), 0))
+    }
+    for (keys <- Seq(Nil, Seq("k"))) {
+      val p = pinIn("disk", in, keys: _*)
+      try {
+        assert(rows(p) == expected)
+        dropBlock0(p)
+        assert(rows(p) == expected, s"disk pin keyed on $keys")
+      } finally Materialize.releasePin(p)
+    }
+    val p = pinIn("local", in)
+    try {
+      dropBlock0(p)
+      val e = intercept[Exception](p.collect())
+      def chain(t: Throwable): List[Throwable] =
+        if (t == null) Nil else t :: chain(t.getCause)
+      assert(chain(e).exists(t => String.valueOf(t.getMessage)
+        .contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), e.toString)
+    } finally Materialize.releasePin(p)
+  }
+
+  /** The benchmarked path: a plain `local` pin is Spark's own eager
+    * local checkpoint — the same stats, partitioning and ordering on the
+    * pinned node, built by the same number of jobs.
+    */
+  test("a plain local pin matches Dataset.localCheckpoint") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val df = (1 to 2000).map(i => (i.toLong % 31, i.toLong)).toDF("k", "v")
+      .groupBy("k").agg(sum("v").as("s")).orderBy("k")
+    // each side plans its own copy, so neither reuses the other's shuffles
+    def built(pin: DataFrame => DataFrame): (DataFrame, Int) = {
+      val (r, jobs) = graft.JobCounter(spark)(pin(df.select("*")))
+      (r.get, jobs.size)
+    }
+    val (ours, ourJobs) = built(pinIn("local", _))
+    val (theirs, theirJobs) = built(_.localCheckpoint(true))
+    try {
+      assert(ourJobs == theirJobs)
+      val (a, b) = (ours.queryExecution.optimizedPlan,
+        theirs.queryExecution.optimizedPlan)
+      assert(a.stats == b.stats)
+      (a, b) match {
+        case (x: LogicalRDD, y: LogicalRDD) =>
+          assert(x.outputPartitioning == y.outputPartitioning)
+          assert(x.outputOrdering == y.outputOrdering)
+        case other => fail(s"expected two LogicalRDDs, got $other")
+      }
+      assert(ours.collect().toSeq == theirs.collect().toSeq)
+    } finally Seq(ours, theirs).foreach(Materialize.releasePin)
   }
 }
