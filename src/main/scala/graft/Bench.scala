@@ -1,45 +1,47 @@
 package graft
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
-object Bench {
-  /** Per-query minimums of a prior bench record, parsed from the
-    * BENCH_FULL.json layout this file writes (`"queries":{"k":v,…}`).
-    * Tolerant by design: a missing file, missing `queries` object, or
-    * unparseable value yields an empty/partial map and the guard just
-    * doesn't fire — a corrupt baseline must never fail the bench.
-    * BenchGuardSpec round-trips this parser against the REAL
-    * `fileJson` writer below, so a format change breaks a test instead
-    * of silently disarming the guard.
-    */
-  private[graft] def parseBaseline(json: String): Map[String, Double] = {
-    val marker = "\"queries\":{"
-    val at = json.indexOf(marker)
-    if (at < 0) Map.empty
-    else {
-      val start = at + marker.length
-      val end = json.indexOf("}", start)
-      if (end < 0) Map.empty
-      else json.substring(start, end).split(",").iterator.flatMap { kv =>
-        val c = kv.lastIndexOf(':')
-        if (c < 0) None
-        else {
-          val k = kv.substring(0, c).trim
-            .stripPrefix("\"").stripSuffix("\"")
-          try Some(k -> kv.substring(c + 1).trim.toDouble)
-          catch { case _: NumberFormatException => None }
-        }
-      }.toMap
-    }
-  }
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
-  /** Merge baseline maps per-query by MIN (ignoring failure marks).
-    * The r16 lesson: anchoring the guard to only the immediately-prior
-    * record lets compounding drift ratchet past the 3x trigger —
-    * t24–t27 reached 3–5x over r15 in two under-threshold steps and the
-    * record self-certified clean. The anchor is therefore the per-query
-    * minimum across ALL committed records (BENCH_BASELINE.json, built
-    * by tools/build_bench_baseline.py from git history) merged with the
-    * prior record on disk (which alone guards queries newer than the
-    * baseline build).
+/** The timing bench: every selected query `reps` times into a `noop`
+  * sink, min per query, graded against the historical baseline by the
+  * outlier guard. One [[Record]] value holds the suite; Jackson writes
+  * its full form ([[Record.file]]) to the record path and its bounded
+  * summary ([[Record.summary]]) as the one stdout line, and reads
+  * baselines back ([[parseBaseline]]).
+  */
+object Bench {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** One line of JSON. Strings are escaped, so a quote, backslash or
+    * newline in a path can neither break the record nor split the line.
+    */
+  private[graft] def toJson(value: Any): String =
+    mapper.writeValueAsString(value)
+
+  /** The numeric members of a record's `queries` object: the layout
+    * [[Record.file]] writes and `tools/build_bench_baseline.py` copies.
+    * Tolerant by design: invalid JSON or no `queries` object gives an
+    * empty map, and a non-numeric value drops that key only, so a
+    * corrupt baseline disarms the guard but never fails the bench.
+    */
+  private[graft] def parseBaseline(json: String): Map[String, Double] =
+    try mapper.readTree(json).path("queries").properties.asScala
+      .collect { case e if e.getValue.isNumber =>
+        e.getKey -> e.getValue.asDouble
+      }.toMap
+    catch { case _: JsonProcessingException => Map.empty }
+
+  /** Merge baseline maps per query by MIN, ignoring failure marks. The
+    * anchor is the per-query minimum across ALL committed records
+    * (BENCH_BASELINE.json, built by tools/build_bench_baseline.py from
+    * git history) merged with the prior record on disk, which alone
+    * guards queries newer than the baseline build. Anchoring to only
+    * the prior record would let two under-threshold drifts compound
+    * past the 3x trigger while each record self-certifies clean.
     */
   private[graft] def mergeBaselines(
       ms: Seq[Map[String, Double]]): Map[String, Double] =
@@ -47,20 +49,18 @@ object Bench {
       .groupMapReduce(_._1)(_._2)(math.min)
 
   /** Host-noise guard: is this query's min-of-reps anomalous against
-    * the historical baseline? Three rounds running, same-code records
-    * disagreed per-query by up to 55x (x35 0.42 vs 23.04 s) from host
-    * contention alone — min-of-3 is not enough when all three reps land
-    * in a contended window. Anomalous = BOTH >3x the baseline min AND
-    * >1 s absolute over it (the absolute floor keeps sub-second jitter
-    * — 0.1 -> 0.4 s — from triggering retries), OR — the heavy-query
-    * tier, r22 — >1.5x AND >3 s absolute: the r21 driver run committed
-    * pipeline_curation_increment2_neardup at 11.72 s against a 6.9 s
-    * history (1.7x, +4.8 s) without a retry because only the 3x tier
-    * existed, and the round's top regression was a one-run artifact
-    * the record itself could have retired. The +3 s floor keeps the
-    * tier away from every sub-3-second query, where 1.5x is routine
-    * jitter. Failed queries (min < 0) are never retried here; -1 must
-    * stay visible as a failure, not be retried into a fluke success.
+    * the historical baseline? On a shared host, same-code records
+    * disagree per query by up to 55x (x35 0.42 vs 23.04 s) from
+    * contention alone, so min-of-3 is not enough when all three reps
+    * land in a contended window. Anomalous = BOTH >3x the baseline min
+    * AND >1 s absolute over it (the absolute floor keeps sub-second
+    * jitter, 0.1 -> 0.4 s, from triggering retries), OR the heavy-query
+    * tier: >1.5x AND >3 s absolute, which catches a heavy query at
+    * 1.7x (11.72 s against a 6.9 s history) that the 3x tier lets
+    * through; its +3 s floor keeps it away from every sub-3-second
+    * query, where 1.5x is routine jitter. Failed queries (min < 0) are
+    * never retried: -1 must stay visible as a failure, not be retried
+    * into a fluke success.
     */
   private[graft] def isAnomalous(minSec: Double,
                                  baseline: Option[Double]): Boolean =
@@ -68,45 +68,24 @@ object Bench {
       b >= 0 && ((minSec > 3 * b && minSec > b + 1.0) ||
         (minSec > 1.5 * b && minSec > b + 3.0)))
 
-  /** Fixed canary set, measured at suite START (fresh JVM,
-    * post-warmup, pre-suite) AND re-measured at suite END: shape-
-    * diverse — a broadcast star join + agg, a per-row text-expression
-    * scan, an iterative join-loop, and one memo/IO-bound member
-    * (p14_sales_lines reads the cleaned-star-join checkpoint blocks
-    * from storage, so disk/storage pressure has a witness). The r17
-    * driver run exposed why one start-only CPU-shaped canary is not
-    * enough: it read 1.41x the committed total with a HEALTHY start
-    * canary while 44 memo-consuming queries read 2–31x committed —
-    * a mid-run host step or memo eviction was invisible to a canary
-    * that runs once, first, and never touches storage. With bookends,
-    * end/start >> 1 on any member = the host degraded mid-suite;
-    * p14 inflated while CPU members stay flat = storage-side pressure;
-    * both flat while memo builds > 1 per tag (see the `memo` map in
-    * the record) = eviction/rebuild.
+  /** Fixed canary set, measured at suite START (fresh JVM, post-warmup,
+    * pre-suite) AND re-measured at suite END. Shape-diverse: a
+    * broadcast star join + agg, a per-row text-expression scan, an
+    * iterative join-loop, and one memo/IO-bound member (p14_sales_lines
+    * reads the cleaned-star-join pin from storage, so storage pressure
+    * has a witness). A start-only CPU-shaped canary cannot see a
+    * mid-run host step or a memo eviction. With bookends, end/start
+    * >> 1 on any member = the host degraded mid-suite; p14 inflated
+    * while CPU members stay flat = storage-side pressure; both flat
+    * while memo builds > 1 per tag (the record's `memo` map) =
+    * eviction/rebuild.
     */
   private[graft] val canaryKeys: Seq[String] =
     Seq("q1_revenue_by_month", "t4_lang_id", "x20_pagerank",
       "p14_sales_lines")
 
-  /** JSON string literal with escaping: a quote or backslash in
-    * SPARK_GRAFT_BENCH_OUT/SF_DIR used to produce invalid JSON, and
-    * because parseBaseline is tolerant-by-design the NEXT run's
-    * outlier guard silently disarmed (r17 advice). Control characters
-    * are \u-escaped so an embedded newline can't split the one-line
-    * stdout record either.
-    */
-  private[graft] def jstr(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }.mkString("\"", "", "\"")
-
-  /** Repo root for the record/guard paths, derived from the working
-    * directory (sbt runs from the checkout root) instead of a
-    * hardcoded absolute location (r17 advice: the literal
-    * `/root/repo` broke the plumbing silently in any other clone).
+  /** Repo root for the record/guard paths: the working directory (sbt
+    * runs from the checkout root), so the plumbing works in any clone.
     * `graft.repo.root` overrides for tests/tools that run elsewhere.
     */
   private[graft] def repoRoot: String =
@@ -123,30 +102,26 @@ object Bench {
 
   /** Default record path: sf0.1 runs (the committed-record scale)
     * write into the repo; any other scale writes to /tmp under an
-    * sf-tagged name. Committed BENCH_FULL.json is the historical
-    * anchor corpus for the outlier guard, and sf0.01 smoke records
-    * committed under the same filename poisoned the minima with
-    * ~10x-smaller-corpus numbers (the r17 s2 forensics).
-    * SPARK_GRAFT_BENCH_OUT still overrides explicitly.
+    * sf-tagged name. Committed BENCH_FULL.json is the historical anchor
+    * corpus for the outlier guard, and a smaller-sf record committed
+    * under the same name would poison the minima with ~10x-smaller
+    * numbers. SPARK_GRAFT_BENCH_OUT still overrides explicitly.
     */
   private[graft] def defaultOut(sfDir: String): String =
     if (isRecordScale(sfDir)) s"$repoRoot/BENCH_FULL.json"
     else s"/tmp/BENCH_FULL_${sfTag(sfDir)}.json"
 
-  /** Record-time adjudication context per anomalous query (r19 verdict
-    * #3: the record carried per-query time coordinates but only the
-    * post-hoc `tools/bench_timeline.py` consumed them — at record time
-    * an `anomalous` flag could not say "inside a shared slow window"
-    * vs "alone among fast neighbors", which is the analyzer's entire
-    * verdict logic). For each anomalous query, look at every OTHER
+  /** Record-time adjudication context per anomalous query: can an
+    * `anomalous` flag say "inside a shared slow window" or "alone among
+    * fast neighbors"? For each anomalous query, look at every OTHER
     * query whose wall-clock span overlaps its own (padded `padMs`): a
     * true host window inflates its cohabitants too, a code regression
     * sits alone among healthy neighbors. Returns
     * name -> (neighbors, inflatedNeighbors, verdict) with verdict one
     * of `shared_slow_window` (half or more neighbors inflated, or 3+),
-    * `isolated` (neighbors exist, mostly healthy — treat as a real
-    * regression candidate), `no_neighbors` (nothing overlapped —
-    * undecidable at record time).
+    * `isolated` (neighbors exist, mostly healthy: a real regression
+    * candidate), `no_neighbors` (nothing overlapped: undecidable at
+    * record time).
     */
   private[graft] def anomalyContext(
       spans: Seq[(String, Long, Long)],
@@ -157,9 +132,8 @@ object Bench {
     anomalous.flatMap { a =>
       spans.find(_._1 == a).map { case (_, s, e) =>
         // only neighbors WITH a baseline ratio can witness host state
-        // either way — a query new this round has no drift ratio, and
-        // counting it as "healthy" biased verdicts toward `isolated`
-        // in rounds that add queries (r20 advice)
+        // either way: a query new to the suite has no drift ratio, and
+        // counting it as "healthy" would bias verdicts toward `isolated`
         val others = spans.filter { case (n, s2, e2) =>
           n != a && s2 <= e + padMs && e2 >= s - padMs &&
             ratios.contains(n)
@@ -175,114 +149,149 @@ object Bench {
       }
     }
 
-  /** The one-line record head shared by stdout and the file copy.
-    * `canaryStart`/`canaryEnd` are the suite bookends (same keys, same
-    * min-of-reps statistic); end/start per key is the mid-run
-    * host-drift witness the r17 driver run lacked. `guardDisarmed`
-    * marks a record-scale run that found NO baseline (review finding:
-    * the guard silently disarmed and the record still self-certified
-    * "zero anomalous" — the flag makes a disarmed record
-    * machine-distinguishable from a clean one).
-    */
-  private[graft] def headJson(results: Seq[(String, Double)],
-                              canaryStart: Seq[(String, Double)],
-                              canaryEnd: Seq[(String, Double)],
-                              flaky: Seq[String],
-                              anomalous: Seq[String],
-                              outPath: String, sfDir: String,
-                              fmt: Double => String,
-                              guardDisarmed: Boolean = false): String = {
-    def numMap(xs: Seq[(String, Double)]): String =
-      xs.map { case (k, v) => jstr(k) + ":" + fmt(v) }
-        .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val fl = flaky.map(jstr).mkString("[", ",", "]")
-    val anom = anomalous.map(jstr).mkString("[", ",", "]")
-    val disarmed = if (guardDisarmed) ""","guard_disarmed":true""" else ""
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${
-      numMap(results)},"flaky":$fl,"anomalous":$anom$disarmed,"canary_start":${
-      numMap(canaryStart)},"canary_end":${numMap(canaryEnd)},"full":${
-      jstr(outPath)},"sf":${jstr(sfDir)}}"""
+  private def minOk(runs: Seq[Double]): Double = {
+    val ok = runs.filter(_ >= 0); if (ok.isEmpty) -1.0 else ok.min
   }
 
-  /** Full-precision file record: head + reps + every sample. Retry
-    * runs live in their own `retries` map (r16 advice: appending them
-    * to `samples` broke the `reps`-describes-array-length contract and
-    * let a failed RETRY rep mark an otherwise-clean query flaky).
-    * `memo` holds per-tag [hits, builds] from SessionMemo at suite end
-    * — builds > 1 for a tag means the memoized frame was evicted and
-    * rebuilt mid-suite, the one mechanism the r17 record could not
-    * distinguish from host slowness.
-    *
-    * `started` maps each query to the epoch-millis its FIRST rep began
-    * (r18 verdict #1: the driver run showed 19 queries >1.5x committed
-    * clustered in three contiguous execution-order windows with healthy
-    * memo/canary telemetry — transient host slowdown was the obvious
-    * read but unprovable without time coordinates; with start
-    * timestamps plus the durations already in `samples`, every
-    * anomalous flag is plottable against wall time, and
-    * `canary_start_ms`/`canary_end_ms` make the bookends the timeline's
-    * endpoints).
-    *
-    * `drift` maps each baselined query to min-of-reps / historical-min
-    * (2 dp). The guard policy for the small-query regime (r18
-    * observation: t24/t27/x68/m4/t66 drifted ~2x vs r17 without
-    * tripping): drifts under the retry trigger (3x AND +1 s) are
-    * RECORDED here, not retried — min-of-3 on sub-second queries
-    * jitters up to ~2x under host contention, so retrying them would
-    * burn the bounded retry budget on noise, while the historical-min
-    * anchor never ratchets and successive records' drift maps make a
-    * compounding drift monotone and visible instead of silent.
+  private def round(v: Double, dp: Int): Double =
+    BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** One query's timings in seconds: its reps, then the guard's
+    * retries, and the epoch-millis its first rep began. A run that
+    * threw reads -1, so a failure never masquerades as a fast success.
     */
-  private[graft] def fileJson(results: Seq[(String, Double)],
-                              canaryStart: Seq[(String, Double)],
-                              canaryEnd: Seq[(String, Double)],
-                              flaky: Seq[String],
-                              anomalous: Seq[String],
-                              outPath: String, sfDir: String,
-                              reps: Int,
-                              samples: Seq[(String, Seq[Double])],
-                              retries: Seq[(String, Seq[Double])],
-                              memo: Seq[(String, (Long, Long))] = Nil,
-                              started: Seq[(String, Long)] = Nil,
-                              drift: Seq[(String, Double)] = Nil,
-                              canaryStartMs: Long = 0L,
-                              canaryEndMs: Long = 0L,
-                              guardDisarmed: Boolean = false,
-                              anomalyCtx: Seq[(String, (Int, Int, String))]
-                                = Nil)
-      : String = {
-    def runsMap(xs: Seq[(String, Seq[Double])]): String =
-      xs.map { case (k, runs) =>
-        jstr(k) + ":[" + runs.mkString(",") + "]"
-      }.mkString("{", ",", "}")
-    val memoMap = memo.map { case (tag, (h, b)) =>
-      jstr(tag) + s""":{"hits":$h,"builds":$b}"""
-    }.mkString("{", ",", "}")
-    val startedMap = started.map { case (k, ms) => jstr(k) + ":" + ms }
-      .mkString("{", ",", "}")
-    val driftMap = drift.map { case (k, r) =>
-      jstr(k) + ":" + String.format(java.util.Locale.ROOT, "%.2f",
-        Double.box(r))
-    }.mkString("{", ",", "}")
-    val ctxMap = anomalyCtx.map { case (k, (nb, infl, v)) =>
-      jstr(k) + s""":{"neighbors":$nb,"inflated":$infl,"verdict":${jstr(v)}}"""
-    }.mkString("{", ",", "}")
-    headJson(results, canaryStart, canaryEnd, flaky, anomalous, outPath,
-      sfDir, _.toString, guardDisarmed).dropRight(1) +
-      s""","reps":$reps,"samples":${runsMap(samples)},"retries":${
-        runsMap(retries)},"memo":$memoMap,"started":$startedMap,"drift":${
-        driftMap},"canary_start_ms":$canaryStartMs,"canary_end_ms":${
-        canaryEndMs},"anomaly_context":$ctxMap}"""
+  private[graft] case class Timed(name: String, runs: Seq[Double],
+                                  retries: Seq[Double], startedMs: Long) {
+    /** min over every successful rep or retry; -1 when none succeeded */
+    def best: Double = minOk(runs ++ retries)
+  }
+
+  /** The session a record was measured in: wall-clock numbers compare
+    * only between records with the same cores and partitions.
+    */
+  private[graft] case class Env(cpus: Int, shufflePartitions: Int,
+                                materializeMode: String,
+                                sparkVersion: String)
+
+  private[graft] object Env {
+    def of(spark: SparkSession): Env = Env(
+      spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      graft.std.Materialize.mode(spark), spark.version)
+  }
+
+  /** A finished suite: every query's [[Timed]] runs graded against
+    * `baseline`, the canary bookends (same keys, same min-of-reps
+    * statistic; end/start per key is the mid-run host-drift witness)
+    * with their start epoch-millis, the per-tag memo [hits, builds] at
+    * suite end, the session, and the record path (`full`).
+    */
+  private[graft] case class Record(
+      timed: Seq[Timed], baseline: Map[String, Double],
+      canaryStart: Seq[(String, Double)], canaryEnd: Seq[(String, Double)],
+      canaryStartMs: Long, canaryEndMs: Long,
+      memo: Seq[(String, (Long, Long))], env: Env,
+      full: String, sf: String, reps: Int) {
+    val results: Seq[(String, Double)] = timed.map(t => t.name -> t.best)
+    val total: Double = results.map(_._2).filter(_ >= 0).sum
+    /** Queries still anomalous after their retries: the record grades
+      * itself.
+      */
+    val anomalous: Seq[String] = timed.collect {
+      case t if isAnomalous(t.best, baseline.get(t.name)) => t.name
+    }
+    /** Min-of-reps must not mask intermittent failures: a query that
+      * threw in some reps but succeeded in another. Retries don't count,
+      * so a failed retry stays visible in `retries` without tainting a
+      * clean rep set.
+      */
+    val flaky: Seq[String] = timed.collect {
+      case t if t.runs.contains(-1.0) && t.runs.exists(_ >= 0) => t.name
+    }
+    /** min-of-reps / historical min per baselined query. Drifts under
+      * the retry trigger are RECORDED here, not retried: min-of-3 on
+      * sub-second queries jitters up to ~2x under host contention, so
+      * retrying them would burn the bounded retry budget on noise, while
+      * the historical-min anchor never ratchets and successive records'
+      * drift maps make a compounding drift visible instead of silent.
+      */
+    val drift: Seq[(String, Double)] = results.collect {
+      case (name, m) if m >= 0 && baseline.get(name).exists(_ > 0) =>
+        name -> m / baseline(name)
+    }
+    /** [[anomalyContext]] of each anomalous query; a span runs from the
+      * first rep's start through every rep AND retry duration, since
+      * retries occupy the wall clock too.
+      */
+    val anomalyCtx: Seq[(String, (Int, Int, String))] = anomalyContext(
+      timed.map { t =>
+        val dur = (t.runs ++ t.retries).filter(_ >= 0).sum
+        (t.name, t.startedMs, t.startedMs + (dur * 1000).toLong)
+      }, drift.toMap, anomalous)
+    /** A record-scale run that found NO baseline: the guard is disarmed,
+      * and the flag keeps that record machine-distinguishable from a
+      * clean one.
+      */
+    val guardDisarmed: Boolean = isRecordScale(sf) && baseline.isEmpty
+
+    private def disarmedFlag: ListMap[String, Any] =
+      if (guardDisarmed) ListMap("guard_disarmed" -> true) else ListMap()
+
+    /** The full-precision record. Guard retries live in `retries`, so
+      * `reps` still describes every `samples` array; `memo` builds > 1
+      * for a tag means its memoized frame was evicted and rebuilt
+      * mid-suite; `started` plus `samples` place every query on the
+      * wall clock, with `canary_*_ms` as the timeline's endpoints.
+      */
+    def file: ListMap[String, Any] = ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap.from(results),
+      "flaky" -> flaky, "anomalous" -> anomalous) ++ disarmedFlag ++ ListMap(
+      "canary_start" -> ListMap.from(canaryStart),
+      "canary_end" -> ListMap.from(canaryEnd),
+      "full" -> full, "sf" -> sf, "reps" -> reps,
+      "samples" -> ListMap.from(timed.map(t => t.name -> t.runs)),
+      "retries" -> ListMap.from(
+        timed.collect { case t if t.retries.nonEmpty => t.name -> t.retries }),
+      "memo" -> ListMap.from(memo.map { case (tag, (h, b)) =>
+        tag -> ListMap("hits" -> h, "builds" -> b)
+      }),
+      "started" -> ListMap.from(timed.map(t => t.name -> t.startedMs)),
+      "drift" -> ListMap.from(drift.map { case (k, r) => k -> round(r, 2) }),
+      "canary_start_ms" -> canaryStartMs, "canary_end_ms" -> canaryEndMs,
+      "anomaly_context" -> ListMap.from(anomalyCtx.map {
+        case (k, (nb, infl, v)) =>
+          k -> ListMap("neighbors" -> nb, "inflated" -> infl, "verdict" -> v)
+      }),
+      "env" -> ListMap("cpus" -> env.cpus,
+        "shuffle_partitions" -> env.shufflePartitions,
+        "materialize_mode" -> env.materializeMode,
+        "spark_version" -> env.sparkVersion))
+
+    /** The stdout line: counts in place of the per-query maps (the file
+      * under `full` holds them) and 3-dp values, so its size does not
+      * grow with the suite and the whole line fits the trailing window
+      * of output a caller keeps.
+      */
+    def summary: ListMap[String, Any] = {
+      def dp3(xs: Seq[(String, Double)]) =
+        ListMap.from(xs.map { case (k, v) => k -> round(v, 3) })
+      ListMap("metric" -> "total", "value" -> round(total, 3),
+        "unit" -> "sec",
+        "counts" -> ListMap("queries" -> timed.size,
+          "failed" -> results.count(_._2 < 0), "flaky" -> flaky.size,
+          "anomalous" -> anomalous.size)) ++ disarmedFlag ++ ListMap(
+        "canary_start" -> dp3(canaryStart), "canary_end" -> dp3(canaryEnd),
+        "full" -> full, "sf" -> sf, "cpus" -> env.cpus)
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // n>=3 repeats per query, min reported: rounds 5-7 proved a
-    // single-shot bench swings up to 26x on byte-identical code under
-    // host contention (t4 0.56->14.7s with zero src diff). The min of
-    // n runs is the contention-resistant statistic; all samples go to
-    // the JSON file copy so rep-1 warm-up (memo builds, codegen) stays
+    // n>=3 repeats per query, min reported: a single-shot bench swings
+    // up to 26x on byte-identical code under host contention. The min
+    // of n runs is the contention-resistant statistic; all samples go
+    // to the file record so rep-1 warm-up (memo builds, codegen) stays
     // auditable.
     val reps = 3
     val spark = SparkEntry.localSession()
@@ -306,21 +315,20 @@ object Bench {
       try parseBaseline(java.nio.file.Files.readString(
         java.nio.file.Paths.get(p)))
       catch { case _: Throwable => Map.empty }
-    val priorRecord =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut(sfDir))
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      defaultOut(sfDir))
     val baselinePaths = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
       .map(Seq(_)).getOrElse(
         if (isRecordScale(sfDir))
-          Seq(s"$repoRoot/BENCH_BASELINE.json", priorRecord)
-        else Seq(priorRecord))
+          Seq(s"$repoRoot/BENCH_BASELINE.json", outPath)
+        else Seq(outPath))
     val baseline = mergeBaselines(baselinePaths.map(readBaseline))
     // a record-scale run with NO baseline means the outlier guard is
     // disarmed — loud, because every path here is silent by design
     // (tolerant parser, repoRoot from the working directory): a bench
     // launched from the wrong cwd would otherwise write its record
-    // outside the repo and self-certify clean (review finding)
-    val guardDisarmed = isRecordScale(sfDir) && baseline.isEmpty
-    if (guardDisarmed)
+    // outside the repo and self-certify clean
+    if (isRecordScale(sfDir) && baseline.isEmpty)
       System.err.println(
         s"[bench] ERROR no baseline found at ${baselinePaths.mkString(", ")}"
           + " — outlier guard DISARMED; is the working directory the"
@@ -348,24 +356,20 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         if (!failures.contains(name)) failures(name) = e.toString
-        // -1 marks a failed query in the JSON; a thrown query must not
-        // masquerade as a fast success
         -1.0
       }
-      // drop the query's materialize-once pins before the next run —
-      // accumulated checkpoint blocks squeeze execution memory and
-      // made round-3's late dedup queries nondeterministically 10x
-      // slow. Session memos (shared clusters / profile / cleaned
-      // frame) are unregistered pins and deliberately survive.
+      // drop the query's materialize-once pins before the next run:
+      // accumulated pin blocks squeeze execution memory and make late
+      // queries nondeterministically 10x slow. Session memos (shared
+      // clusters / profile / cleaned frame) are unregistered pins and
+      // deliberately survive.
       graft.std.Materialize.releaseAll()
       t
     }
     // Canary bookends: the fixed set runs FIRST (clean-session numbers,
     // before any suite aging) and again LAST (same keys, same
-    // statistic) — a mid-run host step shows as end/start >> 1, which
-    // a start-only canary structurally cannot see (the r17 driver run:
-    // healthy start canary, 44 queries at 2–31x committed). Skipped
-    // under SPARK_GRAFT_ONLY (local iteration).
+    // statistic), so a mid-run host step shows as end/start >> 1.
+    // Skipped under SPARK_GRAFT_ONLY (local iteration).
     val canaryEnabled = !sys.env.contains("SPARK_GRAFT_ONLY")
     def runCanary(label: String): Seq[(String, Double)] =
       if (!canaryEnabled) Nil
@@ -378,8 +382,7 @@ object Bench {
             "— host-speed witness set is incomplete")
         fn.map { f =>
           val runs = (1 to reps).map(_ => oneRun(k, f))
-          val ok = runs.filter(_ >= 0)
-          val m = if (ok.isEmpty) -1.0 else ok.min
+          val m = minOk(runs)
           System.err.println(
             f"[bench] canary($label) $k%-17s min=$m%.3f samples=${
               runs.map(r => f"$r%.3f").mkString(",")}")
@@ -390,65 +393,31 @@ object Bench {
     val canaryStart = runCanary("start")
     // SPARK_GRAFT_ONLY=d2,q1 runs a comma-separated subset (local
     // iteration; SparkEntry.selected holds the shared rule)
-    val measured = SparkEntry.selected.sortBy(_.name).map { q =>
-      val (name, fn) = (q.name, q.run _)
+    val timed = SparkEntry.selected.sortBy(_.name).map { q =>
       val startedMs = System.currentTimeMillis()
-      val runs = (1 to reps).map(_ => oneRun(name, fn))
+      val runs = (1 to reps).map(_ => oneRun(q.name, q.run _))
       // outlier guard: a min-of-reps far above the historical baseline
       // means ALL reps landed in a contended window — re-run (bounded)
       // rather than commit a 55x host artifact as if it were a code
-      // regression. Queries still anomalous after the retries are
-      // flagged in the JSON so the record grades itself.
-      def minOk(rs: Seq[Double]): Double = {
-        val ok = rs.filter(_ >= 0); if (ok.isEmpty) -1.0 else ok.min
-      }
+      // regression
       var retryRuns = Vector.empty[Double]
       while (retryRuns.length < maxRetries &&
-          isAnomalous(minOk(runs ++ retryRuns), baseline.get(name))) {
-        System.err.println(f"[bench] $name retry ${retryRuns.length + 1}:" +
+          isAnomalous(minOk(runs ++ retryRuns), baseline.get(q.name))) {
+        System.err.println(f"[bench] ${q.name} retry ${retryRuns.length + 1}:" +
           f" min=${minOk(runs ++ retryRuns)}%.3f" +
-          f" vs baseline=${baseline(name)}%.3f")
-        retryRuns :+= oneRun(name, fn)
+          f" vs baseline=${baseline(q.name)}%.3f")
+        retryRuns :+= oneRun(q.name, q.run _)
       }
-      // leak telemetry between queries (stderr — the driver's stdout
-      // tail budget is ~2.9 KB): registered pins must be 0 here, and
-      // storage should hold only the session memos, flat across queries
-      System.err.println(f"[bench] $name%-24s samples=${
+      // leak telemetry between queries on stderr (stdout carries only
+      // the summary line): registered pins must be 0 here, and storage
+      // should hold only the session memos, flat across queries
+      System.err.println(f"[bench] ${q.name}%-24s samples=${
         runs.map(r => f"$r%.3f").mkString(",")}${
         if (retryRuns.nonEmpty)
           " retries=" + retryRuns.map(r => f"$r%.3f").mkString(",")
         else ""} pins=${
         graft.std.Materialize.pinCount} storageMB=$storageUsedMb")
-      (name, runs, retryRuns, startedMs)
-    }
-    def allMin(runs: Seq[Double], retries: Seq[Double]): Double = {
-      val ok = (runs ++ retries).filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
-    }
-    val anomalous = measured.collect {
-      case (name, runs, rts, _)
-        if isAnomalous(allMin(runs, rts), baseline.get(name)) => name
-    }
-    val results = measured.map { case (name, runs, rts, _) =>
-      name -> allMin(runs, rts)
-    }
-    // min-of-reps must not mask intermittent failures: a query that
-    // threw in some ORIGINAL reps but succeeded once is flaky. Retry
-    // runs don't count here (r16 advice) — a retry failure stays
-    // visible in the `retries` map without tainting a clean rep set.
-    val flaky = measured.collect {
-      case (name, runs, _, _)
-        if runs.contains(-1.0) && runs.exists(_ >= 0) => name
-    }
-    val retries = measured.collect {
-      case (name, _, rts, _) if rts.nonEmpty => (name, rts.toSeq)
-    }
-    // drift-vs-historical-min per baselined query (see fileJson doc):
-    // the record's own readout of the sub-threshold regime the retry
-    // guard deliberately leaves alone
-    val drift = results.collect {
-      case (name, m) if m >= 0 && baseline.get(name).exists(_ > 0) =>
-        name -> m / baseline(name)
+      Timed(q.name, runs, retryRuns, startedMs)
     }
     // End bookend AFTER the suite, BEFORE the record is written: its
     // divergence from canaryStart is the record's own evidence of
@@ -459,53 +428,26 @@ object Bench {
     // per tag is the expected steady state; builds > 1 means the
     // memoized frame (cleaned star join, cluster resolution,
     // contamination profile, IVF corpora) was evicted and rebuilt
-    // mid-suite — if q1b ever reads 5 s again, the record itself says
-    // whether the star join was rebuilt.
+    // mid-suite.
     val memoStats = graft.std.SessionMemo.counters.toSeq.sortBy(_._1)
     memoStats.foreach { case (tag, (h, b)) =>
       System.err.println(s"[bench] memo $tag hits=$h builds=$b")
     }
-    // stdout gets 3-dp min values: the driver captures only the last
-    // ~2.9 KB of output, and round 4's 76-query full-precision line
-    // (~3.3 KB) overflowed that window — its head was cut and the JSON
-    // never parsed. 3 dp keeps the line under ~2.2 KB; the file copy
-    // keeps full precision plus every sample.
-    // full-precision copy with every sample lands INSIDE the repo so the
-    // round archives it: the driver keeps only the trailing ~2.9 KB of
-    // stdout, which cut 17 of r9's 90 per-query timings off the JSON
-    // tail — the stdout line names this path under "full" so the
-    // complete per-query record is always recoverable.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      defaultOut(sfDir))
-    val samples = measured.map { case (name, runs, _, _) => (name, runs) }
-    val started = measured.map { case (name, _, _, ms) => (name, ms) }
-    // record-time adjudication of each anomalous flag (see
-    // anomalyContext): span = first-rep start + every rep AND retry
-    // duration (retries occupy the wall clock too — the r19
-    // bench_timeline advice applied at the source)
-    val spans = measured.map { case (name, runs, rts, ms) =>
-      val dur = (runs ++ rts).filter(_ >= 0).sum
-      (name, ms, ms + (dur * 1000).toLong)
-    }
-    val anomCtx = anomalyContext(spans, drift.toMap, anomalous)
-    anomCtx.foreach { case (name, (nb, infl, v)) =>
+    val record = Record(timed, baseline, canaryStart, canaryEnd,
+      canaryStartMs, canaryEndMs, memoStats, Env.of(spark), outPath, sfDir,
+      reps)
+    record.anomalyCtx.foreach { case (name, (nb, infl, v)) =>
       System.err.println(
         s"[bench] anomaly $name: $infl/$nb overlapping queries inflated" +
           s" — $v")
     }
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath),
-      fileJson(results, canaryStart, canaryEnd, flaky, anomalous,
-        outPath, sfDir, reps, samples, retries, memoStats, started,
-        drift, canaryStartMs, canaryEndMs, guardDisarmed, anomCtx))
+      java.nio.file.Paths.get(outPath), toJson(record.file))
     catch { case _: Throwable => () }
     val failuresPath = java.nio.file.Paths.get(outPath).toAbsolutePath
       .resolveSibling("failures.json")
     Verify.writeJson(failuresPath.toFile, failures.toMap)
-    println(headJson(results, canaryStart, canaryEnd, flaky, anomalous,
-      outPath, sfDir,
-      v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)),
-      guardDisarmed))
+    println(toJson(record.summary))
     // free the session memos (cleaned star join, clusters, profile)
     // before stop — keeps the pin lifecycle honest end-to-end
     graft.std.SessionMemo.releaseSession(spark)

@@ -1,6 +1,6 @@
 package graft.std
 
-import org.apache.spark.sql.{Column, DataFrame, GraftPins}
+import org.apache.spark.sql.{Column, DataFrame, GraftPins, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Materialize-once barrier for diamond-shaped plans.
@@ -19,8 +19,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   *  - [[pinUnregistered]] builds it, plain or keyed, with one job after
   *    its shuffles into one pinned RDD read through a one-node
-  *    `LogicalRDD` plan ([[org.apache.spark.sql.GraftPins.pin]]). It is
-  *    the one reader of the session conf `spark.graft.materialize.mode`:
+  *    `LogicalRDD` plan ([[org.apache.spark.sql.GraftPins.pin]]), in the
+  *    session's [[mode]], the one reader of the session conf
+  *    `spark.graft.materialize.mode`:
   *    - `local` (default): a local checkpoint — executor-local blocks,
   *      lineage truncated. Fastest on a single-node runner, but a lost
   *      block is unrecoverable, so it is the LOCAL mode.
@@ -82,9 +83,11 @@ object Materialize {
     * the standing side of every lookup join stops re-exchanging.
     */
   def pinUnregistered(df: DataFrame, keys: Column*): DataFrame =
-    GraftPins.pin(df, keys, disk =
-      df.sparkSession.conf.get("spark.graft.materialize.mode", "local") ==
-        "disk")
+    GraftPins.pin(df, keys, disk = mode(df.sparkSession) == "disk")
+
+  /** The session's materialize mode: `local` (default) or `disk`. */
+  def mode(spark: SparkSession): String =
+    spark.conf.get("spark.graft.materialize.mode", "local")
 
   /** Free the blocks a [[pinUnregistered]] frame holds: the pinned RDD
     * at the root of its plan. Pinned frames it was built from are left

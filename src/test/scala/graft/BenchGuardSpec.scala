@@ -1,17 +1,35 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.Bench.{Env, Record, Timed}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The bench outlier guard (r15 verdict #1): three rounds running,
-  * same-code bench records disagreed per-query by up to 55x (x35 0.42
-  * vs 23.04 s) because min-of-3 still loses when every rep lands in a
-  * contended window. The guard compares each query's min against the
-  * prior committed record and re-runs bounded retries; these tests pin
-  * the two pure pieces — the baseline parser over the exact
-  * BENCH_FULL.json layout Bench writes, and the anomaly rule's
-  * boundaries (3x AND +1 s absolute; failures never retried).
+/** The bench outlier guard and its record. Same-code bench records on a
+  * shared host disagree per query by up to 55x (x35 0.42 vs 23.04 s)
+  * because min-of-3 still loses when every rep lands in a contended
+  * window, so each query's min is graded against the historical minimum
+  * and re-run in bounded retries. These tests pin the pure pieces: the
+  * baseline parser over the record Bench writes, the anomaly rule's
+  * boundaries (3x AND +1 s absolute; failures never retried), and the
+  * record's file and stdout forms, read back the way a consumer reads
+  * them (a JSON parser, not substrings).
   */
 class BenchGuardSpec extends AnyFunSuite {
+
+  private val reader = new ObjectMapper()
+  private def tree(json: String): JsonNode = reader.readTree(json)
+
+  /** A record-scale [[Record]] with the defaults a test does not vary. */
+  private def record(timed: Seq[Timed], baseline: Map[String, Double],
+                     canaryStart: Seq[(String, Double)] = Nil,
+                     canaryEnd: Seq[(String, Double)] = Nil,
+                     canaryStartMs: Long = 0L, canaryEndMs: Long = 0L,
+                     memo: Seq[(String, (Long, Long))] = Nil,
+                     full: String = "/x.json",
+                     sf: String = "/root/testdata/sf0.1"): Record =
+    Record(timed, baseline, canaryStart, canaryEnd, canaryStartMs,
+      canaryEndMs, memo, Env(4, 4, "local", "4.1.0"), full, sf, reps = 3)
 
   test("parseBaseline reads the queries object of a BENCH_FULL record") {
     val json = """{"metric":"total","value":204.7,"unit":"sec",""" +
@@ -28,9 +46,11 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.parseBaseline("") === Map.empty)
     assert(Bench.parseBaseline("{\"metric\":\"total\"}") === Map.empty)
     assert(Bench.parseBaseline("not json at all") === Map.empty)
-    // unparseable value drops that key only
-    val b = Bench.parseBaseline("""{"queries":{"a":1.5,"b":oops}}""")
-    assert(b === Map("a" -> 1.5))
+    // a non-numeric value drops that key only
+    assert(Bench.parseBaseline("""{"queries":{"a":1.5,"b":"oops"}}""") ===
+      Map("a" -> 1.5))
+    assert(Bench.parseBaseline("""{"queries":{"a":1.5,"b":null}}""") ===
+      Map("a" -> 1.5))
   }
 
   test("anomaly rule: both 3x and +1s absolute must hold") {
@@ -60,101 +80,168 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.isAnomalous(23.04, Some(-1.0)))
   }
 
-  test("parseBaseline round-trips the REAL fileJson writer output") {
-    // r16 advice: the parser is coupled to the writer's layout; pinning
-    // it against a hand-built string let format drift silently disarm
-    // the guard. This builds a record through the actual writer.
-    val results = Seq("q1_revenue_by_month" -> 0.412,
-      "x35_cdc_apply" -> 0.42, "x58_betweenness" -> 14.22)
-    val json = Bench.fileJson(results,
+  test("parseBaseline round-trips the REAL record writer output") {
+    // the parser is coupled to the writer's layout; pinning it against a
+    // hand-built string would let format drift silently disarm the
+    // guard, so this writes a record through Bench's own writer
+    val timed = Seq(
+      Timed("q1_revenue_by_month", Seq(0.512, 0.412, -1.0), Nil, 1L),
+      Timed("x35_cdc_apply", Seq(0.52, 0.42, -1.0), Nil, 2L),
+      Timed("x58_betweenness", Seq(14.32, 14.22, -1.0), Seq(15.0, -1.0), 3L))
+    val rec = record(timed, baseline = Map("x58_betweenness" -> 4.0),
       canaryStart = Seq("q1_revenue_by_month" -> 0.41),
       canaryEnd = Seq("q1_revenue_by_month" -> 0.83),
-      flaky = Seq("x35_cdc_apply"), anomalous = Seq("x58_betweenness"),
-      outPath = "/x.json", sfDir = "/root/testdata/sf0.1", reps = 3,
-      samples = results.map { case (k, v) => (k, Seq(v + 0.1, v, -1.0)) },
-      retries = Seq("x58_betweenness" -> Seq(15.0, -1.0)),
       memo = Seq("cleaned:/root/testdata/sf0.1" -> ((11L, 1L)),
         "contamination" -> ((4L, 2L))))
-    assert(Bench.parseBaseline(json) === results.toMap)
+    val json = Bench.toJson(rec.file)
+    assert(Bench.parseBaseline(json) === Map("q1_revenue_by_month" -> 0.412,
+      "x35_cdc_apply" -> 0.42, "x58_betweenness" -> 14.22))
+    val t = tree(json)
+    assert(t.path("value").asDouble === 0.412 + 0.42 + 14.22)
     // retries live in their own map: `reps` still describes the samples
     // arrays, and a failed retry rep must not contaminate them
-    assert(json.contains(""""reps":3"""))
-    assert(json.contains(""""retries":{"x58_betweenness":[15.0,-1.0]}"""))
-    assert(json.contains(
-      """"samples":{"q1_revenue_by_month":[0.512,0.412,-1.0]"""))
-    // r17 verdict #1: the record must carry BOTH canary bookends (a
-    // mid-run host step shows as end >> start) and the memo hit/build
-    // counters (builds > 1 = eviction/rebuild mid-suite)
-    assert(json.contains(""""canary_start":{"q1_revenue_by_month":0.41}"""))
-    assert(json.contains(""""canary_end":{"q1_revenue_by_month":0.83}"""))
-    assert(json.contains(
-      """"memo":{"cleaned:/root/testdata/sf0.1":{"hits":11,"builds":1},""" +
+    assert(t.path("reps").asInt === 3)
+    assert(t.path("retries") === tree("""{"x58_betweenness":[15.0,-1.0]}"""))
+    assert(t.path("samples").path("q1_revenue_by_month") ===
+      tree("[0.512,0.412,-1.0]"))
+    // a rep that threw beside one that succeeded is flaky; the guard
+    // flags the query still over its baseline after its retries
+    assert(t.path("flaky") === tree(
+      """["q1_revenue_by_month","x35_cdc_apply","x58_betweenness"]"""))
+    assert(t.path("anomalous") === tree("""["x58_betweenness"]"""))
+    // both canary bookends (a mid-run host step shows as end >> start)
+    // and the memo hit/build counters (builds > 1 = eviction/rebuild)
+    assert(t.path("canary_start") === tree("""{"q1_revenue_by_month":0.41}"""))
+    assert(t.path("canary_end") === tree("""{"q1_revenue_by_month":0.83}"""))
+    assert(t.path("memo") === tree(
+      """{"cleaned:/root/testdata/sf0.1":{"hits":11,"builds":1},""" +
         """"contamination":{"hits":4,"builds":2}}"""))
+    assert(t.path("env") === tree("""{"cpus":4,"shuffle_partitions":4,""" +
+      """"materialize_mode":"local","spark_version":"4.1.0"}"""))
+    // the committed records' top-level keys, in their order, plus env
+    assert(t.fieldNames.asScala.toSeq === Seq("metric", "value", "unit",
+      "queries", "flaky", "anomalous", "canary_start", "canary_end", "full",
+      "sf", "reps", "samples", "retries", "memo", "started", "drift",
+      "canary_start_ms", "canary_end_ms", "anomaly_context", "env"))
   }
 
   test("record carries per-query wall-clock timestamps and drift") {
-    // r18 verdict #1: the driver bench showed 19 queries >1.5x
-    // committed in three CONTIGUOUS execution-order windows with
-    // healthy memo/canary telemetry — transient host slowdown was the
-    // obvious read but unprovable without time coordinates. The record
-    // now carries epoch-millis start per query plus the canary bookend
-    // timestamps, so every anomalous flag is plottable against wall
-    // time; and the drift map prices the sub-retry-threshold regime
-    // (the r18 t24/t27/x68 2x small-query drifts) against the
-    // historical min, so compounding drift is visible record-to-record
-    // without burning retries on sub-second jitter.
-    val json = Bench.fileJson(
-      Seq("q1" -> 0.5, "t24" -> 0.63),
-      canaryStart = Nil, canaryEnd = Nil, flaky = Nil, anomalous = Nil,
-      outPath = "/x.json", sfDir = "/root/testdata/sf0.1", reps = 3,
-      samples = Seq("q1" -> Seq(0.5), "t24" -> Seq(0.63)),
-      retries = Nil, memo = Nil,
-      started = Seq("q1" -> 1755300000123L, "t24" -> 1755300012456L),
-      drift = Seq("q1" -> 1.0, "t24" -> 2.03),
+    // every query's epoch-millis start plus the canary bookend
+    // timestamps place each anomalous flag on the wall clock, and the
+    // drift map prices the sub-retry-threshold regime against the
+    // historical min, so compounding drift is visible record to record
+    // without burning retries on sub-second jitter
+    val rec = record(
+      Seq(Timed("q1", Seq(0.5), Nil, 1755300000123L),
+        Timed("t24", Seq(0.63), Nil, 1755300012456L)),
+      baseline = Map("q1" -> 0.5, "t24" -> 0.31),
       canaryStartMs = 1755299990000L, canaryEndMs = 1755300100000L)
-    assert(json.contains(
-      """"started":{"q1":1755300000123,"t24":1755300012456}"""))
-    assert(json.contains(""""drift":{"q1":1.00,"t24":2.03}"""))
-    assert(json.contains(""""canary_start_ms":1755299990000"""))
-    assert(json.contains(""""canary_end_ms":1755300100000"""))
+    val json = Bench.toJson(rec.file)
+    val t = tree(json)
+    assert(t.path("started") ===
+      tree("""{"q1":1755300000123,"t24":1755300012456}"""))
+    // drift is a number rounded to 2 dp (0.63 / 0.31 = 2.032...)
+    assert(t.path("drift").path("t24").isNumber)
+    assert(t.path("drift").path("t24").asDouble === 2.03)
+    assert(t.path("drift").path("q1").asDouble === 1.0)
+    assert(t.path("canary_start_ms").asLong === 1755299990000L)
+    assert(t.path("canary_end_ms").asLong === 1755300100000L)
     // the extra maps must not confuse the baseline parser
     assert(Bench.parseBaseline(json) === Map("q1" -> 0.5, "t24" -> 0.63))
   }
 
   test("a disarmed guard marks the record, armed runs stay clean") {
-    // review finding: a record-scale run with no baseline printed an
-    // ERROR but still wrote a record self-certifying "zero anomalous";
-    // guard_disarmed:true makes that state machine-readable
-    val disarmed = Bench.headJson(Seq("q1" -> 1.0), Nil, Nil, Nil, Nil,
-      outPath = "/x.json", sfDir = "/root/testdata/sf0.1", _.toString,
-      guardDisarmed = true)
-    assert(disarmed.contains(""""guard_disarmed":true"""))
-    assert(Bench.parseBaseline(disarmed) === Map("q1" -> 1.0))
-    val armed = Bench.headJson(Seq("q1" -> 1.0), Nil, Nil, Nil, Nil,
-      outPath = "/x.json", sfDir = "/root/testdata/sf0.1", _.toString)
-    assert(!armed.contains("guard_disarmed"))
-    // the file copy inherits the flag through the shared head
-    val file = Bench.fileJson(Seq("q1" -> 1.0), Nil, Nil, Nil, Nil,
-      outPath = "/x.json", sfDir = "/root/testdata/sf0.1", reps = 1,
-      samples = Seq("q1" -> Seq(1.0)), retries = Nil,
-      guardDisarmed = true)
-    assert(file.contains(""""guard_disarmed":true"""))
+    // a record-scale run with no baseline self-certifies "zero
+    // anomalous"; guard_disarmed:true makes that state machine-readable
+    val q1 = Seq(Timed("q1", Seq(1.0), Nil, 0L))
+    val disarmed = record(q1, baseline = Map.empty)
+    for (line <- Seq(disarmed.file, disarmed.summary).map(Bench.toJson))
+      assert(tree(line).path("guard_disarmed").asBoolean, line)
+    assert(Bench.parseBaseline(Bench.toJson(disarmed.file)) ===
+      Map("q1" -> 1.0))
+    val armed = record(q1, baseline = Map("q1" -> 1.0))
+    val offScale = record(q1, baseline = Map.empty,
+      sf = "/root/testdata/sf0.01")
+    for (r <- Seq(armed, offScale);
+         line <- Seq(r.file, r.summary).map(Bench.toJson))
+      assert(tree(line).path("guard_disarmed").isMissingNode, line)
   }
 
-  test("jstr escapes quotes, backslashes, and control characters") {
-    // r17 advice: a quote/backslash in SPARK_GRAFT_BENCH_OUT produced
-    // invalid JSON, and the tolerant parser silently disarmed the next
-    // run's guard; now such a path round-trips as a valid literal
-    assert(Bench.jstr("plain") === "\"plain\"")
-    assert(Bench.jstr("a\"b") === "\"a\\\"b\"")
-    assert(Bench.jstr("a\\b") === "\"a\\\\b\"")
-    assert(Bench.jstr("a\nb") === "\"a\\u000ab\"")
-    // a record head built with a hostile path still parses: the
-    // queries object is intact and the guard stays armed
-    val json = Bench.headJson(Seq("q1" -> 1.0), Nil, Nil, Nil, Nil,
-      outPath = "/tmp/we\"ird\\path.json", sfDir = "/root/testdata/sf0.1",
-      _.toString)
-    assert(Bench.parseBaseline(json) === Map("q1" -> 1.0))
+  test("a record whose full holds a quote, backslash and newline is one " +
+    "line that parses, and its guard stays armed") {
+    // a quote or backslash in SPARK_GRAFT_BENCH_OUT must not produce
+    // invalid JSON: the tolerant parser would silently disarm the next
+    // run's guard, and a newline would split the one-line stdout record
+    val path = "/tmp/we\"ird\\pa\nth.json"
+    val rec = record(Seq(Timed("q1", Seq(1.0), Nil, 0L)),
+      baseline = Map("q1" -> 1.0), full = path)
+    for (line <- Seq(rec.file, rec.summary).map(Bench.toJson)) {
+      assert(!line.contains('\n'), line)
+      assert(tree(line).path("full").asText === path)
+      assert(tree(line).path("guard_disarmed").isMissingNode)
+    }
+    assert(Bench.parseBaseline(Bench.toJson(rec.file)) === Map("q1" -> 1.0))
+  }
+
+  test("the stdout summary of a 263-query record fits 1,000 bytes; the " +
+    "file keeps every query") {
+    // the caller keeps only the trailing ~2,000 characters of output,
+    // and a line carrying every query's value outgrew it: the summary
+    // holds counts, the file under `full` holds the per-query maps
+    val names = SparkEntry.registry.map(_.name).take(263)
+    assert(names.size === 263)
+    val timed = names.zipWithIndex.map { case (n, i) =>
+      Timed(n, Seq(12.345678901, 11.234567891, if (i == 0) -1.0 else 10.5),
+        Nil, 1755300000000L + i)
+    }
+    val canary = Bench.canaryKeys.map(_ -> 123.456789)
+    val rec = record(timed,
+      baseline = names.map(_ -> 10.0).toMap + (names(1) -> 1.0),
+      canaryStart = canary, canaryEnd = canary,
+      full = s"${Bench.repoRoot}/BENCH_FULL.json")
+    val line = Bench.toJson(rec.summary)
+    val bytes = line.getBytes("UTF-8").length
+    assert(bytes <= 1000, s"summary line is $bytes bytes: $line")
+    val s = tree(line)
+    assert(s.path("counts") === tree(
+      """{"queries":263,"failed":0,"flaky":1,"anomalous":1}"""))
+    assert(s.path("value").asDouble === BigDecimal(rec.total)
+      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    assert(s.path("canary_end").size === 4)
+    assert(s.path("cpus").asInt === 4)
+    for (k <- Seq("queries", "samples", "started", "drift"))
+      assert(s.path(k).isMissingNode, k)
+    val f = tree(Bench.toJson(rec.file))
+    assert(f.path("queries").size === 263)
+    assert(f.path("samples").size === 263)
+    assert(f.path("full").asText === s.path("full").asText)
+  }
+
+  test("parseBaseline reads the committed BENCH_FULL.json and " +
+    "BENCH_BASELINE.json") {
+    // the same 263-key maps the substring scanner this parser replaced
+    // read from both files; rewriting either record moves these pins
+    def read(f: String) = Bench.parseBaseline(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(Bench.repoRoot, f)))
+    val full = read("BENCH_FULL.json")
+    assert(full.size === 263)
+    assert(full("q1_revenue_by_month") === 0.165613781)
+    assert(full("t4_lang_id") === 0.634701138)
+    assert(full("x58_betweenness") === 12.899706173)
+    val base = read("BENCH_BASELINE.json")
+    assert(base.size === 263)
+    assert(base("q1_revenue_by_month") === 0.117160649)
+    assert(base("t4_lang_id") === 0.416482335)
+    assert(base("x58_betweenness") === 6.992261394)
+  }
+
+  test("Env reads the session's cores, partitions, materialize mode and " +
+    "Spark version") {
+    val spark = SparkTestSession.spark
+    assert(Env.of(spark) === Env(4, 4, "local", spark.version))
+    spark.conf.set("spark.graft.materialize.mode", "disk")
+    try assert(Env.of(spark).materializeMode === "disk")
+    finally spark.conf.unset("spark.graft.materialize.mode")
   }
 
   test("record paths derive from the repo root, not a literal") {

@@ -6,7 +6,8 @@ Usage: python3 tools/check_oracle.py /tmp/verify_out /root/testdata/sf0.01
 For each query dir under outDir: load the Spark parquet result, run the
 oracle SQL from oracle_sql.json in DuckDB (tables = views over the sf
 parquet), sort columns by name and rows by all columns, and compare
-row count, column names, and values.
+row count, column names, and values. Each OK/FAIL line carries the
+key's wall seconds, so the slow oracles are visible.
 
 The compare is deliberately STRICTER than it looks, because the r10
 round taught us the driver's hash is sensitive to two things a naive
@@ -23,7 +24,7 @@ float compare forgives:
      DECIMAL oracle output columns are therefore a FAIL here, not a
      warning: CAST them (see t47/x20 in ExtOracleSql.scala).
 """
-import sys, json, math, glob
+import sys, json, math, glob, time
 import duckdb
 
 outdir, sfdir = sys.argv[1], sys.argv[2]
@@ -49,8 +50,12 @@ def canon(cols, rows):
     rows2 = sorted(tuple(norm(r[i]) for i in order) for r in rows)
     return cols2, rows2
 
+def secs(t0):
+    return f"[{time.monotonic() - t0:.2f} s]"
+
 fails = 0
 for name in sorted(oracle):
+    t0 = time.monotonic()
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
@@ -61,12 +66,12 @@ for name in sorted(oracle):
         otypes = dict(zip(ocols, [d[1] for d in cur.description]))
         orows = cur.fetchall()
     except Exception as e:
-        print(f"FAIL {name}: oracle error: {e}")
+        print(f"FAIL {name} {secs(t0)}: oracle error: {e}")
         fails += 1
         continue
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
-        print(f"FAIL {name}: no spark output")
+        print(f"FAIL {name} {secs(t0)}: no spark output")
         fails += 1
         continue
     cur = con.execute(f"SELECT * FROM read_parquet({files!r})")
@@ -83,23 +88,23 @@ for name in sorted(oracle):
     badtypes = {c: str(t) for c, t in zip(rel.columns, rel.types)
                 if str(t) == "HUGEINT" or str(t).startswith("DECIMAL")}
     if badtypes:
-        print(f"FAIL {name}: oracle output type needs CAST: {badtypes}")
+        print(f"FAIL {name} {secs(t0)}: oracle output type needs CAST: {badtypes}")
         fails += 1
         con.close()
         continue
     oc, orw = canon(ocols, orows)
     sc, srw = canon(scols, srows)
     if sc != oc:
-        print(f"FAIL {name}: schema spark={sc} oracle={oc}")
+        print(f"FAIL {name} {secs(t0)}: schema spark={sc} oracle={oc}")
         fails += 1
     elif len(srw) != len(orw):
-        print(f"FAIL {name}: rows spark={len(srw)} oracle={len(orw)}")
+        print(f"FAIL {name} {secs(t0)}: rows spark={len(srw)} oracle={len(orw)}")
         fails += 1
     elif srw != orw:
         bad = [(a, b) for a, b in zip(srw, orw) if a != b][:3]
-        print(f"FAIL {name}: values differ; first diffs (spark vs oracle): {bad}")
+        print(f"FAIL {name} {secs(t0)}: values differ; first diffs (spark vs oracle): {bad}")
         fails += 1
     else:
-        print(f"OK   {name} ({len(srw)} rows)")
+        print(f"OK   {name} {secs(t0)} ({len(srw)} rows)")
     con.close()
 sys.exit(1 if fails else 0)
