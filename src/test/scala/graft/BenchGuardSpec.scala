@@ -167,11 +167,18 @@ class BenchGuardSpec extends AnyFunSuite {
       assert(tree(line).path("guard_disarmed").isMissingNode, line)
   }
 
-  test("a record whose full holds a quote, backslash and newline is one " +
-    "line that parses, and its guard stays armed") {
-    // a quote or backslash in SPARK_GRAFT_BENCH_OUT must not produce
-    // invalid JSON: the tolerant parser would silently disarm the next
-    // run's guard, and a newline would split the one-line stdout record
+  test("jstr escapes quotes, backslashes, and control characters") {
+    // every string of the record is written as a JSON string literal
+    // (jstr) by Bench.toJson
+    assert(Bench.toJson("plain") === "\"plain\"")
+    assert(Bench.toJson("a\"b") === "\"a\\\"b\"")
+    assert(Bench.toJson("a\\b") === "\"a\\\\b\"")
+    assert(Bench.toJson("a\nb") === "\"a\\nb\"")
+    assert(Bench.toJson("a\u0001b") === "\"a\\u0001b\"")
+    // a record whose full holds a quote, backslash and newline is one
+    // line that parses, and its guard stays armed: invalid JSON would
+    // make the tolerant parser silently disarm the next run's guard, and
+    // a newline would split the one-line stdout record
     val path = "/tmp/we\"ird\\pa\nth.json"
     val rec = record(Seq(Timed("q1", Seq(1.0), Nil, 0L)),
       baseline = Map("q1" -> 1.0), full = path)
